@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -162,6 +164,13 @@ object Bench {
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
+    // Janino compiles inside the timed phase, as deltas of Spark's own
+    // counters. Each one is a class the codegen cache did not hold: the
+    // registry's working set outgrew the cache, or a query's generated
+    // code differs on every call. Its seconds are inside the timings.
+    def codegen(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val codegen0 = codegen()
     val p1 = timedPass()
     val p2 = timedPass()
     val base = p1.map { case (k, v1) =>
@@ -184,7 +193,10 @@ object Bench {
       try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case _: Throwable => -1.0 }
     }
+    val codegen1 = codegen()
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
+    val codegenJson = s"{\"compiles\":${codegen1._1 - codegen0._1}," +
+      s"\"compile_s\":${r3((codegen1._2 - codegen0._2) / 1e9)}}"
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
@@ -224,7 +236,7 @@ object Bench {
         s"\"" + k + s"\":${r3(w)}"
     }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","survey69_total":${r3(survey69)},"streaming_total":${r3(streamingTotal)},"loadavg":$loadJson,"cold_memos":$coldMemos,"failed":$failedJson,"rescued":$rescuedJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","survey69_total":${r3(survey69)},"streaming_total":${r3(streamingTotal)},"loadavg":$loadJson,"cold_memos":$coldMemos,"codegen":$codegenJson,"failed":$failedJson,"rescued":$rescuedJson,"queries":$qs,"sf":"$sfDir"}"""
     // The driver keeps only the last ~2000 chars of stdout; the full
     // per-query map (~2.5 KB for 89 queries) overflows that window and the
     // driver then sees a mid-object fragment (BENCH_r01/r02: parsed=null).
