@@ -1,4 +1,7 @@
 package graft
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -111,6 +114,28 @@ object Bench {
     (out, rescued.toMap)
   }
 
+  /** Runs one query. A non-fatal failure is printed to stderr as
+    * `[bench] <name> failed: <Class>: <first line>`, that cause is kept in
+    * `failures` (the first one per query), and the result is None. Fatal
+    * errors and interrupts are not caught.
+    */
+  private[graft] def attempt[T](name: String,
+      failures: scala.collection.mutable.Map[String, String])(body: => T): Option[T] =
+    try Some(body)
+    catch {
+      case NonFatal(e) =>
+        val c = e.getClass.getName + ": " + Option(e.getMessage)
+          .flatMap(_.linesIterator.map(_.trim).find(_.nonEmpty)).getOrElse("")
+        System.err.println(s"[bench] $name failed: $c")
+        if (!failures.contains(name)) failures(name) = c
+        None
+    }
+
+  /** `failures` as one JSON object, sorted by query name. */
+  private[graft] def failuresJson(failures: scala.collection.Map[String, String]): String =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(new java.util.TreeMap[String, String](failures.asJava))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -142,7 +167,7 @@ object Bench {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")),
         java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
     val load0 = loadavg()
     Tables.cacheAll(spark, sfDir)
     // The warmup pass is also the MEMO-WARMER: trained-structure queries
@@ -151,9 +176,10 @@ object Bench {
     // below measure steady-state query cost. Per-query warmup seconds
     // are kept so a cold rebuild is REPORTED (cold_memos) instead of
     // read as a regression when an arbiter compares fresh-host runs.
+    val failures = scala.collection.mutable.Map.empty[String, String]
     val warmSecs: Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      attempt(name, failures)(fn(spark, sfDir).count())
       name -> (System.nanoTime() - t0) / 1e9
     }
     val load1 = loadavg()
@@ -161,7 +187,7 @@ object Bench {
     // carry ±0.3 s GC/scheduler noise that would drown real regressions.
     def timedPass(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = attempt(name, failures)(fn(spark, sfDir).count()).isDefined
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     // Janino compiles inside the timed phase, as deltas of Spark's own
@@ -190,8 +216,8 @@ object Bench {
       rescueArmed, 120L * 1000000000L) { k =>
       val fn = SparkEntry.queries(k)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      attempt(k, failures)(fn(spark, sfDir).count())
+        .fold(-1.0)(_ => (System.nanoTime() - t0) / 1e9)
     }
     val codegen1 = codegen()
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
@@ -236,7 +262,7 @@ object Bench {
         s"\"" + k + s"\":${r3(w)}"
     }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","survey69_total":${r3(survey69)},"streaming_total":${r3(streamingTotal)},"loadavg":$loadJson,"cold_memos":$coldMemos,"codegen":$codegenJson,"failed":$failedJson,"rescued":$rescuedJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","survey69_total":${r3(survey69)},"streaming_total":${r3(streamingTotal)},"loadavg":$loadJson,"cold_memos":$coldMemos,"codegen":$codegenJson,"failed":$failedJson,"failures":${failuresJson(failures)},"rescued":$rescuedJson,"queries":$qs,"sf":"$sfDir"}"""
     // The driver keeps only the last ~2000 chars of stdout; the full
     // per-query map (~2.5 KB for 89 queries) overflows that window and the
     // driver then sees a mid-object fragment (BENCH_r01/r02: parsed=null).

@@ -2493,24 +2493,22 @@ object ExtraSql {
         |       string_agg(CAST(id AS VARCHAR), ',' ORDER BY pos) AS ids
         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
-    // CSV round-trip (sources.Feeds.sourceCsv): the engine materializes
-    // nation as ONE headered CSV at this fixed per-SF path before
-    // querying it, so the oracle reads the very same file. The path is
-    // keyed to sf0.01 — the SF the driver's correctness gate runs at.
+    // CSV round-trip (sources.Feeds.sourceCsv): the engine writes nation
+    // as ONE headered CSV and aggregates what it reads back. Like ORC, the
+    // oracle states the same aggregation over the ORIGINAL nation table, so
+    // a corrupt CSV write or read surfaces as a value mismatch, at any SF.
     "source_csv" ->
       """SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name,
         |       CAST(SUM(n_nationkey) AS BIGINT) AS sum_key
-        |FROM read_csv('/tmp/graft_source_feed/sf0.01/nation.csv', header=true,
-        |  columns={'n_nationkey':'INTEGER','n_name':'VARCHAR','n_regionkey':'INTEGER'})
+        |FROM nation
         |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
 
-    // JSON-lines round-trip (sources.Feeds.sourceJson), same contract.
+    // JSON-lines round-trip (sources.Feeds.sourceJson), same contract over
+    // the ORIGINAL supplier table.
     "source_json" ->
       """SELECT s_nationkey, COUNT(*) AS n_suppliers, MIN(s_name) AS first_name,
         |       CAST(SUM(s_suppkey) AS BIGINT) AS sum_key
-        |FROM read_json('/tmp/graft_source_feed/sf0.01/supplier.json',
-        |  format='newline_delimited',
-        |  columns={'s_suppkey':'BIGINT','s_name':'VARCHAR','s_nationkey':'INTEGER'})
+        |FROM supplier
         |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
 
     // ORC round-trip (sources.Feeds.sourceOrc): DuckDB has no ORC reader,

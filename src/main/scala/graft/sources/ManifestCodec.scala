@@ -278,8 +278,18 @@ private[graft] object ManifestCodec {
   }
 
   // one parsed template per JVM; per-file copies are cheap and isolated
-  // (each reader sets its own requested-projection key)
-  private lazy val confTemplate = new Configuration()
+  // (each reader sets its own requested-projection key). It takes the
+  // launch profile's `spark.hadoop.*` settings, as Spark's own Hadoop conf
+  // does: Hadoop caches one `file:` FileSystem per JVM, and a codec write
+  // that came first would otherwise fix it to the stock class for every
+  // caller (graft.util.NioLocalFs).
+  private lazy val confTemplate = {
+    val c = new Configuration()
+    sys.props.foreach { case (k, v) =>
+      if (k.startsWith("spark.hadoop.")) c.set(k.stripPrefix("spark.hadoop."), v)
+    }
+    c
+  }
   private[sources] def hadoopConf(): Configuration = new Configuration(confTemplate)
 
   // ---- writing ------------------------------------------------------

@@ -36,7 +36,7 @@ object ZoneMaps {
       .select("path").as[String]
     paths.mapPartitions { it =>
       import scala.jdk.CollectionConverters._
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = ManifestCodec.hadoopConf()
       it.map { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new org.apache.hadoop.fs.Path(p), conf)
