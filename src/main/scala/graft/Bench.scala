@@ -3,7 +3,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main (driver contract): times every SparkEntry query on
@@ -115,18 +114,19 @@ object Bench {
   }
 
   /** Runs one query. A non-fatal failure is printed to stderr as
-    * `[bench] <name> failed: <Class>: <first line>`, that cause is kept in
+    * `[<tag>] <name> failed: <Class>: <first line>`, that cause is kept in
     * `failures` (the first one per query), and the result is None. Fatal
     * errors and interrupts are not caught.
     */
   private[graft] def attempt[T](name: String,
-      failures: scala.collection.mutable.Map[String, String])(body: => T): Option[T] =
+      failures: scala.collection.mutable.Map[String, String],
+      tag: String = "bench")(body: => T): Option[T] =
     try Some(body)
     catch {
       case NonFatal(e) =>
         val c = e.getClass.getName + ": " + Option(e.getMessage)
           .flatMap(_.linesIterator.map(_.trim).find(_.nonEmpty)).getOrElse("")
-        System.err.println(s"[bench] $name failed: $c")
+        System.err.println(s"[$tag] $name failed: $c")
         if (!failures.contains(name)) failures(name) = c
         None
     }
@@ -138,26 +138,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE's extra per-stage re-planning is pure overhead at micro-benchmark
-    // scale (its wins — shuffle coalescing, skew splits — need real data
-    // volumes). Re-measured round 5 with 4 A/B pairs at sf0.1: AQE-off
-    // medians ~24.6 s all-query vs ~25.6 s on (run noise ±2 s); the
-    // round-1 call stands. Overridable so cluster-scale runs keep it on.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", aqe)
-      // on from the start so SPJ-query plans are order-independent; only
-      // opt-in reportPartitioning scans are affected (Feeds.ensureSpjConf)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = util.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // host-state telemetry (round-14 verdict nit): the arbiter reads
     // co-tenant load straight from the JSON instead of inferring it from

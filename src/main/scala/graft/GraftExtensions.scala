@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession, SparkSessionExtensions}
 
 /** SparkSessionExtensions entry point: enables
   * `--conf spark.sql.extensions=graft.GraftExtensions` so SQL users get
   * the engine's native functions (`graft_dot`, …) without touching Scala.
-  * Sessions created programmatically can call
-  * [[graft.functions.VectorExpressions.register]] instead — the operator
-  * implementations do so on first use.
+  * [[graft.util.GraftSession]] sets it. A session created without it gets
+  * the functions and the as-of strategy from [[GraftExtensions.install]]
+  * when it first reaches [[Tables]], and every [[graft.util.Sessions]]
+  * clone gets them on creation.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -25,5 +26,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL UPDATE on the manifest store → bounded read-modify-write
     // through the same one-version merge commit
     ext.injectPostHocResolutionRule(s => plans.ManifestUpdateRule(s))
+  }
+}
+
+object GraftExtensions {
+
+  /** Registers the graft_* functions and the as-of planner strategy on a
+    * running session: the runtime half of the extension, for sessions
+    * built without it. Idempotent. Called where sessions enter the engine,
+    * [[Tables.sessionMemo]] and [[graft.util.Sessions.forContext]], so no
+    * operator registers anything itself.
+    */
+  def install(spark: SparkSession): Unit = {
+    functions.VectorExpressions.register(spark)
+    GraftPlanBridge.addStrategy(spark, plans.AsOfStrategy)
   }
 }

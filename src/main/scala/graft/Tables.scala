@@ -31,8 +31,12 @@ final case class Tables(spark: SparkSession, sfDir: String) {
   /** All table names the contract queries touch. */
   def allNames: Seq[String] = Tables.names
 
+  // looked up on construction, so a session gets graft's functions
+  // (GraftExtensions.install) before any query is built on it
+  private[this] val memo = Tables.sessionMemo(spark)
+
   def table(name: String): DataFrame =
-    Tables.sessionMemo(spark).getOrElseUpdate((sfDir, name), load(name))
+    memo.getOrElseUpdate((sfDir, name), load(name))
 
   private def load(name: String): DataFrame = {
     // Session-level invariants every query relies on, settable at runtime.
@@ -86,6 +90,8 @@ object Tables {
     * the analyzed plans they hold) become collectible when the session is
     * dropped — no leak in a long-running JVM and no identity-hash
     * collisions handing out DataFrames bound to a stopped session.
+    * Every registry query enters through here, so a session seen for the
+    * first time gets [[GraftExtensions.install]].
     */
   private val memoBySession =
     new java.util.WeakHashMap[SparkSession, TrieMap[(String, String), DataFrame]]()
@@ -94,6 +100,7 @@ object Tables {
     memoBySession.synchronized {
       var m = memoBySession.get(spark)
       if (m == null) {
+        GraftExtensions.install(spark)
         m = TrieMap.empty[(String, String), DataFrame]
         memoBySession.put(spark, m)
       }

@@ -1,37 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs on Bench's
+  * session profile ([[util.GraftSession]]), so the checked plans are the
+  * timed ones. A failing query prints `[verify] <name> failed: <Class>:
+  * <first line>` on stderr ([[Bench.attempt]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // Driver contract: exactly (sfDir, outDir). Any FURTHER args are a
     // local-iteration convenience: restrict the dump to the named queries.
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // on from the start so SPJ-query plans are order-independent; only
-      // opt-in reportPartitioning scans are affected (Feeds.ensureSpjConf)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = util.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failures = scala.collection.mutable.Map.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Bench.attempt(name, failures, "verify") {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

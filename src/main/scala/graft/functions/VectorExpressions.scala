@@ -256,10 +256,9 @@ object VectorExpressions {
     NfcExpression.entry,
     NfkcCfExpression.entry) ++ SketchExpressions.entries
 
-  /** Runtime registration for an already-created session (the driver
-    * creates its own sessions, so config-time `spark.sql.extensions`
-    * injection — [[graft.GraftExtensions]] — isn't always available).
-    * Idempotent.
+  /** Runtime registration for an already-created session, for sessions
+    * built without the config-time `spark.sql.extensions` injection.
+    * Idempotent. Called only by [[graft.GraftExtensions.install]].
     */
   def register(spark: SparkSession): Unit = {
     val registry: FunctionRegistry = spark.sessionState.functionRegistry

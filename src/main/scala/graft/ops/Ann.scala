@@ -50,7 +50,6 @@ object Ann {
 
   /** (vec_id, e, nrm) — one row per vector. */
   def vectorsWithNorm(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val e = transform(col("embedding"), x => x.cast(DoubleType))
     t.embeddings
       .select(col("vec_id"), e.as("e"))
@@ -139,7 +138,6 @@ object Ann {
   def hyperplaneCandidates(vecs: DataFrame, bitsPerBand: Int = DedupBandBits): DataFrame = {
     require(bitsPerBand >= 1 && bitsPerBand <= MaxDedupBandBits,
       s"bitsPerBand must be in [1, $MaxDedupBandBits], got $bitsPerBand")
-    graft.functions.VectorExpressions.register(vecs.sparkSession)
     // Same self-join sharing point as Dedup.minhashCandidates: one
     // Exchange on the band join keys, the single-pass native signature
     // computed once, the band join's shuffle pre-satisfied.

@@ -432,7 +432,6 @@ object AnnIndex {
   private[graft] def serveOver(
       t: Tables, idx: IndexFrames, v: DataFrame,
       probeLimit: Int, k: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val quant = broadcast(idx.centroids.select(col("cell_id"), col("c_e"),
       sqrt(Vector.dot(col("c_e"), col("c_e"))).as("c_nrm")))
     val probes = v.filter(col("vec_id") < probeLimit)

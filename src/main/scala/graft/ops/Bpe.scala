@@ -151,7 +151,6 @@ object Bpe {
       array(rs.flatMap(ru => Seq(lit(ru.l), lit(ru.r))): _*))
 
   private def withSeg(df: DataFrame, rs: Seq[Rule], wordCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     df.withColumn("seg", segCol(col(wordCol), rs))
   }
 
@@ -228,7 +227,6 @@ object Bpe {
     */
   def tokenizeBpeIds(t: Tables): DataFrame = {
     val rs = rules(t)
-    graft.functions.VectorExpressions.register(t.spark)
     val syms = symbolIds(t).toSeq.sortBy(_._2).map(_._1) // dense-id order
     val ruleArr =
       if (rs.isEmpty) typedlit(Seq.empty[String]) // degenerate corpus

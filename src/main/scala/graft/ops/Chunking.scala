@@ -84,7 +84,6 @@ object Chunking {
     * md5 + length are computed in the same projection).
     */
   def chunkCdc(t: Tables, w: Int = 8, div: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     t.documents.filter(col("text").isNotNull)
       .select(col("doc_id"),
         posexplode(expr(s"graft_cdc_chunks(text, $w, $div)"))

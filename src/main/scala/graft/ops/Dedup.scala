@@ -55,7 +55,6 @@ object Dedup {
     // size()/array consumers. (Signature paths are unaffected either way:
     // graft_minhash returns a NULL signature for BOTH null and empty
     // shingle arrays, so no-shingle docs drop out identically.)
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       coalesce(call_function("graft_kgrams", col("text"), lit(n)),
         typedlit(Seq.empty[String])).as("shingles"))
@@ -77,7 +76,6 @@ object Dedup {
     * bit-identical on the real corpus.
     */
   def minhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val slots = (0 until NumPerms).map(i => col("sig").getItem(i).as(s"m$i"))
     shingleArray(docs)
       // explode(array(e)) is the evaluate-ONCE barrier: the 32 slot
@@ -145,7 +143,6 @@ object Dedup {
     * generation and the exact measure use the same shingle features.
     */
   def dedupMinhashLsh(t: Tables, minJaccard: Double = 0.5): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     // Distinct shingle SETS built map-side (array_distinct over the
     // per-doc array) — the collect_set-over-explode formulation shuffled
     // every (doc_id, shingle) pair for the same result. No emptiness
@@ -182,7 +179,6 @@ object Dedup {
     * DedupSpec proves bit-identical on the real corpus).
     */
   def simhashSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     docs
       .withColumn("toks", expr("filter(split(text, ' '), x -> x <> '')"))
       .filter(size(col("toks")) > 0)

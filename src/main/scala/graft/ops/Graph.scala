@@ -219,7 +219,6 @@ object Graph {
     * LSH candidate pairs into the same [[connectedComponents]].
     */
   private[graft] def jaccardEdges(t: Tables, tau: Double, lim: Int): (DataFrame, DataFrame) = {
-    graft.functions.VectorExpressions.register(t.spark)
     val sets = TextAnalysis.probeTokenSets(t, lim)
     val a = sets.select(col("doc_id").as("a_id"), col("s").as("a_s"))
     val b = sets.select(col("doc_id").as("b_id"), col("s").as("b_s"))
@@ -548,7 +547,6 @@ object Graph {
     * per corpus: exact-blocked below cos ~0.8, this above.
     */
   def dedupSemanticAnn(t: Tables, tau: Double = 0.8): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val v = Ann.vectorsWithNorm(t)
     val cands = Ann.hyperplaneCandidates(v.select(col("vec_id"), col("e")))
     val a = v.select(col("vec_id").as("a_id"), col("e").as("a_e"), col("nrm").as("a_nrm"))

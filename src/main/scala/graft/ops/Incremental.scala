@@ -153,7 +153,6 @@ object IncrementalDedup {
     */
   private def rerankCandidates(
       t: Tables, cands: DataFrame, minJaccard: Double): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val sets = Dedup.shingleArray(t.documents)
       .select(col("doc_id"), array_distinct(col("shingles")).as("s"))
       .repartition(col("doc_id"))
@@ -178,7 +177,6 @@ object IncrementalDedup {
     * IncrementalSpec asserts result equality.
     */
   def incrementalDedupBucketed(t: Tables, minJaccard: Double = 0.5): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val spark = t.spark
     // The table name and path carry a digest of the FULL sfDir + dataset
     // stamp, not just the directory basename: two datasets that share a

@@ -111,7 +111,6 @@ object Ivf {
     * without retraining).
     */
   private[ops] def trainedCells(t: Tables): Array[(Int, Seq[Double])] = {
-    graft.functions.VectorExpressions.register(t.spark)
     val key = s"${t.sfDir}#$NumCells#${datasetStamp(t.sfDir)}"
     trained.computeIfAbsent(key, _ => train(t, NumCells))
   }

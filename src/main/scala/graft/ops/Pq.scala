@@ -172,7 +172,6 @@ object Pq {
     * serves without retraining).
     */
   private[ops] def trainedEntries(t: Tables): Array[(Int, Int, Seq[Double])] = {
-    graft.functions.VectorExpressions.register(t.spark)
     val key = s"${t.sfDir}#$NumSub#$KSub#${graft.util.DatasetStamp.stamp(t.sfDir, "embeddings")}"
     trained.computeIfAbsent(key, _ => train(t))
   }

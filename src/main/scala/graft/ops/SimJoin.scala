@@ -52,7 +52,6 @@ object SimJoin {
     * test seam for synthetic corpora.
     */
   def simJaccardJoinOf(sets: DataFrame, tau: Double): DataFrame = {
-    graft.functions.VectorExpressions.register(sets.sparkSession)
     val base = sets.filter(size(col("s")) > 0)
       .select(col("doc_id"), col("s"), size(col("s")).as("sz"))
       .repartition(col("doc_id")) // sharing point: one Exchange feeds the
@@ -143,7 +142,6 @@ object SimJoin {
     * (p_partkey % 997 = 0).
     */
   def simJaroWinkler(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val probes = t.part.filter(col("p_partkey") % 997 === 0)
       .select(col("p_partkey").as("probe_id"), col("p_brand").as("brand"),
         col("p_name").as("probe_name"))

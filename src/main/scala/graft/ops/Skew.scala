@@ -72,43 +72,29 @@ object Skew {
     * proving AQE fired is SkewAqeSpec's job: the executed SMJ carries
     * `skew=true` and the result equals the plain-join oracle).
     */
-  // tuned clone memoized per SparkContext (the StreamDrive.driveSession
-  // pattern): Bench/Verify invoke the query repeatedly, and an un-memoized
-  // newSession would pay SessionState construction + cold table scans on
-  // every call while every other query measures warm
-  private val skewSessionMemo =
-    new java.util.HashMap[org.apache.spark.SparkContext, org.apache.spark.sql.SparkSession]()
-
-  def joinSkewAqe(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    val ss = skewSessionMemo.synchronized {
-      skewSessionMemo.entrySet().removeIf(e => e.getKey.isStopped)
-      var m = skewSessionMemo.get(spark.sparkContext)
-      if (m == null) { m = tunedClone(spark); skewSessionMemo.put(spark.sparkContext, m) }
-      m
-    }
-    buildSkewJoin(ss, sfDir)
-  }
-
-  private def tunedClone(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.adaptive.enabled", "true")
-    ss.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-    ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "512b")
-    ss.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512b")
-    // the join's output partitioning would satisfy the downstream
-    // aggregation, so an un-forced AQE declines the split (it would add
-    // a shuffle); forcing is the documented trade — pay one extra
-    // exchange of AGGREGATED rows to break the straggler task. At
-    // 100 TB that trade is almost always right: the extra shuffle moves
-    // group-grain partials, the straggler holds raw fact rows.
-    ss.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    // the split only helps when the join SHUFFLES; at test SF the dim
-    // would otherwise broadcast and there'd be nothing to prove
-    ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    ss.conf.set("spark.sql.session.timeZone", "UTC")
-    ss
-  }
+  // tuned clone memoized per SparkContext: Bench/Verify invoke the query
+  // repeatedly, and an un-memoized newSession would pay SessionState
+  // construction + cold table scans on every call while every other query
+  // measures warm
+  def joinSkewAqe(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
+    buildSkewJoin(graft.util.Sessions.forContext(spark, "skew") { ss =>
+      ss.conf.set("spark.sql.adaptive.enabled", "true")
+      ss.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+      ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
+      ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "512b")
+      ss.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512b")
+      // the join's output partitioning would satisfy the downstream
+      // aggregation, so an un-forced AQE declines the split (it would add
+      // a shuffle); forcing is the documented trade — pay one extra
+      // exchange of AGGREGATED rows to break the straggler task. At
+      // 100 TB that trade is almost always right: the extra shuffle moves
+      // group-grain partials, the straggler holds raw fact rows.
+      ss.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+      // the split only helps when the join SHUFFLES; at test SF the dim
+      // would otherwise broadcast and there'd be nothing to prove
+      ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      ss.conf.set("spark.sql.session.timeZone", "UTC")
+    }, sfDir)
 
   private def buildSkewJoin(ss: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val t = graft.Tables(ss, sfDir)

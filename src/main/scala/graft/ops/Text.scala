@@ -133,7 +133,6 @@ object Text {
     * candidate pairs into this same exact re-rank).
     */
   def simJaccard(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val toks = tokens(t.documents.filter(col("doc_id") < 30))
       .groupBy("doc_id")
       .agg(collect_set(col("token")).as("s"))
@@ -189,7 +188,6 @@ object Text {
     * map-side, one expression pass per row, stays in whole-stage codegen.
     */
   def textNormalize(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     // DECOMPOSED on purpose: e+U+0301, i+U+0308 — NFC composes both
     val raw = concat(col("text"), lit(" cafe\u0301 nai\u0308ve\tx  y"))
     val norm = trim(regexp_replace(regexp_replace(
@@ -219,7 +217,6 @@ object Text {
     * aggregation, identical to `dedup_exact`'s.
     */
   def textNormalizeNfkc(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val base = t.documents.filter(col("doc_id") < 2000 && col("text").isNotNull)
     val va = base.select(col("doc_id"),
       concat(col("text"), lit(" ﬁle ＳＰＡＲＫ ㎅")).as("text"))

@@ -251,7 +251,6 @@ object TextAnalysis {
     * on doc_id / (doc_id, bigram) keys.
     */
   def textRepetition(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val bg = t.documents
       .select(col("doc_id"), explode(kgrams(col("text"), 2)).as("bg"))
     val bgStats = bg
@@ -364,7 +363,6 @@ object TextAnalysis {
       .filter(col("shingle").isNotNull)
       .groupBy("doc_id")
       .agg(collect_set(col("shingle")).as("s"))
-    graft.functions.VectorExpressions.register(t.spark)
     val a = shingles.select(col("doc_id").as("a_id"), col("s").as("a_s"))
     val b = shingles.select(col("doc_id").as("b_id"), col("s").as("b_s"))
     a.join(b, col("a_id") < col("b_id"))
@@ -413,8 +411,8 @@ object TextAnalysis {
   }
 
   /** All word k-grams of `text` as one map-side expression — the native
-    * single-pass [[graft.functions.KGrams]] (callers must have run
-    * `VectorExpressions.register`; every op here does). Map-side and
+    * single-pass [[graft.functions.KGrams]] (`graft_kgrams`, registered by
+    * [[graft.GraftExtensions]]). Map-side and
     * shuffle-free, so gram extraction stays embarrassingly parallel at any
     * scale. Docs shorter than k yield an empty array.
     *
@@ -446,7 +444,6 @@ object TextAnalysis {
     * corpus size except the one gram-keyed exchange.
     */
   def ngramTopk(t: Tables, k: Int = 3, topN: Int = 25): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     t.documents
       .select(explode(kgrams(col("text"), k)).as("gram"))
       .groupBy("gram")
@@ -591,7 +588,6 @@ object TextAnalysis {
     * shuffle the bottleneck.
     */
   def decontaminate(t: Tables, k: Int = 5): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val isEval = substring(md5(col("doc_id").cast("string")), 1, 1).isin("e", "f")
     val grams = t.documents
       .select(col("doc_id"), isEval.as("is_eval"),
@@ -634,7 +630,6 @@ object TextAnalysis {
     * duplicated fraction is undefined, not zero).
     */
   def textDupSpans(t: Tables, k: Int = 8): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     textDupSpansOf(t.documents, k)
   }
 

@@ -75,7 +75,6 @@ object Tokenize {
     * pinned by TokenizeSpec and the DuckDB hash oracle.
     */
   def tokenizeIds(t: Tables, maxVocab: Int = 500): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val syms = vocabTokens(t, maxVocab) // dense-id order, id = index + 1
     val symArr =
       if (syms.isEmpty) typedlit(Seq.empty[String])

@@ -190,7 +190,6 @@ object Unigram {
     * Equality with the join form is pinned by UnigramSpec.
     */
   def tokenizeUnigramIds(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     val model = modelLiteral(t)
     val syms = train(t).scores.keys.toSeq.sorted // dense id = index
     val symArr =

@@ -27,8 +27,8 @@ object Vector {
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
 
-  /** Native codegen'd dot product (requires
-    * [[graft.functions.VectorExpressions.register]], done by [[vectors]]).
+  /** Native codegen'd dot product (`graft_dot`, registered by
+    * [[graft.GraftExtensions]]).
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
@@ -36,7 +36,6 @@ object Vector {
 
   /** vec_id, e (double array), nrm. */
   private def vectors(t: Tables): DataFrame = {
-    graft.functions.VectorExpressions.register(t.spark)
     t.embeddings.select(
       col("vec_id"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("e"),

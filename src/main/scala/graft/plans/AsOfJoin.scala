@@ -237,7 +237,6 @@ object AsOf {
       rightTieBreak: Option[String] = None,
       direction: String = "backward"): DataFrame = {
     val spark: SparkSession = left.sparkSession
-    GraftPlanBridge.addStrategy(spark, AsOfStrategy)
     import org.apache.spark.sql.functions.col
     val lPlan = left.filter(col(leftKey).isNotNull && col(leftTsCol).isNotNull)
       .queryExecution.analyzed

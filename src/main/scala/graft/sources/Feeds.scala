@@ -1084,7 +1084,6 @@ object Feeds {
       emb.write.format("graft.sources.ManifestTable")
         .option("path", dest.toString).mode("append").save()
     }
-    graft.functions.VectorExpressions.register(spark)
     val t = spark.read.format("graft.sources.ManifestTable")
       .option("path", dest.toString).load()
     val v = t.select(col("vec_id"),

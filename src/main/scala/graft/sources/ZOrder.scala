@@ -75,7 +75,6 @@ object ZOrder {
       if (stats.isNullAt(2 * j) || stats.isNullAt(2 * j + 1)) lit(0L)
       else scale(col(c), stats.getDouble(2 * j), stats.getDouble(2 * j + 1), bits)
     }
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val z = interleaveNative(scaled, bits)
     df.withColumn("__graft_z", z)
       .repartitionByRange(numFiles, col("__graft_z"))

@@ -2,16 +2,18 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Registry
+import graft.util.GraftSession
 
-/** Dumps the executed (AQE-final) physical plans of representative
-  * queries to PLANS.md — the plan-shape evidence (pushdown, pruning,
+/** Dumps the executed physical plans of registry queries, taken under the
+  * engine's session profile ([[GraftSession]]) on uncached tables, as
+  * Verify runs them. With no query names it writes the representative set
+  * below to PLANS.md: the plan-shape evidence (pushdown, pruning,
   * broadcasts, partial aggregation, codegen spans, custom operators)
-  * reviewable without running anything.
+  * reviewable without running anything. Named queries give the before and
+  * after plans of one change.
   *
-  * Usage: sbt "runMain graft.tools.PlanDump [sfDir] [outFile]"
+  * Usage: sbt "runMain graft.tools.PlanDump [sfDir] [outFile] [query ...]"
   */
 object PlanDump {
 
@@ -72,24 +74,25 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val why = representative.toMap
+    val names = if (args.length > 2) args.drop(2).toSeq else representative.map(_._1)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     try {
+      def conf(k: String) = spark.conf.get(k)
       val sb = new StringBuilder
       sb.append("# PLANS — executed physical plans of representative operators\n\n")
-      sb.append(s"Generated by `graft.tools.PlanDump` on `$sfDir` (AQE-final plans,\n")
-      sb.append("local[8]). Regenerate from the repo root:\n")
+      sb.append(s"Generated by `graft.tools.PlanDump` on `$sfDir` under the engine's\n")
+      sb.append(s"session profile (`graft.util.GraftSession`: ${spark.sparkContext.master},\n")
+      sb.append(s"shuffle partitions ${conf("spark.sql.shuffle.partitions")}, ")
+      sb.append(s"AQE ${conf("spark.sql.adaptive.enabled")}, storage-partitioned joins on,\n")
+      sb.append("graft.GraftExtensions), tables uncached. Regenerate from the repo root:\n")
       sb.append("`sbt \"runMain graft.tools.PlanDump\"` (output path is cwd-relative).\n")
-      representative.foreach { case (name, why) =>
+      names.foreach { name =>
         val df = Registry.all(name)(spark, sfDir)
-        df.collect() // finalize AQE
-        sb.append(s"\n## $name — $why\n\n```\n")
+        df.collect() // finalize AQE, when it is on
+        sb.append(s"\n## $name${why.get(name).fold("")(" — " + _)}\n\n```\n")
         sb.append(df.queryExecution.executedPlan.toString().trim)
         sb.append("\n```\n")
       }

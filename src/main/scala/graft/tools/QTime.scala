@@ -1,26 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{Registry, Tables}
+import graft.util.GraftSession
 
 /** Ad-hoc single-query timer: `runMain graft.tools.QTime q1 q2 ...` times
-  * the named Registry queries on SPARK_GRAFT_SF_DIR with Bench's exact
-  * session settings (cache + warmup + min-of-2), for iterating on one
+  * the named Registry queries on SPARK_GRAFT_SF_DIR as Bench does
+  * ([[GraftSession]], cached tables, warmup, min-of-2), for iterating on one
   * operator without paying for the whole bench.
   */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     Tables.cacheAll(spark, sfDir)
     args.foreach { name =>

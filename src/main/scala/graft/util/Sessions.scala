@@ -6,8 +6,9 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** Memoized configured session clones, one per (SparkContext, key) — the
-  * single home of a pattern that had grown three copies (StreamDrive's
-  * drive sessions, Cbo's stats session, RuntimeFilters' bloom session).
+  * single home of a pattern that had grown four copies (StreamDrive's
+  * drive sessions, Cbo's stats session, RuntimeFilters' bloom session,
+  * Skew's AQE session).
   *
   * `newSession()` is cheap but its LAZY SessionState is not — first use
   * rebuilds analyzer/optimizer/catalog (~0.2 s), so repeated callers
@@ -30,7 +31,9 @@ object Sessions {
     new java.util.HashMap[SparkContext, TrieMap[String, SparkSession]]()
 
   /** The memoized clone for `key` under this session's context,
-    * `configure`d exactly once at creation. Callers namespace their keys
+    * `configure`d exactly once at creation, then given graft's functions
+    * and strategy ([[graft.GraftExtensions.install]]: `newSession()` does
+    * not copy runtime registrations). Callers namespace their keys
     * (e.g. "drive|2|rocksdb", "cbo", "bloom") — one flat map per context.
     */
   def forContext(spark: SparkSession, key: String)(
@@ -47,6 +50,7 @@ object Sessions {
     perCtx.getOrElseUpdate(key, {
       val ss = spark.newSession()
       configure(ss)
+      graft.GraftExtensions.install(ss)
       ss
     })
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.SparkStrategy
 
 /** Minimal bridge into Spark's private[sql] surface, needed to expose a
   * custom LogicalPlan as a user-facing DataFrame and to inject a planner
-  * strategy at runtime (graft.plans.AsOfJoinPlan). Kept to exactly these
+  * strategy at runtime (graft.GraftExtensions.install). Kept to exactly these
   * two calls — everything else in the engine goes through public API.
   */
 object GraftPlanBridge {
@@ -14,10 +14,15 @@ object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 
-  /** Idempotently add a planner strategy to an existing session. */
+  /** Idempotently add a planner strategy to an existing session: nothing
+    * is added when its planner already has the strategy, from an extension
+    * or an earlier call, so a session built with the extension does not
+    * run it twice per plan node.
+    */
   def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[CSparkSession].experimental
-    if (!exp.extraStrategies.contains(strategy)) {
+    val session = spark.asInstanceOf[CSparkSession]
+    if (!session.sessionState.planner.strategies.contains(strategy)) {
+      val exp = session.experimental
       exp.extraStrategies = exp.extraStrategies :+ strategy
     }
   }

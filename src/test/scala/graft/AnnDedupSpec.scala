@@ -38,7 +38,6 @@ class AnnDedupSpec extends AnyFunSuite with SparkSessionFixture {
 
   /** Exact all-pairs cosine over the planted corpus (7k pairs — fine). */
   private lazy val exactPairs: Seq[(Long, Long, Double)] = {
-    graft.functions.VectorExpressions.register(spark)
     val v = planted.select(col("vec_id"), col("e"),
       sqrt(call_function("graft_dot", col("e"), col("e"))).as("nrm"))
     val a = v.select(col("vec_id").as("a_id"), col("e").as("a_e"), col("nrm").as("a_nrm"))
@@ -77,7 +76,6 @@ class AnnDedupSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("pipeline equivalence on planted corpus: ANN clusters == exact clusters at τ=0.85") {
-    graft.functions.VectorExpressions.register(spark)
     val nodes = planted.select(col("vec_id").as("node"))
     def clustersOf(edges: DataFrame): Map[Long, Long] =
       Graph.connectedComponents(edges, nodes)

@@ -192,7 +192,6 @@ class BehaviorSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("text_dup_spans: cross-doc spans count, intra-doc repetition does not") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     def toks(p: String, r: Range) = r.map(i => s"$p$i").mkString(" ")
     val docs = Seq(
       // doc 0 and doc 1 share exactly one 8-gram window (a1..a8)

@@ -6,10 +6,10 @@ import scala.collection.mutable
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench reports why a query failed and lets fatal errors through: a
-  * non-fatal failure becomes a `[bench]` line on stderr and an entry of
-  * `bench_full.json`'s `failures`; an `OutOfMemoryError` or an interrupt
-  * is not swallowed.
+/** Bench and Verify report why a query failed and let fatal errors
+  * through: a non-fatal failure becomes a `[bench]` (or `[verify]`) line
+  * on stderr and an entry of `bench_full.json`'s `failures`; an
+  * `OutOfMemoryError` or an interrupt is not swallowed.
   */
 class BenchFailureSpec extends AnyFunSuite with SparkSessionFixture {
 
@@ -22,16 +22,19 @@ class BenchFailureSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("a query that throws is reported with its cause") {
-    val failures = mutable.Map.empty[String, String]
-    val (result, err) = stderrOf(Bench.attempt("planted_failure", failures) {
-      // a filter, so that count() cannot prune the failing expression
-      spark.range(3).where("assert_true(id < 0, 'planted failure') IS NULL").count()
-    })
-    assert(result.isEmpty)
-    val c = failures("planted_failure")
-    assert(c.contains("planted failure"), c)
-    assert(!c.contains("\n"), c)
-    assert(err.contains(s"[bench] planted_failure failed: $c"), err)
+    // Bench's tag is the default; Verify reports through the same call
+    for (tag <- Seq("bench", "verify")) {
+      val failures = mutable.Map.empty[String, String]
+      val (result, err) = stderrOf(Bench.attempt("planted_failure", failures, tag) {
+        // a filter, so that count() cannot prune the failing expression
+        spark.range(3).where("assert_true(id < 0, 'planted failure') IS NULL").count()
+      })
+      assert(result.isEmpty)
+      val c = failures("planted_failure")
+      assert(c.contains("planted failure"), c)
+      assert(!c.contains("\n"), c)
+      assert(err.contains(s"[$tag] planted_failure failed: $c"), err)
+    }
   }
 
   test("the first cause per query is kept and rendered as JSON") {

@@ -81,7 +81,6 @@ class BpeSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("fused graft_bpe_seg == Catalyst fold chain, corpus + adversarial words") {
-    graft.functions.VectorExpressions.register(spark)
     val rs = Bpe.rules(t)
     // corpus words plus adversarial shapes: empty, single char, cascading
     // same-symbol runs, supplementary-plane codepoints, a literal space
@@ -123,7 +122,6 @@ class BpeSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("map-side graft_bpe_ids == legacy distinct-words join form, row for row") {
-    graft.functions.VectorExpressions.register(spark)
     val rs = Bpe.rules(t)
     // the r15 shape: encode DISTINCT words, join piece ids back to the
     // positional token stream, reassemble per document

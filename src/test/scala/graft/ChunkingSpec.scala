@@ -81,7 +81,6 @@ class ChunkingSpec extends AnyFunSuite with SparkSessionFixture {
   // -------------------------------------------- content-defined chunking
 
   private def cdcOf(text: String): Seq[String] = {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     Seq(text).toDF("text")
       .select(expr("graft_cdc_chunks(text, 8, 64)").as("c"))
@@ -89,7 +88,6 @@ class ChunkingSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("cdc chunks reassemble to the original text on the whole corpus") {
-    graft.functions.VectorExpressions.register(spark)
     val bad = t.documents.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"),
         concat_ws("", expr("graft_cdc_chunks(text, 8, 64)")).as("re"))
@@ -116,7 +114,6 @@ class ChunkingSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("cdc edge cases: null, empty, short-of-window, unicode codepoints") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val got = Seq((1L, Some("")), (2L, Some("abc")), (3L, None))
       .toDF("doc_id", "text")
@@ -133,7 +130,6 @@ class ChunkingSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("dedup_cdc finds insertion-shifted duplicate mass that fixed windows miss") {
     // two docs: B = A with one char prepended — dup mass must be nonzero
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val base = t.documents.filter(length(col("text")) > 200)
       .orderBy("doc_id").select("text").head().getString(0)

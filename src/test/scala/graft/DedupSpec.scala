@@ -81,7 +81,6 @@ class DedupSpec extends AnyFunSuite with SparkSessionFixture {
     // signature from EITHER function. A real-looking 0L simhash would
     // band-collide all empty docs with each other (and with any signature
     // whose band happens to be 0).
-    graft.functions.VectorExpressions.register(spark)
     val r = spark.sql(
       """SELECT graft_simhash(cast(array() AS array<string>)) AS s0,
         |       graft_minhash(cast(array() AS array<string>)) AS m0,

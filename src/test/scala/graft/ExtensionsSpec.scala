@@ -34,8 +34,9 @@ class ExtensionsSpec extends AnyFunSuite with SparkSessionFixture {
           |       graft_jaccard(array('a'), array('a', 'b')) AS j""".stripMargin).head
       assert(r.getDouble(0) == 11.0)
       assert(r.getDouble(1) == 0.5)
-      // Planner strategy available without AsOf.asofJoin's runtime
-      // registration: build the logical node directly.
+      // Planner strategy from the extension alone (the install that
+      // Tables runs adds none to a planner that has it): build the
+      // logical node directly.
       val t = Tables(s2, "/root/testdata/sf0.001")
       val p = t.events.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"))

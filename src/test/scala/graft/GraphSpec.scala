@@ -210,7 +210,6 @@ class GraphSpec extends AnyFunSuite with SparkSessionFixture {
     val sets = TextAnalysis.probeTokenSets(t, 100)
     val a = sets.select(col("doc_id").as("a_id"), col("s").as("a_s"))
     val b = sets.select(col("doc_id").as("b_id"), col("s").as("b_s"))
-    graft.functions.VectorExpressions.register(spark)
     val m = a.join(b, col("a_id") < col("b_id"))
       .filter(call_function("graft_jaccard", col("a_s"), col("b_s")) >= 0.95).count()
     assert(degSum === 2 * m, s"degree sum $degSum vs edges $m")

@@ -38,7 +38,6 @@ class IncrementalSpec extends AnyFunSuite with SparkSessionFixture {
       val got = ops.IncrementalDedup.incrementalDedup(t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-      graft.functions.VectorExpressions.register(spark)
       val sets = Dedup.shingleArray(t.documents)
         .select(col("doc_id"), array_distinct(col("shingles")).as("s"))
       // Raw-value threshold then round — the oracle's (and SimJoin's)

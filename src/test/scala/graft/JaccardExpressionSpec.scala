@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class JaccardExpressionSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("graft_jaccard == builtin intersect/union formulation on real token sets") {
-    graft.functions.VectorExpressions.register(spark)
     val t = Tables(spark, "/root/testdata/sf0.001")
     val sets = graft.ops.Text.tokens(t.documents.filter(col("doc_id") < 60))
       .groupBy("doc_id").agg(collect_set(col("token")).as("s"))
@@ -27,7 +26,6 @@ class JaccardExpressionSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("graft_jaccard edge cases: null, empty, disjoint, identical") {
-    graft.functions.VectorExpressions.register(spark)
     val rows = spark.sql(
       """SELECT graft_jaccard(a, b) AS j FROM VALUES
         |  (array('x','y'), array('x','y')),

@@ -49,7 +49,6 @@ class JaroWinklerSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("expression path: codegen'd column evaluation matches the kernel") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val got = Seq(("martha", "marhta"), ("dixon", "dicksonx"), ("", "x"))
       .toDF("a", "b")
       .select(expr("graft_jaro_winkler(a, b)").as("jw"))

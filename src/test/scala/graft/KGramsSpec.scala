@@ -13,7 +13,6 @@ import graft.ops.TextAnalysis
 class KGramsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("native graft_kgrams ≡ HOF formulation on the corpus (k = 3 and 5)") {
-    graft.functions.VectorExpressions.register(spark)
     val t = Tables(spark, "/root/testdata/sf0.001")
     for (k <- Seq(3, 5)) {
       val diff = t.documents.select(
@@ -27,7 +26,6 @@ class KGramsSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("edge shapes: empty, single token, doubled spaces, exact-k, null") {
-    graft.functions.VectorExpressions.register(spark)
     val rows = spark.sql(
       """SELECT graft_kgrams('', 3) AS empty,
         |       graft_kgrams('one', 3) AS short,

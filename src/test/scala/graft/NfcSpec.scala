@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class NfcSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("graft_nfc composes decomposed sequences, passes composed/ASCII, keeps NULL") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val df = Seq(
       ("café", "café"),        // decomposed -> composed
@@ -30,7 +29,6 @@ class NfcSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("graft_nfkc_cf folds compatibility forms and case to a fixpoint") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val df = Seq(
       ("ﬁle", "file"),                 // fi ligature (U+FB01)

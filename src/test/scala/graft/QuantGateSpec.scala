@@ -52,7 +52,6 @@ class QuantGateSpec extends AnyFunSuite with SparkSessionFixture {
       .withColumn("q", expr("transform(e, x -> CAST(round(x * 127.0 / mx) AS TINYINT))"))
       .withColumn("nrm", sqrt(Vector.dotHof(col("e"), col("e"))))
       .withColumn("l1", expr("aggregate(q, 0L, (s, x) -> s + abs(CAST(x AS BIGINT)))"))
-    graft.functions.VectorExpressions.register(spark)
     val a = v.select(col("vec_id").as("a_id"), col("q").as("a_q"), (col("mx") / 127.0).as("a_s"), col("nrm").as("a_n"), col("l1").as("a_l1"))
     val b = v.select(col("vec_id").as("b_id"), col("q").as("b_q"), (col("mx") / 127.0).as("b_s"), col("nrm").as("b_n"), col("l1").as("b_l1"))
     val survivors = a.join(b, col("a_id") < col("b_id"))

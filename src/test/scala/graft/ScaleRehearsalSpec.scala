@@ -126,7 +126,6 @@ class ScaleRehearsalSpec extends AnyFunSuite with SparkSessionFixture {
 
   /** bits ∝ log₂ n: the documented hyperplane sizing. */
   private def annPipeline(t: Tables, bits: Int): Long = {
-    graft.functions.VectorExpressions.register(spark)
     val v = Ann.vectorsWithNorm(t)
     val a = v.select(col("vec_id").as("a_id"), col("e").as("a_e"), col("nrm").as("a_nrm"))
     val b = v.select(col("vec_id").as("b_id"), col("e").as("b_e"), col("nrm").as("b_nrm"))

@@ -16,7 +16,6 @@ class SimJoinSpec extends AnyFunSuite with SparkSessionFixture {
     * (125k pairs at sf0.001 — fine for a spec).
     */
   private def brute(tau: Double): Set[(Long, Long, Double)] = {
-    graft.functions.VectorExpressions.register(spark)
     val sets = Dedup.shingleArray(t.documents)
       .select(col("doc_id"), array_distinct(col("shingles")).as("s"))
       .filter(size(col("s")) > 0)

@@ -2,21 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole forked test JVM. */
+/** One shared local SparkSession for the whole forked test JVM, on the
+  * engine's session profile ([[util.GraftSession]]). */
 trait SparkSessionFixture {
   lazy val spark: SparkSession = SparkSessionFixture.session
 }
 
 object SparkSessionFixture {
-  lazy val session: SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  lazy val session: SparkSession = util.GraftSession()
 }

@@ -38,7 +38,6 @@ class UnigramSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("segmentation concatenates back to the word on the whole corpus") {
-    graft.functions.VectorExpressions.register(spark)
     val model = Unigram.modelLiteral(t)
     val bad = ops.Text.tokens(t.documents)
       .select(col("token")).distinct()
@@ -106,7 +105,6 @@ class UnigramSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("map-side graft_uniseg_ids == legacy distinct-words join form, row for row") {
-    graft.functions.VectorExpressions.register(spark)
     val spark2 = spark
     import spark2.implicits._
     val model = Unigram.modelLiteral(t)
@@ -156,7 +154,6 @@ class UnigramSpec extends AnyFunSuite with SparkSessionFixture {
     // the emoji is OOV: it must come through as ONE intact piece
     assert(seg.exists(_ == "😀"), seg.mkString("|"))
     // and the distributed expression agrees (UTF8String round trip safe)
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val got = Seq(w).toDF("word")
       .select(call_function("graft_uniseg", col("word"),
@@ -166,7 +163,6 @@ class UnigramSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("driver and executor segmentations agree") {
-    graft.functions.VectorExpressions.register(spark)
     val model = Unigram.modelLiteral(t)
     val parsed = UnisegHelper.parse(model)
     val rows = ops.Text.tokens(t.documents)

@@ -14,7 +14,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("graft_dot matches HOF fold bit-exactly on real embeddings") {
     val t = Tables(spark, "/root/testdata/sf0.001")
-    graft.functions.VectorExpressions.register(spark)
     val e = transform(col("embedding"), x => x.cast(DoubleType))
     val diff = t.embeddings
       .select(Vector.dot(e, e).as("native"), Vector.dotHof(e, e).as("hof"))
@@ -24,7 +23,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("graft_dot null propagation and cross-vector values") {
-    graft.functions.VectorExpressions.register(spark)
     val df = spark.sql(
       """SELECT graft_dot(CAST(a AS ARRAY<DOUBLE>), CAST(b AS ARRAY<DOUBLE>)) AS d,
         |       aggregate(zip_with(CAST(a AS ARRAY<DOUBLE>), CAST(b AS ARRAY<DOUBLE>),
@@ -44,7 +42,6 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("graft_hplanes equals the literal-tree signature build bit for bit") {
     val t = Tables(spark, "/root/testdata/sf0.001")
-    graft.functions.VectorExpressions.register(spark)
     val e = transform(col("embedding"), x => x.cast(DoubleType)).as("e")
     val base = t.embeddings.select(col("vec_id"), e)
 

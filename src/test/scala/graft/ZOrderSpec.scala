@@ -40,7 +40,6 @@ class ZOrderSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("native graft_morton == composed interleave, including nulls and SQL") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(2000)((
       rnd.nextLong().abs % (1L << 20),
