@@ -12,7 +12,6 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
     val spark = util.GraftSession()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.Map.empty[String, String]
     SparkEntry.queries

@@ -41,23 +41,38 @@ object UnisegHelper {
     sb.toString
   }
 
-  // the model literal is identical for every row of a query; parse once
-  private val parsed =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  def parse(model: String): Model = {
+    val lines = model.split("\n", -1)
+    val scores = new java.util.HashMap[String, java.lang.Long](lines.length * 2)
+    var i = 1
+    while (i < lines.length) {
+      val t = lines(i).lastIndexOf('\t')
+      scores.put(lines(i).substring(0, t),
+        java.lang.Long.valueOf(lines(i).substring(t + 1).toLong))
+      i += 1
+    }
+    new Model(scores, lines(0).toInt)
+  }
 
-  def parse(model: String): Model =
-    parsed.computeIfAbsent(model, { m =>
-      val lines = m.split("\n", -1)
-      val scores = new java.util.HashMap[String, java.lang.Long](lines.length * 2)
-      var i = 1
-      while (i < lines.length) {
-        val t = lines(i).lastIndexOf('\t')
-        scores.put(lines(i).substring(0, t),
-          java.lang.Long.valueOf(lines(i).substring(t + 1).toLong))
-        i += 1
-      }
-      new Model(scores, lines(0).toInt)
-    })
+  /** Per-thread cache keyed on the argument INSTANCE: the model and vocab
+    * arguments are foldable, so every row of a partition hands the same
+    * literal object and reference equality hits after the first row (a
+    * miss merely re-parses; correctness never depends on the hit).
+    */
+  private[functions] final class Cache {
+    var modelRef: AnyRef = null
+    var model: Model = null
+    var symsRef: AnyRef = null
+    var symIds: java.util.HashMap[String, java.lang.Long] = null
+  }
+  private[functions] val cache: ThreadLocal[Cache] = ThreadLocal.withInitial(() => new Cache)
+
+  /** The parsed `model` literal, parsed once per thread and literal. */
+  private[functions] def parsed(model: UTF8String): Model = {
+    val c = cache.get()
+    if (!(c.modelRef eq model)) { c.model = parse(model.toString); c.modelRef = model }
+    c.model
+  }
 
   /** Argmax segmentation of `word` under the model: maximize the summed
     * micro-nat score; ties broken by FEWER pieces, then by the scan
@@ -129,7 +144,7 @@ object UnisegHelper {
   }
 
   def segmentUtf(word: UTF8String, model: UTF8String): ArrayData = {
-    val pieces = segment(word.toString, parse(model.toString))
+    val pieces = segment(word.toString, parsed(model))
     val out = new Array[Any](pieces.length)
     var i = 0
     while (i < pieces.length) { out(i) = UTF8String.fromString(pieces(i)); i += 1 }
@@ -141,7 +156,7 @@ object UnisegHelper {
   * under a unigram piece-score model (the SentencePiece decode rule).
   * `model` is a FOLDABLE string literal (rendered by
   * [[UnisegHelper.render]]): the trained model rides the plan as a
-  * constant, is parsed once per executor, and the per-row work is the
+  * constant, is parsed once per task thread, and the per-row work is the
   * O(len·maxLen) DP — no join against a vocabulary table, no HOF
   * inlining. NULL word → NULL.
   */
@@ -191,20 +206,10 @@ object UnisegExpression {
   */
 object UnisegIdsHelper {
 
-  /** Per-thread vocab cache keyed on the ArrayData INSTANCE — the vocab
-    * argument is foldable, so every row of a partition hands the same
-    * literal object and reference equality hits after the first row (a
-    * miss merely re-parses; correctness never depends on the hit).
-    */
-  private final class Cache {
-    var symsRef: AnyRef = null
-    var symIds: java.util.HashMap[String, java.lang.Long] = null
-  }
-  private val tl: ThreadLocal[Cache] = ThreadLocal.withInitial(() => new Cache)
-
+  /** The vocab as piece → dense id, cached like [[UnisegHelper.parsed]]. */
   private def symbolIds(
       syms: ArrayData): java.util.HashMap[String, java.lang.Long] = {
-    val c = tl.get()
+    val c = UnisegHelper.cache.get()
     if (c.symsRef eq syms) return c.symIds
     val m = new java.util.HashMap[String, java.lang.Long](syms.numElements() * 2)
     var i = 0
@@ -218,7 +223,7 @@ object UnisegIdsHelper {
 
   def encode(text: UTF8String, model: UTF8String, syms: ArrayData): InternalRow = {
     val s = text.toString
-    val m = UnisegHelper.parse(model.toString)
+    val m = UnisegHelper.parsed(model)
     val ids = symbolIds(syms)
     val sb = new java.lang.StringBuilder(s.length * 2)
     var pieces = 0L

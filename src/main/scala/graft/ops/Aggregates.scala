@@ -314,7 +314,7 @@ object Aggregates {
             col("event_id").cast("string"), lit(", vc="), col("vc").cast("string"))))
           .otherwise(col("vc") * KeyScale + col("event_id")).as("skey"))
     val (ranked, n) = Windows.globalRank(c, "skey",
-      memoKey = s"histed:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "events")}")
+      memo = graft.util.Memo.Key("hist_equidepth_rank", t.sfDir, "events"))
     ranked
       .select(col("vc"),
         expr(s"CAST(((rk - 1) * $buckets) DIV $n AS INT)").as("bucket"))
@@ -462,8 +462,7 @@ object Aggregates {
         lit("abc_analysis key packing out of range: widen the shift")), lit(true)))
       .withColumn("nkey", -(col("rev_tenth_cents") * shift) + col("partkey"))
     val (ranked, _, totRev) = Windows.globalRankCum(keyed, "nkey",
-      "rev_tenth_cents", memoKey =
-        s"abc:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "lineitem")}")
+      "rev_tenth_cents", memo = graft.util.Memo.Key("abc_rank", t.sfDir, "lineitem"))
     ranked
       .withColumn("tot", lit(totRev))
       .select(
@@ -501,8 +500,8 @@ object Aggregates {
           col("cents") < Long.MaxValue / shift,
         lit("agg_gini key packing out of range: widen the shift")), lit(true)))
       .withColumn("key", col("cents") * shift + col("custkey"))
-    val (ranked, n) = Windows.globalRank(spend, "key", memoKey =
-      s"gini:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "orders")}")
+    val (ranked, n) = Windows.globalRank(spend, "key",
+      memo = graft.util.Memo.Key("gini_rank", t.sfDir, "orders"))
     ranked
       .select(sum(col("rk") * col("cents")).as("ws"),
         sum(col("cents")).as("s"))

@@ -611,12 +611,12 @@ object Behavior {
           .cast(LongType) * shift + col("custkey"))
       .withColumn("f_key", col("freq") * shift + col("custkey"))
       .withColumn("m_key", col("mon_cents") * shift + col("custkey"))
-    // rank stats memoized per dataset stamp (the range-statistics-memo
-    // discipline): the three metrics' cut points + counts are table
-    // statistics of the orders aggregate, not per-invocation work
+    // rank stats memoized (the range-statistics-memo discipline): the
+    // three metrics' cut points + counts are table statistics of the
+    // orders aggregate, not per-invocation work
     def score(df: DataFrame, key: String, out: String): DataFrame = {
-      val (ranked, n) = Windows.globalRank(df, key, memoKey =
-        s"rfm:$key:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "orders")}")
+      val (ranked, n) = Windows.globalRank(df, key,
+        memo = graft.util.Memo.Key("rfm_rank", t.sfDir, "orders").and(key))
       ranked.withColumn(out, expr(s"((rk - 1) * 5) div $n + 1").cast(IntegerType))
         .drop("rk")
     }

@@ -39,13 +39,6 @@ object Bpe {
 
   final case class Rule(rank: Int, l: String, r: String, cnt: Long)
 
-  /** Trained merge rules, memoized under the documents dataset stamp
-    * (same driver-state class as the IVF/PQ codebooks: a handful of
-    * rows, rebuilt only when the dataset changes).
-    */
-  private val ruleMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Rule]]
-
   private def wordTypes(t: Tables): DataFrame =
     Text.tokens(t.documents)
       .groupBy(col("token").as("word"))
@@ -90,11 +83,11 @@ object Bpe {
       p => p.getField("r").isNotNull)
   }
 
-  /** Train the merge-rule sequence for `t`'s documents corpus. */
-  def rules(t: Tables): Seq[Rule] = {
-    val key =
-      s"bpe:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}"
-    ruleMemo.getOrElseUpdate(key, {
+  /** Train the merge-rule sequence for `t`'s documents corpus (a
+    * [[graft.util.Memo]] value: a handful of rows).
+    */
+  def rules(t: Tables): Seq[Rule] =
+    graft.util.Memo.value(graft.util.Memo.Key("bpe_rules", t.sfDir, "documents")) {
       val base = wordTypes(t).cache()
       try {
         val out = Seq.newBuilder[Rule]
@@ -120,8 +113,7 @@ object Bpe {
         }
         out.result()
       } finally { base.unpersist(); () }
-    })
-  }
+    }
 
   /** The declared-contract Catalyst form of the whole merge chain — each
     * merge level its OWN projection (chained `withColumn`s over a named
@@ -182,23 +174,18 @@ object Bpe {
         col("sym"))
   }
 
-  /** The trained symbol vocabulary as a driver-side map, memoized under
-    * the same dataset stamp as [[rules]]. Bounded by CONSTRUCTION, not by
+  /** The trained symbol vocabulary as a driver-side map, memoized like
+    * [[rules]]. Bounded by CONSTRUCTION, not by
     * data: [[vocabSymbols]]'s input is the trained segmentation of the
     * ≤[[MaxTypes]] training word types, so the collect is at most
     * (alphabet + NumMerges) distinct symbols — the same bounded
     * driver-state class as the rules themselves.
     */
-  private val symMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Long]]
-
-  private def symbolIds(t: Tables): Map[String, Long] = {
-    val key =
-      s"bpesym:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}"
-    symMemo.getOrElseUpdate(key,
+  private def symbolIds(t: Tables): Map[String, Long] =
+    graft.util.Memo.value(graft.util.Memo.Key("bpe_symbols", t.sfDir, "documents")) {
       vocabSymbols(t).collect()
-        .map(r => r.getString(1) -> r.getLong(0)).toMap)
-  }
+        .map(r => r.getString(1) -> r.getLong(0)).toMap
+    }
 
   /** (doc_id, n_pieces, ids): every document's subword id sequence under
     * the trained rules — pieces of symbols outside the trained

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.Memo
 
 /** Statistics-driven join planning (CBO) demonstrated end-to-end: the
   * engine registers the driver parquet as EXTERNAL catalog tables (no
@@ -26,32 +27,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The session clone ([[graft.util.Sessions]] memo) isolates the CBO
   * confs; the catalog (SharedState) is deliberately shared so the
-  * analyzed tables and their stats are visible to it. The db memo is
-  * keyed by the SparkContext object itself (never an identity-hash
-  * string — reusable after GC), with stopped-context entries swept on
-  * access.
+  * analyzed tables and their stats are visible to it.
   */
 object Cbo {
 
   /** Tables the CBO query touches — the TPC-H star around lineitem. */
   private val CboTables = Seq("customer", "orders", "lineitem", "nation", "region")
 
-  private val dbMemo =
-    new java.util.HashMap[SparkContext, java.util.concurrent.ConcurrentHashMap[String, String]]()
-
   private[graft] def hash8(s: String): String =
     java.lang.Long.toHexString(
       java.util.UUID.nameUUIDFromBytes(s.getBytes("UTF-8"))
         .getMostSignificantBits).take(8)
 
-  /** One-time per (context, dataset): external-table registration +
-    * ANALYZE. Returns the database name holding the analyzed tables.
+  /** One-time per (context, dataset snapshot): external-table registration
+    * + ANALYZE. Returns the database name holding the analyzed tables.
     * The ANALYZE pass scans each table once (table-level row count +
     * per-column min/max/NDV/null counts) — the once-per-snapshot cost a
     * deployment pays to make every later plan statistics-driven.
-    * `computeIfAbsent` runs the registration body exactly once per key
-    * even under concurrent first calls (TrieMap.getOrElseUpdate could
-    * evaluate it twice — idempotent but a duplicated full-table scan).
     */
   private[graft] def statsDb(spark: SparkSession, sfDir: String): String = {
     // the path lands inside CREATE TABLE ... LOCATION '<sfDir>/...': a
@@ -59,24 +51,14 @@ object Cbo {
     // (the graph loader's discipline; no legitimate dataset dir has one)
     require(!sfDir.contains("'"),
       s"statsDb: dataset dir must not contain a single quote: $sfDir")
-    val perCtx = dbMemo.synchronized {
-      dbMemo.entrySet().removeIf(e => e.getKey.isStopped)
-      var m = dbMemo.get(spark.sparkContext)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        dbMemo.put(spark.sparkContext, m)
-      }
-      m
-    }
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "orders")
-    perCtx.computeIfAbsent(s"$sfDir:$stamp", { _ =>
-      // name = dataset-dir hash + stamp hash, so the SIBLINGS of the
-      // current stamp are recognizable: a regenerated dataset gets a new
-      // stamp and the stale stats db is swept here instead of living in
-      // the shared warehouse forever (round-11 verdict nit; the same
-      // discipline as the layout/index orphan sweeps)
+    val key = Memo.Key("cbo_stats", sfDir, CboTables: _*)
+    Memo.inContext(spark, key) {
+      // name = dataset-dir hash + snapshot digest, so the SIBLINGS of the
+      // current snapshot are recognizable: a regenerated dataset gets a
+      // new digest and the stale stats db is swept here instead of living
+      // in the shared warehouse forever
       val sfTag = hash8(sfDir)
-      val db = s"graft_cbo_${sfTag}_${hash8(stamp)}"
+      val db = s"graft_cbo_${sfTag}_${key.digest}"
       sweepStaleDbs(spark, sfTag, keep = db)
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       CboTables.foreach { t =>
@@ -85,7 +67,7 @@ object Cbo {
         spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS")
       }
       db
-    })
+    }
   }
 
   /** Drop every `graft_cbo_<sfTag>_*` database EXCEPT `keep`: those are

@@ -487,7 +487,7 @@ object FeatureStats {
       .agg(sum(col("in1")).cast(LongType).as("c1"),
         count(lit(1)).cast(LongType).as("c"))
     val (ranked, _, _) = Windows.globalRankCum(perValue, "x", "c",
-      memoKey = s"mannwhitney:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}")
+      memo = graft.util.Memo.Key("mannwhitney_rank", t.sfDir, "documents"))
     ranked
       .select(col("c1"), col("c"),
         (col("cum") - col("c")).cast(LongType).as("cum_before"))
@@ -517,7 +517,7 @@ object FeatureStats {
     // no single-partition window even if the value support grows to
     // millions of distinct lengths (same machinery as statsMannWhitney)
     Windows.globalCums(perValue, "n_chars", Seq("c1", "c2"),
-        memoKey = s"kstest:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}")
+        memo = graft.util.Memo.Key("kstest_cums", t.sfDir, "documents"))
       .select(col("n_chars"),
         col("cum_c1").cast(LongType).as("f1"),
         col("cum_c2").cast(LongType).as("f2"))

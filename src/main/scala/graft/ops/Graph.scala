@@ -458,29 +458,20 @@ object Graph {
       .select(col("node"), coalesce(col("d"), lit(-1L)).as("dist"))
   }
 
-  /** Cluster-label memo for the bounded probe: a pipeline materializes
-    * cluster assignments once per corpus snapshot and reuses them across
-    * downstream stages (the basis-style "block" discipline), so the probe's
-    * ≤100 (doc_id, component) labels are cached as driver state keyed on a
-    * dataset stamp — same pattern and justification as [[Ivf]]'s trained
-    * quantizer. [[connectedComponents]] itself stays memo-free (GraphSpec
-    * exercises it directly); at full scale the materialization target is a
-    * parquet snapshot, not driver memory.
-    */
-  private val probeComponents =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
-
   /** Duplicate clusters: token-set-Jaccard edges (τ=0.95, doc_id < 100) →
     * connected components → (doc_id, component_id), component labeled by
     * its min doc_id. Oracle: DuckDB recursive CTE over the same edges.
+    * The probe's ≤100 labels are a [[graft.util.Memo]] value (the
+    * basis-style "block": cluster assignments materialized once per corpus
+    * snapshot); [[connectedComponents]] itself stays memo-free.
     */
   def dedupComponents(t: Tables): DataFrame = {
-    val key = s"${t.sfDir}#${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}"
-    val labels = probeComponents.computeIfAbsent(key, _ => {
+    val labels = graft.util.Memo.value(
+        graft.util.Memo.Key("probe_components", t.sfDir, "documents")) {
       val (edges, nodes) = jaccardEdges(t, 0.95, 100)
       connectedComponents(edges, nodes)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-    })
+    }
     import t.spark.implicits._
     labels.toSeq.toDF("doc_id", "component_id").orderBy("doc_id")
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.util.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,10 +79,10 @@ object IncrementalDedup {
     // Accumulated state: one (node → label) pair per stored probe doc,
     // memoized like Graph.dedupComponents' probe labels (≤100 rows here;
     // a parquet snapshot at scale).
-    val key = s"inc:${t.sfDir}#${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}"
-    val storeLabels = IncrementalDedup.storeLabelMemo.computeIfAbsent(key, _ =>
+    val storeLabels = Memo.value(Memo.Key("inc_store_labels", t.sfDir, "documents")) {
       Graph.connectedComponents(storeEdges, storeNodes)
-        .collect().map(r => (r.getLong(0), r.getLong(1))))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
     import t.spark.implicits._
     val lbl = storeLabels.toSeq.toDF("node", "label")
 
@@ -106,12 +107,6 @@ object IncrementalDedup {
       .select(col("cnode").as("doc_id"), col("final_label").as("component_id"))
     storeFinal.unionByName(newFinal).orderBy("doc_id")
   }
-
-  /** Accumulated store-label state for [[incrementalComponents]], keyed on
-    * the dataset stamp (stale snapshots fail safe to recompute).
-    */
-  private[ops] val storeLabelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
 
   /** The registered daily-arrival drive (`incremental_dedup`): the corpus
     * split two-phase — accumulated store = `doc_id % 3 != 0`, today's block
@@ -178,32 +173,21 @@ object IncrementalDedup {
     */
   def incrementalDedupBucketed(t: Tables, minJaccard: Double = 0.5): DataFrame = {
     val spark = t.spark
-    // The table name and path carry a digest of the FULL sfDir + dataset
-    // stamp, not just the directory basename: two datasets that share a
-    // basename (or a regenerated dataset at the same path) get DISTINCT
-    // tables, so a memo hit can never serve another dataset's band store.
-    val stamp = graft.util.DatasetStamp.stamp(t.sfDir, "documents")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${t.sfDir}#$stamp".getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-    val tag = java.nio.file.Paths.get(t.sfDir).getFileName.toString
-      .replaceAll("[^a-zA-Z0-9]", "_") + "_" + digest
-    val tbl = s"graft_bkt_bandstore_$tag"
-    val key = tag
-    bandStoreTables.computeIfAbsent(key, { _ =>
+    // the table name carries the dataset's tag (basename + digest of the
+    // full dir), so two datasets that share a basename get distinct tables
+    val tbl = s"graft_bkt_bandstore_${Memo.tag(t.sfDir)}"
+    val key = Memo.Key("bandstore", t.sfDir, "documents")
+    Memo.inContext(spark, key) {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val path = java.nio.file.Paths.get("/tmp/graft_layout", tag, "bandstore")
-      if (java.nio.file.Files.exists(path)) graft.util.Fs.deleteRecursively(path)
       bandStore(t.documents.filter(col("doc_id") % 3 =!= 0))
         .write
         .bucketBy(8, "band_idx", "band_hash")
         .sortBy("band_idx", "band_hash")
-        .option("path", path.toString)
+        .option("path", Memo.emptyPath(key).toString)
         .mode("overwrite")
         .format("parquet")
         .saveAsTable(tbl)
-      tbl
-    })
+    }
     val store = spark.table(tbl)
       .select(col("doc_id").as("old_id"), col("band_idx"), col("band_hash"))
     val nb = bandStore(t.documents.filter(col("doc_id") % 3 === 0))
@@ -213,10 +197,4 @@ object IncrementalDedup {
       .distinct()
     rerankCandidates(t, cands, minJaccard)
   }
-
-  /** Bucketed band-store tables already materialized this JVM, keyed on
-    * (SF tag, dataset stamp) — stale data fails safe to a re-write.
-    */
-  private val bandStoreTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -38,25 +38,6 @@ object Ivf {
   val TrainIters = 3
   val TrainSample = 2048
 
-  /** Trained quantizer cache: training is deterministic per (dataset, k),
-    * so memoizing is purely a cost saving (Bench re-plans each query 3×).
-    * The key embeds a cheap snapshot of the embeddings source (sorted file
-    * names + mtime + size, [[datasetStamp]]), so rewriting a path in place
-    * invalidates the entry and fails safe to a retrain instead of silently
-    * serving stale centroids. Tests may still bypass the memo entirely via
-    * the explicit-quantizer overloads.
-    */
-  private val trained = new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Seq[Double])]]()
-
-  /** Snapshot of the embeddings source used as the memo's invalidation
-    * token. Local paths stamp as file listing + mtimes + sizes; a path this
-    * node can't stat (e.g. a remote filesystem URI) degrades to a constant,
-    * which restores the prior per-directory memo behavior rather than
-    * failing.
-    */
-  private def datasetStamp(sfDir: String): String =
-    graft.util.DatasetStamp.stamp(sfDir, "embeddings")
-
   private def round6(x: Double): Double = math.rint(x * 1e6) / 1e6
 
   /** Lloyd training on the hash-ordered sample; returns K (cell_id, mean)
@@ -108,12 +89,14 @@ object Ivf {
 
   /** The trained centroid array itself — the persistable index state
     * ([[AnnIndex]] materializes it on disk so a fresh process serves
-    * without retraining).
+    * without retraining). Training is deterministic per dataset, so the
+    * [[graft.util.Memo]] value is purely a cost saving; tests bypass it
+    * through the explicit-quantizer overloads.
     */
-  private[ops] def trainedCells(t: Tables): Array[(Int, Seq[Double])] = {
-    val key = s"${t.sfDir}#$NumCells#${datasetStamp(t.sfDir)}"
-    trained.computeIfAbsent(key, _ => train(t, NumCells))
-  }
+  private[ops] def trainedCells(t: Tables): Array[(Int, Seq[Double])] =
+    graft.util.Memo.value(graft.util.Memo.Key("ivf_cells", t.sfDir, "embeddings")) {
+      train(t, NumCells)
+    }
 
   /** (cell_id, c_e, c_nrm) — the trained coarse quantizer, always
     * broadcast (memoized per scale directory).

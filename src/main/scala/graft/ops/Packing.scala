@@ -70,7 +70,7 @@ object Packing {
     val keyed = toks
       .select(col("doc_id"), col("n_tok"), sortKey(col("n_tok"), col("doc_id")).as("skey"))
     val (ranked, _) = Windows.globalRank(keyed, "skey",
-      memoKey = s"pack:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}")
+      memo = graft.util.Memo.Key("pack_rank", t.sfDir, "documents"))
     ranked
       .select(col("doc_id"), col("n_tok"), ((col("rk") - 1) % k).as("bin"))
       .groupBy("bin")

@@ -55,12 +55,6 @@ object Pq {
     */
   val RerankDepth = 48
 
-  /** (sub_id, cell, c_se) per codebook entry; memoized like [[Ivf.trained]]
-    * on the embeddings dataset stamp.
-    */
-  private val trained =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Int, Seq[Double])]]()
-
   private def round6(x: Double): Double = math.rint(x * 1e6) / 1e6
 
   /** (vec_id, sub_id, se): the [[NumSub]] contiguous subvectors of `e`. */
@@ -171,10 +165,10 @@ object Pq {
     * state ([[AnnIndex]] materializes it on disk so a fresh process
     * serves without retraining).
     */
-  private[ops] def trainedEntries(t: Tables): Array[(Int, Int, Seq[Double])] = {
-    val key = s"${t.sfDir}#$NumSub#$KSub#${graft.util.DatasetStamp.stamp(t.sfDir, "embeddings")}"
-    trained.computeIfAbsent(key, _ => train(t))
-  }
+  private[ops] def trainedEntries(t: Tables): Array[(Int, Int, Seq[Double])] =
+    graft.util.Memo.value(graft.util.Memo.Key("pq_codebook", t.sfDir, "embeddings")) {
+      train(t)
+    }
 
   /** The trained codebook: (sub_id, cell, c_se, c_cc), always broadcast. */
   def codebook(t: Tables): DataFrame =

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
-
 import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,9 +14,7 @@ import org.apache.spark.sql.types._
   * the terabytes they summarize — and the merge is an aggregate over
   * store-rows ∪ block-partials.
   *
-  * The store is materialized once per dataset stamp (same memo
-  * discipline as the band store in [[IncrementalDedup]]: full-path +
-  * stamp digest key, so regenerated data fails safe to a rebuild), and
+  * The store is a [[graft.util.Memo.dir]] entry keyed on events, and
   * the query plan provably scans the raw events table ONCE — for the
   * block days only (RollupSpec pins the single events scan). Works
   * because count/sum are commutative monoids; the same shape carries any
@@ -29,9 +25,6 @@ object Rollup {
 
   /** History/new-arrival boundary: days before the 25th are "history". */
   val SplitDate = "2024-01-25"
-
-  private val partialStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Per-(day, type) partial aggregate of one events slice. */
   private def partials(events: DataFrame): DataFrame =
@@ -52,20 +45,10 @@ object Rollup {
     */
   def rollupIncremental(t: Tables): DataFrame = {
     val split = lit(SplitDate).cast(DateType)
-    val stamp = graft.util.DatasetStamp.stamp(t.sfDir, "events")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${t.sfDir}#$stamp".getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-    val tag = Paths.get(t.sfDir).getFileName.toString
-      .replaceAll("[^a-zA-Z0-9]", "_") + "_" + digest
-    val path = partialStores.computeIfAbsent(tag, { _ =>
-      val p = Paths.get("/tmp/graft_layout", tag, "rollup_store")
-      if (Files.exists(p)) graft.util.Fs.deleteRecursively(p)
-      partials(t.events.filter(to_date(col("ts")) < split))
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    val store = t.spark.read.parquet(path)
+    val path = graft.util.Memo.dir(graft.util.Memo.Key("rollup_store", t.sfDir, "events")) { p =>
+      partials(t.events.filter(to_date(col("ts")) < split)).write.parquet(p.toString)
+    }
+    val store = t.spark.read.parquet(path.toString)
     val block = partials(t.events.filter(to_date(col("ts")) >= split))
     store.unionByName(block)
       .groupBy("event_type")

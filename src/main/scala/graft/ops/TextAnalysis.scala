@@ -187,21 +187,17 @@ object TextAnalysis {
     * (doc_id, token) pairs.
     */
   /** The per-language profile is TRAINED STRUCTURE the size of table
-    * statistics (8 tokens × #languages ≈ 40 rows), so it is memoized
-    * under the dataset stamp like the range-statistics and BPE-rule
-    * memos: the first invocation pays the corpus profile pass (tokenize
-    * + per-lang count + top-8 window), every later one broadcasts the
-    * cached rows and only the scoring pass runs. Deterministic (count
-    * desc, token asc tie-break), so the memo is value-transparent.
+    * statistics (8 tokens × #languages ≈ 40 rows), so it is a
+    * [[graft.util.Memo]] value: the first invocation pays the corpus
+    * profile pass (tokenize + per-lang count + top-8 window), every later
+    * one broadcasts the cached rows and only the scoring pass runs.
+    * Deterministic (count desc, token asc tie-break), so the memo is
+    * value-transparent.
     */
-  private val langProfMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
-
   def textLangid(t: Tables): DataFrame = {
     val tk = Text.tokens(t.documents)
-    val key =
-      s"langprof:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}"
-    val profRows = langProfMemo.getOrElseUpdate(key, {
+    val profRows = graft.util.Memo.value(
+        graft.util.Memo.Key("lang_profile", t.sfDir, "documents")) {
       val corpus = tk.as("t")
         .join(t.documents.select("doc_id", "lang").as("d"), "doc_id")
         .groupBy("lang", "token")
@@ -212,7 +208,7 @@ object TextAnalysis {
         .filter(col("rn") <= 8)
         .select(col("lang"), col("token"))
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    })
+    }
     val spark = t.spark
     import spark.implicits._
     val prof = profRows.toDF("lang", "p_token")

@@ -41,21 +41,14 @@ object Tokenize {
       .orderBy("id")
   }
 
-  /** The trained vocabulary as a driver-side list in dense-id order,
-    * memoized under the documents dataset stamp (the same bounded
-    * driver-state class as [[Bpe.rules]]: ≤ `maxVocab` rows by
-    * construction, rebuilt only when the dataset changes).
+  /** The trained vocabulary as a driver-side list in dense-id order, a
+    * [[graft.util.Memo]] value (≤ `maxVocab` rows by construction).
     */
-  private val vocabMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-
-  private def vocabTokens(t: Tables, maxVocab: Int): Seq[String] = {
-    val key = s"wordvocab:${t.sfDir}:$maxVocab:" +
-      graft.util.DatasetStamp.stamp(t.sfDir, "documents")
-    vocabMemo.getOrElseUpdate(key,
+  private def vocabTokens(t: Tables, maxVocab: Int): Seq[String] =
+    graft.util.Memo.value(graft.util.Memo.Key("word_vocab", t.sfDir, "documents").and(maxVocab)) {
       vocabBuild(t, maxVocab).orderBy("id").collect()
-        .map(_.getString(1)).toSeq)
-  }
+        .map(_.getString(1)).toSeq
+    }
 
   /** (doc_id, n_tok, ids): every document's token sequence encoded against
     * [[vocabBuild]]'s vocabulary, OOV → -1, ids emitted in token order as

@@ -54,9 +54,6 @@ object Unigram {
       usage: Map[String, Long],
       nllMicroByRound: Seq[Long])
 
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[String, Trained]
-
   private def wordTypes(t: Tables): DataFrame =
     Text.tokens(t.documents)
       .groupBy(col("token").as("word"))
@@ -68,10 +65,8 @@ object Unigram {
     math.round(1e6 * math.log(num.toDouble / den.toDouble))
 
   /** Train on the bounded word-type table (driver-side, memoized). */
-  def train(t: Tables): Trained = {
-    val key =
-      s"uni:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "documents")}"
-    memo.getOrElseUpdate(key, {
+  def train(t: Tables): Trained =
+    graft.util.Memo.value(graft.util.Memo.Key("unigram", t.sfDir, "documents")) {
       val types: Seq[(String, Long)] = wordTypes(t)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       // ---- seed: substring counts, all chars + top multi-char pieces
@@ -150,8 +145,7 @@ object Unigram {
       // shipped vocabulary carries only live pieces
       val live = scores.keySet.filter(p => isSingleCp(p) || lastUsage.contains(p))
       Trained(scores.filter { case (p, _) => live(p) }, lastUsage, nlls.result())
-    })
-  }
+    }
 
   /** The trained model as the expression's foldable literal. */
   def modelLiteral(t: Tables): String = {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.util.Memo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -138,38 +139,25 @@ object Windows {
     * monotone cut set yields a correct partitioning; the sketch only
     * balances occupancy (~n/parts per pid at any scale, since boundaries
     * are quantiles, not fixed-width value buckets).
-    */
-  private[ops] def collectCuts(v: DataFrame, key: String, parts: Int): Seq[Long] =
-    collectCuts(v, key, parts, null)
-
-  /** `memoKey` (nullable): a dataset-stamp-derived cache key. Cuts are
+    *
+    * `memo` (nullable): the [[Memo]] key of the input's tables. Cuts are
     * table STATISTICS — a pure function of the dataset, the same driver
     * state class as a catalog histogram or RangePartitioner boundaries —
-    * so callers whose input is a named table (not an arbitrary frame) can
-    * key them on [[graft.util.DatasetStamp]] and skip the sampling job on
-    * every invocation after the first. A dataset rewrite changes the
-    * stamp, so staleness fails safe to recompute.
+    * so callers whose input is a named table (not an arbitrary frame)
+    * skip the sampling job on every invocation after the first. Each
+    * entry is O(parts) longs.
     */
   private[ops] def collectCuts(
-      v: DataFrame, key: String, parts: Int, memoKey: String): Seq[Long] = {
-    def compute(): Seq[Long] = {
+      v: DataFrame, key: String, parts: Int, memo: Memo.Key = null): Seq[Long] =
+    stats(memo) {
       val probs = (1 until parts).map(_.toDouble / parts)
       val row = v.agg(percentile_approx(col(key), typedLit(probs), lit(1000))).head()
-      if (row.isNullAt(0)) Seq.empty
+      if (row.isNullAt(0)) Seq.empty[Long]
       else row.getSeq[Any](0).map(_.asInstanceOf[Number].longValue).distinct.sorted
     }
-    if (memoKey == null) compute()
-    else statsMemo.getOrElseUpdate(s"cuts:$memoKey", compute()).asInstanceOf[Seq[Long]]
-  }
 
-  /** Stamp-keyed driver-statistics memo (cuts / per-range counts): each
-    * entry is O(parts) longs. Unbounded growth is impossible in practice —
-    * keys are (query, dataset-stamp) pairs and a JVM sees a handful of
-    * datasets — and a stale entry can't be served because the stamp is in
-    * the key.
-    */
-  private val statsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+  private def stats[V](memo: Memo.Key)(compute: => V): V =
+    if (memo == null) compute else Memo.value(memo)(compute)
 
   /** pid(s) = #cuts ≤ s as a sum of codegen'd comparisons — NOT an array
     * higher-order function: `size(filter(lit(cuts), …))` is interpreted
@@ -191,21 +179,17 @@ object Windows {
     */
   private[ops] def globalRank(
       df: DataFrame, key: String, parts: Int = 32,
-      memoKey: String = null): (DataFrame, Long) = {
+      memo: Memo.Key = null): (DataFrame, Long) = {
     // Both driver collections (cut points + per-range counts) are dataset
-    // statistics — memoizable under the same stamp-derived key as
-    // [[collectCuts]]; the ranked frame itself is rebuilt lazily per call.
-    def computeStats(): (Seq[Long], IndexedSeq[Long]) = {
-      val cuts = collectCuts(df.select(col(key)), key, parts, null)
+    // statistics — memoizable like [[collectCuts]]; the ranked frame
+    // itself is rebuilt lazily per call.
+    val (cuts, cntArr) = stats(memo) {
+      val cuts = collectCuts(df.select(col(key)), key, parts)
       val cnts = df.withColumn("__pid", bucketOf(col(key), cuts))
         .groupBy("__pid").agg(count(lit(1)).as("cnt")).collect()
         .map(r => r.getAs[Number]("__pid").intValue -> r.getAs[Long]("cnt")).toMap
       (cuts, (0 to cuts.size).map(p => cnts.getOrElse(p, 0L)))
     }
-    val (cuts, cntArr) =
-      if (memoKey == null) computeStats()
-      else statsMemo.getOrElseUpdate(s"rank:$memoKey", computeStats())
-        .asInstanceOf[(Seq[Long], IndexedSeq[Long])]
     val offArr = cntArr.scanLeft(0L)(_ + _).dropRight(1)
     val wLocal = Window.partitionBy("__pid").orderBy(key)
     val ranked = df.withColumn("__pid", bucketOf(col(key), cuts))
@@ -223,10 +207,10 @@ object Windows {
     */
   private[graft] def globalCums(
       df: DataFrame, key: String, values: Seq[String], parts: Int = 32,
-      memoKey: String = null): DataFrame = {
+      memo: Memo.Key = null): DataFrame = {
     require(values.nonEmpty, "globalCums requires at least one value column")
-    def computeStats(): (Seq[Long], Map[Int, IndexedSeq[Long]]) = {
-      val cuts = collectCuts(df.select(col(key)), key, parts, null)
+    val (cuts, partials) = stats(memo) {
+      val cuts = collectCuts(df.select(col(key)), key, parts)
       val aggs = values.map(v => sum(col(v)).cast(LongType).as(s"vs_$v"))
       val rows = df.withColumn("__pid", bucketOf(col(key), cuts))
         .groupBy("__pid").agg(aggs.head, aggs.tail: _*).collect()
@@ -244,10 +228,6 @@ object Windows {
         i -> (0 to cuts.size).map(p =>
           rows.get(p).map(_(i)).getOrElse(0L)).toIndexedSeq).toMap)
     }
-    val (cuts, partials) =
-      if (memoKey == null) computeStats()
-      else statsMemo.getOrElseUpdate(s"cums:$memoKey", computeStats())
-        .asInstanceOf[(Seq[Long], Map[Int, IndexedSeq[Long]])]
     val wRun = Window.partitionBy("__pid").orderBy(key)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withPid = df.withColumn("__pid", bucketOf(col(key), cuts))
@@ -270,9 +250,9 @@ object Windows {
     */
   private[graft] def globalRankCum(
       df: DataFrame, key: String, value: String, parts: Int = 32,
-      memoKey: String = null): (DataFrame, Long, Long) = {
-    def computeStats(): (Seq[Long], IndexedSeq[Long], IndexedSeq[Long]) = {
-      val cuts = collectCuts(df.select(col(key)), key, parts, null)
+      memo: Memo.Key = null): (DataFrame, Long, Long) = {
+    val (cuts, cntArr, valArr) = stats(memo) {
+      val cuts = collectCuts(df.select(col(key)), key, parts)
       val rows = df.withColumn("__pid", bucketOf(col(key), cuts))
         .groupBy("__pid")
         .agg(count(lit(1)).as("cnt"), sum(col(value)).cast(LongType).as("vs"))
@@ -283,10 +263,6 @@ object Windows {
         (0 to cuts.size).map(p => rows.get(p).map(_._1).getOrElse(0L)),
         (0 to cuts.size).map(p => rows.get(p).map(_._2).getOrElse(0L)))
     }
-    val (cuts, cntArr, valArr) =
-      if (memoKey == null) computeStats()
-      else statsMemo.getOrElseUpdate(s"rankcum:$memoKey", computeStats())
-        .asInstanceOf[(Seq[Long], IndexedSeq[Long], IndexedSeq[Long])]
     val offCnt = cntArr.scanLeft(0L)(_ + _).dropRight(1)
     val offVal = valArr.scanLeft(0L)(_ + _).dropRight(1)
     val wLocal = Window.partitionBy("__pid").orderBy(key)
@@ -333,8 +309,7 @@ object Windows {
     val v = t.orders.select(
       col("o_orderkey"),
       (dec(col("o_totalprice")) * 100).cast(LongType).as("s"))
-    val cuts = collectCuts(v, "s", 32,
-      s"rangeframe:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "orders")}")
+    val cuts = collectCuts(v, "s", 32, Memo.Key("range_frame_cuts", t.sfDir, "orders"))
     val withPid = v.withColumn("pid", bucketOf(col("s"), cuts))
     // Residents keep their own range; ghosts go only to later ranges whose
     // lower bound is within W (most rows produce none — no array alloc).
@@ -392,7 +367,7 @@ object Windows {
     */
   def winNtileCume(t: Tables): DataFrame = {
     val (ranked0, n) = globalRank(t.customer.select(col("c_custkey")), "c_custkey",
-      memoKey = s"ntile:${t.sfDir}:${graft.util.DatasetStamp.stamp(t.sfDir, "customer")}")
+      memo = Memo.Key("ntile_rank", t.sfDir, "customer"))
     val ranked = ranked0.select(col("c_custkey"), col("rk"), lit(n).as("n"))
     // NTILE(4): first (n mod 4) buckets get ceil(n/4) rows, the rest floor.
     // `/` on Columns is double division — floor() recovers integral div

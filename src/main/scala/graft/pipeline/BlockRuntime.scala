@@ -244,16 +244,12 @@ object BlockRuntime {
 
   // ---------------------------------------------------------------- query
 
-  /** Three-block feed over the events table (event_id % 3), memoized per
-    * dataset stamp like the streaming feeds: immutable files, the unit
-    * of arrival.
+  /** Three-block feed over the events table (event_id % 3), a
+    * [[graft.util.Memo]] value like the streaming feeds: immutable files,
+    * the unit of arrival.
     */
-  private val feedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
-  private[pipeline] def blockFeed(spark: SparkSession, sfDir: String): Path = {
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    feedMemo.computeIfAbsent(s"$sfDir:$stamp", { _ =>
+  private[pipeline] def blockFeed(spark: SparkSession, sfDir: String): Path =
+    graft.util.Memo.value(graft.util.Memo.Key("block_feed", sfDir, "events")) {
       val dir = Files.createTempDirectory("graft_blockfeed")
       val events = graft.Tables(spark, sfDir).events
         .filter(col("ts").isNotNull && col("value").isNotNull)
@@ -268,8 +264,7 @@ object BlockRuntime {
         Files.move(part.toPath, dir.resolve(s"b$i.parquet"))
       }
       dir
-    })
-  }
+    }
 
   /** Daily totals per event day via the exactly-once block runtime,
     * driven through a GROWING feed inside one invocation: runs 1 and 2

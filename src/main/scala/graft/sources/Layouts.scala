@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.DatasetStamp
+import graft.util.Memo
 
 /** Driver-checkable STORAGE-LAYOUT queries. [[Partitioned]] and [[ZOrder]]
   * were spec-only for six rounds (PartitionedSpec / ZOrderSpec prove the
@@ -16,40 +16,15 @@ import graft.util.DatasetStamp
   * from the ORIGINAL parquet — proving the layout write+read round-trip
   * loses nothing while the plan enjoys partition pruning / file skipping.
   *
-  * The layout write is memoized on [[DatasetStamp]] (sorted file names +
-  * mtimes + sizes of the source table): Bench re-runs each query 3×, and
-  * re-clustering 100 TB per query would be absurd — a layout is written
-  * once and QUERIED many times; the memo models exactly that. A rewritten
-  * source path changes the stamp and fails safe to a re-write.
+  * Each layout is a [[Memo.dir]] entry keyed on its source table: Bench
+  * re-runs each query 3×, and re-clustering 100 TB per query would be
+  * absurd — a layout is written once and QUERIED many times.
   */
 object Layouts {
 
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
-  /** Materialize layout `kind` under /tmp keyed by (SF dir name, source
-    * stamp), once per JVM and re-usable across JVMs via the stamp file.
-    */
   private def materialize(
-      sfDir: String, table: String, kind: String)(write: Path => Unit): Path = {
-    val key = s"${Paths.get(sfDir).getFileName}:$table:$kind"
-    written.computeIfAbsent(key, { _ =>
-      val stamp = DatasetStamp.stamp(sfDir, table)
-      val dir = Paths.get("/tmp/graft_layout",
-        Paths.get(sfDir).getFileName.toString, s"${table}_$kind")
-      val stampFile = dir.resolve("_graft_stamp")
-      val fresh = Files.exists(stampFile) &&
-        new String(Files.readAllBytes(stampFile), "UTF-8") == stamp && stamp != "unstat"
-      if (!fresh) {
-        deleteRecursively(dir)
-        write(dir)
-        Files.write(stampFile, stamp.getBytes("UTF-8"))
-      }
-      dir
-    })
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) graft.util.Fs.deleteRecursively(p)
+      sfDir: String, table: String, kind: String)(write: Path => Unit): Path =
+    Memo.dir(Memo.Key(s"${table}_$kind", sfDir, table))(write)
 
   /** Bucketed-layout co-located join: orders and customer both written
     * bucketed (8 buckets) on the join key, then joined WITHOUT either
@@ -60,26 +35,24 @@ object Layouts {
     * broadcast-size at test SFs, and a broadcast join would read the
     * bucketed table while proving nothing about the layout.
     *
-    * Bucketed tables live in the session catalog (in-memory, per JVM),
-    * with data under /tmp — written once per JVM via the same memo
-    * discipline as the other layouts; the oracle states the identical
-    * aggregate from the ORIGINAL tables.
+    * Bucketed tables live in the session catalog (in-memory, per
+    * context), with data under the entry's path; the oracle states the
+    * identical aggregate from the ORIGINAL tables.
     */
   def joinBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    val tag = Paths.get(sfDir).getFileName.toString.replaceAll("[^a-zA-Z0-9]", "_")
+    val key = Memo.Key("bucketed", sfDir, "orders", "customer")
+    val tag = Memo.tag(sfDir)
     val ot = s"graft_bkt_orders_$tag"
     val ct = s"graft_bkt_customer_$tag"
-    written.computeIfAbsent(s"$tag:bucketed", { _ =>
+    Memo.inContext(spark, key) {
       val t = Tables(spark, sfDir)
-      val dir = Paths.get("/tmp/graft_layout", tag)
-      def writeOne(df: org.apache.spark.sql.DataFrame, table: String, key: String): Unit = {
-        val path = dir.resolve(table)
-        deleteRecursively(path)
+      val dir = Memo.emptyPath(key)
+      def writeOne(df: org.apache.spark.sql.DataFrame, table: String, by: String): Unit = {
         spark.sql(s"DROP TABLE IF EXISTS $table")
         df.write
-          .bucketBy(8, key)
-          .sortBy(key)
-          .option("path", path.toString)
+          .bucketBy(8, by)
+          .sortBy(by)
+          .option("path", dir.resolve(table).toString)
           .mode("overwrite")
           .format("parquet")
           .saveAsTable(table)
@@ -87,8 +60,7 @@ object Layouts {
       writeOne(t.orders.select(col("o_custkey"), col("o_totalprice"), col("o_orderpriority")),
         ot, "o_custkey")
       writeOne(t.customer.select(col("c_custkey"), col("c_mktsegment")), ct, "c_custkey")
-      dir
-    })
+    }
     spark.table(ot)
       .join(spark.table(ct).hint("merge"), col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
+import graft.util.Memo
+
 /** Bounded-stream driver: runs a REAL Structured Streaming query (file
   * source → stateful transform → memory sink, Trigger.AvailableNow) over
   * the driver's events table and hands the sink back as a batch DataFrame.
@@ -265,19 +267,14 @@ object StreamDrive {
     * multiset exactly: f1 ∪ {f3 rows with window_end > max(ts f1) −
     * 10 min}. Sums are integral cents (order-free); the sink's
     * per-window maximum n picks the final emission like the other drives.
-    */
-  private val feedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  /** The three-file watermark feed, memoized on the events
-    * [[graft.util.DatasetStamp]]: Bench re-runs the query 3×, and the
+    *
+    * The feed is a [[Memo]] value: Bench re-runs the query 3×, and the
     * feed is a pure function of the events table — re-splitting it per
     * pass paid ~3 writes/run for identical bytes. The mtime ordering is
     * pinned at write time and the files are immutable thereafter.
     */
-  private def watermarkFeed(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    feedMemo.computeIfAbsent(s"$sfDir:$stamp", { _ =>
+  private def watermarkFeed(spark: SparkSession, sfDir: String): java.nio.file.Path =
+    Memo.value(Memo.Key("stream_feed_watermark", sfDir, "events")) {
       val feedDir = Files.createTempDirectory("graft_feed_watermark")
       val cut = "2024-01-25 00:00:00"
       // Extra columns ride along for the other drives — each reader prunes
@@ -297,8 +294,7 @@ object StreamDrive {
       writeFeedFile(events.filter(!inF1),
         feedDir, "f3.parquet", now - 60000)
       feedDir
-    })
-  }
+    }
 
   def streamWatermark(spark: SparkSession, sfDir: String): DataFrame = {
     val feedDir = watermarkFeed(spark, sfDir)
@@ -482,10 +478,9 @@ object StreamDrive {
     */
   def streamForeachUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val feedDir = watermarkFeed(spark, sfDir)
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    val storeRoot = feedMemo.computeIfAbsent(s"upsert_store:$sfDir:$stamp", { _ =>
+    val storeRoot = Memo.value(Memo.Key("stream_upsert_store", sfDir, "events")) {
       Files.createTempDirectory("graft_upsert_store")
-    })
+    }
     val feedSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("vc", LongType)))
 
@@ -562,10 +557,9 @@ object StreamDrive {
     */
   def streamManifestSink(spark: SparkSession, sfDir: String): DataFrame = {
     val feedDir = watermarkFeed(spark, sfDir)
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    val storeRoot = feedMemo.computeIfAbsent(s"manifest_sink:$sfDir:$stamp", { _ =>
+    val storeRoot = Memo.value(Memo.Key("stream_manifest_sink_store", sfDir, "events")) {
       Files.createTempDirectory("graft_manifest_sink")
-    })
+    }
     val store = storeRoot.resolve("table").toString
     val feedSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("vc", LongType)))
@@ -620,8 +614,7 @@ object StreamDrive {
   def streamManifestSource(spark: SparkSession, sfDir: String): DataFrame = {
     val customer = graft.Tables(spark, sfDir).customer
       .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "customer")
-    val storeRoot = feedMemo.computeIfAbsent(s"manifest_src:$sfDir:$stamp", { _ =>
+    val storeRoot = Memo.value(Memo.Key("stream_manifest_source_store", sfDir, "customer")) {
       val root = Files.createTempDirectory("graft_manifest_src")
       Seq(0, 1).foreach { parity =>
         customer.filter(pmod(col("c_custkey"), lit(2)) === parity)
@@ -629,7 +622,7 @@ object StreamDrive {
           .option("path", root.resolve("table").toString).mode("append").save()
       }
       root
-    })
+    }
     val store = storeRoot.resolve("table").toString
     val streamed = runToSink(spark, "manifest_source", "append",
       partitions = 1, provider = HdfsBacked, noData = false) { ss =>
@@ -667,8 +660,7 @@ object StreamDrive {
     val orders = graft.Tables(spark, sfDir).orders
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "orders")
-    val storeRoot = feedMemo.computeIfAbsent(s"manifest_cdf:$sfDir:$stamp", { _ =>
+    val storeRoot = Memo.value(Memo.Key("stream_manifest_cdf_store", sfDir, "orders")) {
       val root = Files.createTempDirectory("graft_manifest_cdf")
       val store = root.resolve("table").toString
       orders.write.format("graft.sources.ManifestTable")
@@ -682,7 +674,7 @@ object StreamDrive {
         .withColumn("cents", col("cents") + lit(12345L))
       graft.sources.ManifestTable.mergeKeys(spark, store, "o_orderkey", updates) // v3
       root
-    })
+    }
     val store = storeRoot.resolve("table").toString
     val streamed = runToSink(spark, "manifest_cdf", "append",
       partitions = 1, provider = HdfsBacked, noData = false) { ss =>
@@ -707,18 +699,17 @@ object StreamDrive {
 
   /** Feed for [[stateSessionsTimeout]]: every valid event in ONE data
     * file (integral-cents values), so the whole multiset co-arrives as
-    * micro-batch 1. Memoized on the dataset stamp like [[watermarkFeed]].
+    * micro-batch 1. Memoized like [[watermarkFeed]].
     */
   private def sessionTimeoutFeed(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    feedMemo.computeIfAbsent(s"ptimeout:$sfDir:$stamp", { _ =>
+    Memo.value(Memo.Key("stream_feed_ptimeout", sfDir, "events")) {
       val feedDir = Files.createTempDirectory("graft_feed_ptimeout")
       val events = graft.Tables(spark, sfDir).events
         .filter(col("user_id").isNotNull && col("value").isNotNull)
         .select(col("user_id"), round(col("value") * 100).as("value"))
       writeFeedFile(events, feedDir, "f1.parquet", System.currentTimeMillis() - 180000)
       feedDir
-    })
+    }
   }
 
   /** [[SessionTimeout]] (PROCESSING-TIME timers) driven END-TO-END — the
@@ -836,11 +827,10 @@ object StreamDrive {
     * (older mtime), every valid PURCHASE row in a second (newer mtime).
     * With maxFilesPerTrigger=1 the file source turns this into two
     * ordered micro-batches: batch 1 delivers only clicks, batch 2 only
-    * purchases. Memoized on the dataset stamp like [[watermarkFeed]].
+    * purchases. Memoized like [[watermarkFeed]].
     */
   private def splitArrivalFeed(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    feedMemo.computeIfAbsent(s"split:$sfDir:$stamp", { _ =>
+    Memo.value(Memo.Key("stream_feed_split", sfDir, "events")) {
       val feedDir = Files.createTempDirectory("graft_feed_split")
       val events = graft.Tables(spark, sfDir).events
         .filter(col("user_id").isNotNull && col("value").isNotNull && col("ts").isNotNull)
@@ -851,7 +841,7 @@ object StreamDrive {
       writeFeedFile(events.filter(col("event_type") === "purchase"),
         feedDir, "purchases.parquet", now - 120000)
       feedDir
-    })
+    }
   }
 
   /** [[streamStreamJoin]]'s missing half (round-7 advice): the same
@@ -906,12 +896,10 @@ object StreamDrive {
     * StreamingSpec pins the sink against the batch LEFT JOIN, so a
     * Spark version that stopped scheduling the eviction batch would
     * fail loudly, not drop rows silently. Files are immutable after
-    * creation, so the dir memoizes on the dataset stamp like
-    * [[watermarkFeed]].
+    * creation, so the dir is memoized like [[watermarkFeed]].
     */
   private def outerJoinFeed(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    feedMemo.computeIfAbsent(s"outer:$sfDir:$stamp", { _ =>
+    Memo.value(Memo.Key("stream_feed_outer", sfDir, "events")) {
       val feedDir = Files.createTempDirectory("graft_feed_outer")
       val events = graft.Tables(spark, sfDir).events
         .filter(col("user_id").isNotNull && col("value").isNotNull && col("ts").isNotNull)
@@ -927,7 +915,7 @@ object StreamDrive {
       }
       writeFeedFile(fence(-1L, -2L, 1L), feedDir, "fence1.parquet", now - 120000)
       feedDir
-    })
+    }
   }
 
   /** LEFT-OUTER stream-stream interval join driven END-TO-END — the
@@ -1162,8 +1150,7 @@ object StreamDrive {
     * batches for the final answer to come out right.
     */
   private def cdcFeed(spark: SparkSession, sfDir: String): java.nio.file.Path = {
-    val stamp = graft.util.DatasetStamp.stamp(sfDir, "events")
-    feedMemo.computeIfAbsent(s"cdc:$sfDir:$stamp", { _ =>
+    Memo.value(Memo.Key("stream_feed_cdc", sfDir, "events")) {
       val feedDir = Files.createTempDirectory("graft_feed_cdc")
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("ts"), col("event_id"))
@@ -1188,7 +1175,7 @@ object StreamDrive {
           feedDir, s"cdc_$i.parquet", now - 180000 + i * 60000)
       }
       feedDir
-    })
+    }
   }
 
   /** [[CdcApply]] driven END-TO-END: the three-batch change feed applied

@@ -12,7 +12,6 @@ object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession()
-    spark.sparkContext.setLogLevel("WARN")
     Tables.cacheAll(spark, sfDir)
     args.foreach { name =>
       val fn = Registry.all(name)

@@ -1,12 +1,11 @@
 package graft.util
 
-/** Cheap dataset snapshot token for driver-state memos (trained IVF
-  * quantizer, probe dedup-cluster labels): sorted file names + mtimes +
-  * sizes of one parquet table. Rewriting a path in place changes the
-  * stamp, so a memo keyed on it fails safe to recompute instead of
-  * silently serving stale state. A path this node can't stat (e.g. a
-  * remote filesystem URI) degrades to a constant — per-directory memo
-  * behavior — rather than failing.
+/** Cheap snapshot token of one parquet table, taken by every
+  * [[Memo.Key]] for each input: sorted file names + mtimes + sizes.
+  * Rewriting a path in place changes the stamp, so a memo keyed on it
+  * fails safe to recompute instead of silently serving stale state. A
+  * path this node can't stat (e.g. a remote filesystem URI) degrades to
+  * a constant — per-directory memo behavior — rather than failing.
   */
 object DatasetStamp {
 

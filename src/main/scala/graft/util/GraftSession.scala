@@ -17,7 +17,9 @@ import org.apache.spark.sql.SparkSession
   *  - storage-partitioned joins on from the start, so SPJ-query plans do
   *    not depend on query order (only opt-in `reportPartitioning` scans are
   *    affected, see `Feeds.ensureSpjConf`);
-  *  - `spark.sql.extensions=graft.GraftExtensions`.
+  *  - `spark.sql.extensions=graft.GraftExtensions`;
+  *  - Spark logging at WARN: the classpath has no log4j2 configuration,
+  *    and Spark's INFO default buries every other line of output.
   *
   * JVM-wide settings (UI off, UTC session time zone, the codegen cache, the
   * `file:` binding) come from the root `build.sbt` launch profile.
@@ -26,7 +28,7 @@ object GraftSession {
 
   def apply(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
@@ -34,5 +36,7 @@ object GraftSession {
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

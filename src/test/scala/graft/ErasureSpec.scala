@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,8 +17,7 @@ class ErasureSpec extends AnyFunSuite with SparkSessionFixture {
     val df = graft.sources.Layouts.gdprErasure(spark, sf)
     assert(df.collect().nonEmpty)
 
-    val base = Paths.get("/tmp/graft_layout",
-      Paths.get(sf).getFileName.toString, "orders_erasure")
+    val base = util.Memo.path(sf, "orders_erasure")
     import scala.jdk.CollectionConverters._
     def files(gen: String) = {
       val s = Files.list(base.resolve(gen))
