@@ -967,11 +967,10 @@ object Feeds {
     */
   /** The manifest store HOLDING the LLM-pipeline column shapes (round
     * 15): `embedding array<float>` and `payload binary` land in a
-    * manifest table through the parquet codec's LIST/BINARY surface and
-    * are served BACK for a brute-force cosine top-k plus a payload
-    * digest — the embedding/media read the curated-corpus store is for,
-    * previously impossible (supportedType stopped at scalars, so every
-    * vector query read driver parquet instead of the lakehouse). The
+    * manifest table as parquet LIST/BINARY columns (Spark's own parquet
+    * writer) and are served BACK through the vectorized reader for a
+    * brute-force cosine top-k plus a payload digest — the embedding/media
+    * read the curated-corpus store is for. The
     * oracle recomputes cosine from the ORIGINAL embeddings table
     * (list_dot_product) and the digest from first principles
     * (sha256('p' || vec_id)), so an array element lost/reordered or a
@@ -1181,13 +1180,12 @@ object Feeds {
   /** NESTED columns IN the manifest store (round 16 — the JSON-shaped
     * metadata a real corpus table holds): orders lands with a
     * provenance STRUCT (status + clerk id) and a MAP<string,string>
-    * props column, written through the store's own parquet codec
-    * (recursive group shapes, ManifestCodec.parquetFieldType), and the
-    * query serves TYPED field extraction back — `meta.cust`,
-    * `props['pri']` — aggregated so every row's nested values are
-    * load-bearing. Zone maps/blooms conservatively skip nested columns
-    * and the vectorized path falls back to the row reader when the
-    * projection includes one; the oracle restates the aggregate over
+    * props column, written as standard parquet group/MAP shapes by
+    * Spark's own parquet writer (ManifestCodec.newWriter), and the
+    * query serves TYPED field extraction back through the vectorized
+    * reader — `meta.cust`, `props['pri']` — aggregated so every row's
+    * nested values are load-bearing. Zone maps/blooms conservatively
+    * skip nested columns; the oracle restates the aggregate over
     * the original flat table (construct→extract is the identity).
     */
   def sourceManifestNested(spark: SparkSession, sfDir: String): DataFrame = {

@@ -3,6 +3,8 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -133,10 +135,9 @@ class GraftCatalog extends TableCatalog
     if (ManifestTable.currentManifestShallow(path).nonEmpty)
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         (ident.namespace() :+ ident.name()).toSeq)
-    val codec = Option(properties.get("codec"))
-      .getOrElse(ManifestCodec.DefaultCodec)
-    ManifestCodec.extOf(codec)
-    ManifestCodec.requireWritable(codec, schema)
+    ManifestCodec.refuseCodec(properties.keySet().asScala,
+      s"graft_cat CREATE TABLE at $path")
+    ManifestCodec.requireWritable(schema)
     // per-file string blooms declared at CREATE time persist with the
     // layout: TBLPROPERTIES('bloomCols'='url,doc_sha'[, 'bloomBits'='2048'])
     val bloomProps: Map[String, String] =
@@ -178,7 +179,7 @@ class GraftCatalog extends TableCatalog
           s"${ts.map(_.describe()).mkString(", ")} — use PARTITIONED BY " +
           "(col, ...) or PARTITIONED BY (bucket(n, col))")
     }
-    val defaults = layout ++ bloomProps ++ Map("codec" -> codec)
+    val defaults = layout ++ bloomProps
     // the layout is TABLE METADATA: persisted in the manifest header so
     // every later INSERT/append inherits it, not a per-write courtesy
     ManifestTable.createEmpty(path, schema, defaults)
@@ -257,7 +258,6 @@ class GraftCatalog extends TableCatalog
             name.startsWith(".manifest_stage") || name.startsWith("group-")
         val walk = Files.walk(d)
         val paths = try {
-          import scala.jdk.CollectionConverters._
           walk.sorted(java.util.Comparator.reverseOrder())
             .iterator().asScala.toList
         } finally walk.close()
@@ -270,7 +270,6 @@ class GraftCatalog extends TableCatalog
         }
         val left = Files.list(d)
         val foreign = try {
-          import scala.jdk.CollectionConverters._
           left.iterator().asScala.nonEmpty
         } finally left.close()
         if (!foreign) Files.deleteIfExists(d)

@@ -152,10 +152,13 @@ private[sources] class ManifestCdfReaderFactory(
     val probe = keyTest(part.probe.toSeq)
     val ctValue = org.apache.spark.unsafe.types.UTF8String.fromString(part.changeType)
 
+    // the change-type/version suffix is one fixed row joined after each
+    // table row — no per-row copy of the table columns
+    val suffix = InternalRow(ctValue, part.version)
     new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-      private val rdr =
-        ManifestCodec.openReader(part.file, tableSchema, tableSchema)
-      private var row: InternalRow = _
+      private val rdr = ManifestColumnar.rows(
+        ManifestColumnar.open(part.file, tableSchema, Seq.empty))
+      private val row = new org.apache.spark.sql.catalyst.expressions.JoinedRow()
       private def matches(r: InternalRow, t: Array[(Int, Boolean, Set[Long])]): Boolean =
         t.exists { case (i, isLong, keys) =>
           !r.isNullAt(i) &&
@@ -166,8 +169,7 @@ private[sources] class ManifestCdfReaderFactory(
           val base = rdr.get()
           // snapshot(v-1) membership first, then the erased-key probe
           if (!matches(base, dead) && (probe.isEmpty || matches(base, probe))) {
-            row = InternalRow.fromSeq(
-              base.toSeq(tableSchema) :+ (ctValue: Any) :+ (part.version: Any))
+            row(base, suffix)
             return true
           }
         }

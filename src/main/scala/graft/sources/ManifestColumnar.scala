@@ -4,46 +4,41 @@ import org.apache.hadoop.fs.{Path => HadoopPath}
 // the OLD mapred FileSplit: Spark's SpecificParquetRecordReaderBase casts
 // its InputSplit to it (mapred.FileSplit IS-A mapreduce.lib.input.FileSplit)
 import org.apache.hadoop.mapred.FileSplit
-import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** VECTORIZED read path for the manifest store's parquet data files:
-  * Spark's own `VectorizedParquetRecordReader` decodes whole
-  * `ColumnarBatch`es (page-at-a-time column decoding, dictionary-aware,
-  * null bitmaps) instead of materializing one `Group` object tree per
-  * row through parquet-mr's example API — the constant-factor CPU
-  * multiplier the round-14 verdict flagged on the engine's hottest path.
+/** The manifest store's ONE read path: Spark's own
+  * `VectorizedParquetRecordReader` decodes whole `ColumnarBatch`es
+  * (page-at-a-time column decoding, dictionary-aware, null bitmaps).
   * Whole-stage codegen consumes the batches through the standard
   * `ColumnarToRow` bridge, so the scan joins the same fused pipeline
   * Spark's native parquet scans use.
   *
-  * Scope (the row path remains for everything else, same results):
+  * Scope — every read of a data file comes through [[open]]:
   *
-  *   - `.parquet` files only — text files keep the streaming row reader;
-  *   - merge-on-read deletes apply ON the batch (round 16, the
-  *     Iceberg/Delta columnar MoR shape): the reader additionally
-  *     requests the delete-key columns, builds a surviving-row-id
-  *     mapping per batch, and serves the projection through mapped
-  *     vector views — a store with standing equality deletes no longer
-  *     drops to the ~3×-slower row reader between maintenance windows;
-  *   - projections of scalars and the nested family at any depth
-  *     (Spark's ParquetColumnVector builds nested vectors for the
-  *     LIST/MAP/group shapes — embedding scans and struct/map metadata
-  *     columns vectorize alike) with ≥ 1 column (zero-column counts
-  *     already answer from footers without opening a page).
+  *   - batch scans and every streaming micro-batch, as batches;
+  *   - change-feed reads ([[ManifestCdfReaderFactory]]) and the
+  *     delete-carrying zero-column counts, as rows through [[rows]];
+  *   - merge-on-read deletes apply ON the batch (the Iceberg/Delta
+  *     columnar MoR shape): the reader additionally requests the
+  *     delete-key columns, builds a surviving-row-id mapping per batch,
+  *     and serves the projection through mapped vector views;
+  *   - scalars and the nested family at any depth (Spark's
+  *     ParquetColumnVector builds nested vectors for the LIST/MAP/group
+  *     shapes).
+  *
+  * The one read beside it is the footer row count
+  * ([[ManifestCodec.footerRowCount]]) that answers a zero-column
+  * projection with no deletes without opening a page.
   *
   * Pushed filters ride in through parquet's standard conf key
   * (`ParquetInputFormat.setFilterPredicate`), so ROW-GROUP skipping is
-  * preserved — the vectorized path never reads row groups the row path
-  * would have skipped. Requested-vs-file schema reconciliation (additive
+  * preserved. Requested-vs-file schema reconciliation (additive
   * evolution) is Spark's own `clipParquetSchema`: a requested column
-  * missing from an old file becomes a null vector, exactly the row
-  * path's null-padding.
+  * missing from an old file becomes a null vector.
   */
 private[graft] object ManifestColumnar {
 
@@ -54,26 +49,37 @@ private[graft] object ManifestColumnar {
   private val RequestedSchemaKey =
     "org.apache.spark.sql.parquet.row.requested_schema"
 
-  /** Types the vectorized reader serves under this store's contract —
-    * scalars plus the full nested family, recursively (Spark's reader
-    * builds nested column vectors via ParquetColumnVector since 3.3;
-    * round 16 extends the store's columnar scope from single-level
-    * arrays to struct/map/any-depth arrays alongside the codec's own
-    * nested support).
+  /** Fail a read of anything but a parquet data file, naming it: a
+    * manifest written before the text codec was retired may still list a
+    * `data-*.rows` file, and skipping it would silently drop its rows.
     */
-  def eligibleType(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | BooleanType | FloatType |
-        StringType | BinaryType | DateType | TimestampType |
-        TimestampNTZType => true
-    case _: DecimalType => true
-    case ArrayType(et, _) => eligibleType(et)
-    case StructType(fields) => fields.forall(f => eligibleType(f.dataType))
-    case MapType(kt, vt, _) => eligibleType(kt) && eligibleType(vt)
-    case _ => false
-  }
+  def requireParquet(file: String): Unit =
+    if (!file.endsWith(ManifestCodec.ParquetExt))
+      throw new IllegalStateException(
+        s"manifest data file $file is not parquet: text-codec (.rows) " +
+          "data files are no longer readable — the store reads and writes " +
+          "parquet only; rewrite the table from a build that still reads them")
 
-  def eligibleProjection(proj: StructType): Boolean =
-    proj.fields.nonEmpty && proj.fields.forall(f => eligibleType(f.dataType))
+  /** The rows of a batch reader, one `ColumnarBatch.rowIterator` per
+    * batch. Each row is a view into the reader's reused vectors, valid
+    * until the next `next()` — the usual `PartitionReader` contract.
+    */
+  def rows(batches: PartitionReader[ColumnarBatch]): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private var it: java.util.Iterator[InternalRow] =
+        java.util.Collections.emptyIterator()
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (!it.hasNext) {
+          if (!batches.next()) return false
+          it = batches.get().rowIterator()
+        }
+        row = it.next()
+        true
+      }
+      override def get(): InternalRow = row
+      override def close(): Unit = batches.close()
+    }
 
   /** Open `file` as a columnar batch reader over exactly `wanted`.
     * `tableSchema` (the full table schema) is consulted only under
@@ -85,6 +91,7 @@ private[graft] object ManifestColumnar {
       deletes: Seq[(String, DataType, Set[Long])] = Seq.empty,
       tableSchema: StructType = new StructType(),
       capacity: Int = 4096): PartitionReader[ColumnarBatch] = {
+    requireParquet(file)
     // MERGE-ON-READ: the scan must see the delete-key columns to filter
     // on them, so they extend the requested schema past the projection;
     // the served batch exposes only the projected columns. The extended
@@ -95,8 +102,7 @@ private[graft] object ManifestColumnar {
     // that is always file-consistent; a key column appended at the end
     // instead NPEs inside Spark's reader on mixed-encoding chunks. A
     // key column an old file lacks clips to a null vector — null keys
-    // are never in a delete set, so those rows survive, the row path's
-    // exact rule.
+    // are never in a delete set, so those rows survive.
     val readSchema =
       if (deletes.isEmpty) wanted
       else {
@@ -121,9 +127,9 @@ private[graft] object ManifestColumnar {
         .getName)
     // Spark's session normally materializes these SQLConf values into
     // the per-scan hadoop conf; the schema converter reads them with NO
-    // defaults. Fixed values, not session state: this codec wrote the
-    // files, so their meaning is known (string-annotated binaries, no
-    // INT96, µs timestamps with NTZ annotated unadjusted)
+    // defaults. Fixed values, not session state: ManifestCodec.newWriter
+    // wrote the files, so their meaning is known (string-annotated
+    // binaries, no INT96, µs timestamps with NTZ annotated unadjusted)
     conf.setBoolean("spark.sql.parquet.binaryAsString", false)
     conf.setBoolean("spark.sql.parquet.int96AsTimestamp", true)
     // safe as a FIXED value: the write path rejects schemas whose
@@ -134,8 +140,7 @@ private[graft] object ManifestColumnar {
     conf.setBoolean("spark.sql.legacy.parquet.nanosAsLong", false)
     conf.setBoolean("spark.sql.parquet.fieldId.read.enabled", false)
     conf.setBoolean("spark.sql.parquet.fieldId.write.enabled", false)
-    // same predicate translation as the row path — never stronger than
-    // Spark's residual re-application; columns absent from this file's
+    // never stronger than Spark's residual re-application; columns absent from this file's
     // footer are excluded (can't filter bytes that don't exist)
     val present = ManifestCodec.footerFields(file, conf)
     ManifestCodec.parquetPredicate(wanted, present.contains, filters)
@@ -144,9 +149,8 @@ private[graft] object ManifestColumnar {
     val p = java.nio.file.Paths.get(file)
     val split = new FileSplit(new HadoopPath(p.toUri), 0,
       java.nio.file.Files.size(p), Array.empty[String])
-    val ctx = new TaskAttemptContextImpl(conf,
-      new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
-    // CORRECTED rebase: every file is written by this engine's codec
+    val ctx = ManifestCodec.taskContext(conf)
+    // CORRECTED rebase: every file is written by ManifestCodec.newWriter
     // with proleptic-Gregorian MICROS — there are no legacy-calendar or
     // INT96 bytes to rebase, and failing fast beats silently shifting
     val vr = new VectorizedParquetRecordReader(

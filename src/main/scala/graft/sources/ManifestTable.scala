@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** A complete DataSource V2 WRITE path with an atomic manifest-commit
   * protocol — the ACID-lite table-format pattern (the core idea behind
@@ -32,13 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     ignores everything else in the directory, so orphaned debris
   *     from failed jobs is invisible.
   *
-  * Data files are PARQUET by default ([[ManifestCodec]]: parquet-mr
-  * Group API, SNAPPY, per-file column pruning, and the full type
-  * surface — Long/Int/Double/Boolean/String plus Date, Timestamp[NTZ]
-  * and Decimal(≤18)). `.option("codec", "text")` keeps the original
-  * unit-separated text format (five primitive types); the commit
-  * protocol never looks inside a data file, so a store may mix both
-  * and every reader dispatches per file on extension. Usage:
+  * Data files are PARQUET, written through Spark's own
+  * `ParquetWriteSupport` and read through Spark's vectorized reader
+  * ([[ManifestCodec]] has the type surface, [[ManifestColumnar]] the
+  * read path); `spark.read.parquet` reads them too. The commit protocol
+  * never looks inside a data file. Usage:
   * `df.write.format("graft.sources.ManifestTable").option("path", p)
   *    .mode("append").save()` / `spark.read.format(...).load()`.
   */
@@ -64,9 +61,6 @@ class ManifestTable extends TableProvider {
 }
 
 object ManifestTable {
-  val Sep = '\u0001'
-  val NullTok = "N"
-
   /** Thrown by [[commitVersion]] when a truncating rewrite's expected
     * base version no longer matches current — a concurrent commit won
     * the race. The maintenance rewrites catch it and re-derive from the
@@ -484,7 +478,7 @@ object ManifestTable {
   }
 
   /** Header suffix persisting the table's declared WRITE LAYOUT
-    * (`\t#layout=partitionCol=p;codec=text` after the commit stamp) —
+    * (`\t#layout=bloomCols=name;partitionCol=p` after the commit stamp) —
     * what makes `CREATE TABLE … PARTITIONED BY (…)` durable: every
     * later INSERT/append, through the catalog OR the format path,
     * inherits the layout instead of silently landing unpartitioned
@@ -512,11 +506,12 @@ object ManifestTable {
     m.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";")
   }
 
+  // a retired `codec` key in an old header decodes away (ignored)
   private def decodeLayout(s: String): Map[String, String] =
-    s.split(';').iterator.filter(_.nonEmpty).map { kv =>
+    ManifestCodec.withoutCodec(s.split(';').iterator.filter(_.nonEmpty).map { kv =>
       val i = kv.indexOf('=')
       kv.substring(0, i) -> kv.substring(i + 1)
-    }.toMap
+    }.toMap)
 
   private def layoutStringOf(path: String, v: Int): Option[String] = {
     val p = dir(path).resolve(s"manifest-$v.json")
@@ -547,7 +542,7 @@ object ManifestTable {
 
   /** Thread a persisted write layout into a scratch STAGING write: every
     * layout key (`partitionCol`/`bucketCol`/`bucketCount`/`bloomCols`/
-    * `bloomBits`/`codec`) is also a write option, so rewritten files
+    * `bloomBits`) is also a write option, so rewritten files
     * carry the same first-class `@col`/`@bucket` fields and bloom bits
     * the table's own appends would — without this, every file a
     * maintenance rewrite touches silently loses partition pruning,
@@ -915,7 +910,7 @@ object ManifestTable {
     * time travel to expired versions now fails with the versions listed,
     * and a production deployment would gate this on a retention window
     * rather than "all but newest". Staged tmp files (in-flight writers)
-    * are untouched: they are not `data-*.rows` yet.
+    * are untouched: they are not `data-*` files yet.
     */
   def vacuum(path: String): (Int, Int) = vacuum(path, keepVersions = 1)
 
@@ -1105,16 +1100,15 @@ object ManifestTable {
       // SCHEMA EVOLUTION (additive, Iceberg's add-column shape): when an
       // append carries a schema and the table already has one, the
       // committed DDL becomes the WIDER of the two — provided one is a
-      // NAME+TYPE PREFIX of the other. Rows are token-positional
-      // ([[encode]]/[[decode]]), so a prefix relationship is exactly
-      // what keeps every file decodable: a wider append evolves the
+      // NAME+TYPE PREFIX of the other: a wider append evolves the
       // table (old files null-pad the new trailing columns), a
       // narrower append is an old-schema writer whose files null-pad
       // under the wide DDL, and anything else (reordered, retyped,
-      // dropped-in-the-middle) would decode old tokens under wrong
-      // fields — REJECTED loudly. Truncating writes replace the schema
-      // outright. Decided INSIDE the retry loop, so a concurrent
-      // evolution race converges on the widest committed schema.
+      // dropped-in-the-middle) would read old files under a schema
+      // they were not written with — REJECTED loudly. Truncating writes
+      // replace the schema outright. Decided INSIDE the retry loop, so a
+      // concurrent evolution race converges on the widest committed
+      // schema.
       val ddl = (schemaDdl, prevDdl) match {
         case (Some(s), Some(p)) if !replacePrev && s != p =>
           val (sp, pp) = (StructType.fromDDL(s), StructType.fromDDL(p))
@@ -1326,7 +1320,8 @@ object ManifestTable {
     * IDEMPOTENT on `batchId` — the composition of Spark's foreachBatch
     * replay contract with the store's commit protocol. A zero-byte
     * MARKER data file named deterministically from the batch id
-    * (`batch-%06d.rows` — a real, readable, 0-row data file) rides in
+    * (`batch-%06d.rows`, a zero-byte file listed with `#rows=0`, which
+    * every planner drops, so it is never opened) rides in
     * the same atomic commit as the batch's data lines, so "was this
     * batch committed?" is a manifest lookup, not a side-channel:
     *
@@ -1982,11 +1977,9 @@ object ManifestTable {
         s"alterAddColumns at $path: duplicate new column '${f.name}'")
     }
     // nullable by construction (old rows HAVE no value), and writable
-    // under the table's persisted codec — the same gate a widened
-    // append passes through
+    // — the same gate a widened append passes through
     val widened = StructType(schema.fields ++ cols.map(_.copy(nullable = true)))
-    val codec = tableLayout(path).getOrElse("codec", ManifestCodec.DefaultCodec)
-    ManifestCodec.requireWritable(codec, widened)
+    ManifestCodec.requireWritable(widened)
     commitVersion(path, lines, replacePrev = true,
       schemaDdl = Some(widened.toDDL), expectedBase = Some(v))
   }
@@ -2006,13 +1999,14 @@ object ManifestTable {
     *
     * `updates` merges into the persisted layout: `Some(v)` sets a key,
     * `None` removes it. Keys are the write options
-    * (partitionCol/bucketCol/bucketCount/bloomCols/bloomBits/codec),
+    * (partitionCol/bucketCol/bucketCount/bloomCols/bloomBits),
     * validated against the current schema exactly like a write would.
     */
   def alterSetLayout(
       path: String, updates: Map[String, Option[String]]): Int = {
     val LayoutKeys =
-      Set("partitionCol", "bucketCol", "bucketCount", "bloomCols", "bloomBits", "codec")
+      Set("partitionCol", "bucketCol", "bucketCount", "bloomCols", "bloomBits")
+    ManifestCodec.refuseCodec(updates.keys, s"alterSetLayout at $path")
     updates.keys.foreach(k => require(LayoutKeys.contains(k),
       s"alterSetLayout at $path: '$k' is not a layout property " +
         s"(${LayoutKeys.toSeq.sorted.mkString(", ")})"))
@@ -2059,10 +2053,6 @@ object ManifestTable {
     merged.get("bloomBits").foreach(b => require(
       b.toIntOption.exists(x => x >= 64 && x % 8 == 0),
       s"alterSetLayout: bloomBits must be a multiple of 8, >= 64; got $b"))
-    merged.get("codec").foreach { c =>
-      ManifestCodec.extOf(c)
-      ManifestCodec.requireWritable(c, schema)
-    }
     commitVersion(path, lines, replacePrev = true, schemaDdl = None,
       expectedBase = Some(v), layoutSpec = Some(encodeLayout(merged)))
   }
@@ -2075,8 +2065,8 @@ object ManifestTable {
   def createEmpty(
       path: String, schema: StructType,
       layout: Map[String, String] = Map.empty): Int = {
-    ManifestCodec.requireWritable(
-      layout.getOrElse("codec", ManifestCodec.DefaultCodec), schema)
+    ManifestCodec.refuseCodec(layout.keys, s"createEmpty at $path")
+    ManifestCodec.requireWritable(schema)
     commitVersion(path, Seq.empty, replacePrev = true,
       schemaDdl = Some(schema.toDDL), expectedBase = Some(0),
       layoutSpec = if (layout.isEmpty) None else Some(encodeLayout(layout)))
@@ -2207,54 +2197,6 @@ object ManifestTable {
         s"graft manifest table at $path has no committed manifest; " +
           "write to it first or declare a schema")
     }
-
-  def encode(row: InternalRow, schema: StructType): String =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      if (row.isNullAt(i)) NullTok
-      else f.dataType match {
-        case LongType => row.getLong(i).toString
-        case IntegerType => row.getInt(i).toString
-        case DoubleType => java.lang.Double.toString(row.getDouble(i))
-        case BooleanType => row.getBoolean(i).toString
-        case StringType =>
-          // 's' prefix disambiguates real strings from the null sentinel
-          // (a cell containing literally "N" must round-trip as "N") and
-          // makes the empty string a non-empty token, so trailing-empty
-          // split loss cannot occur either
-          "s" + java.net.URLEncoder.encode(row.getString(i), StandardCharsets.UTF_8)
-        case dt => throw new IllegalArgumentException(
-          s"manifest table codec does not support $dt")
-      }
-    }.mkString(Sep.toString)
-
-  /** Parse ONE field's token (positional `i` in the full schema) — the
-    * unit [[decode]] and the column-pruned reader share, so a projected
-    * read parses exactly the tokens it emits (plus delete-key probes)
-    * and nothing else.
-    */
-  def parseToken(parts: Array[String], f: StructField, i: Int): Any = {
-    val tok = if (i < parts.length) parts(i) else NullTok
-    if (tok == NullTok) null
-    else f.dataType match {
-      case LongType => tok.toLong
-      case IntegerType => tok.toInt
-      case DoubleType => java.lang.Double.parseDouble(tok)
-      case BooleanType => tok.toBoolean
-      case StringType => UTF8String.fromString(
-        java.net.URLDecoder.decode(tok.substring(1), StandardCharsets.UTF_8))
-      case dt => throw new IllegalArgumentException(s"unsupported $dt")
-    }
-  }
-
-  def splitLine(line: String): Array[String] =
-    line.split(Sep.toString, -1) // -1: keep trailing empties
-
-  def decode(line: String, schema: StructType): InternalRow = {
-    val parts = splitLine(line)
-    InternalRow.fromSeq(schema.fields.zipWithIndex.map { case (f, i) =>
-      parseToken(parts, f, i)
-    }.toSeq)
-  }
 }
 
 private[graft] class ManifestTbl(
@@ -2390,7 +2332,7 @@ private[graft] class ManifestTbl(
     // CDF internals ([[ManifestCdf]]): .option("files", "a,b") restricts
     // the scan to exactly those manifest-listed files and reads them RAW
     // (no equality-delete filtering) — file-grain access for version
-    // diffs without a second codec path
+    // diffs without a second read path
     val onlyFiles = Option(options.get("files"))
       .map(_.split(",").iterator.filter(_.nonEmpty).toSet)
     // storage-partitioned join: .option("reportPartitioning", true)
@@ -2417,12 +2359,12 @@ private[graft] class ManifestTbl(
         def opt(key: String): Option[String] =
           Option(info.options().get(key)).orElse(writeDefaults.get(key))
             .orElse(persisted.get(key))
-        // DATA-FILE CODEC: .option("codec", "text"|"parquet") — parquet
-        // (columnar, compressed, full type surface) is the default;
-        // text remains for protocol-focused tests and old stores
-        val codec = opt("codec").getOrElse(ManifestCodec.DefaultCodec)
-        ManifestCodec.extOf(codec) // validates the name
-        ManifestCodec.requireWritable(codec, info.schema())
+        // data files are parquet only: naming the retired `codec`
+        // option refuses (a persisted header key decodes away)
+        ManifestCodec.refuseCodec(
+          info.options().keySet().asScala ++ writeDefaults.keys,
+          s"manifest write to $path")
+        ManifestCodec.requireWritable(info.schema())
         // one column, or a comma list for a MULTI-DIMENSION layout
         // (date × source at 100 TB): one file per value combination,
         // one first-class `@col` field per column, each prunable alone
@@ -2480,7 +2422,7 @@ private[graft] class ManifestTbl(
         require(bloomBits >= 64 && bloomBits % 8 == 0,
           s"bloomBits must be a multiple of 8, >= 64; got $bloomBits")
         new ManifestWrite(path, info.schema(), doTruncate, pc, bloomCols,
-          bloomBits, bucketCol.map(c => (c, bucketCount)), codec,
+          bloomBits, bucketCol.map(c => (c, bucketCount)),
           spillThreshold = opt("groupThreshold").map(_.toInt),
           clusterWrite = info.options().getBoolean("clusterWrite", true))
       }
@@ -2509,10 +2451,8 @@ private[sources] class ManifestScanBuilder(
   private var accepted: Array[Filter] = Array.empty
 
   /** COLUMN PRUNING: a 2-column projection over a 50-column table
-    * parses 2 tokens per row, not 50 — for a row-oriented codec the
-    * saving is decode CPU and row width (a columnar codec would also
-    * skip the bytes; the PLUMBING — pruned ReadSchema, narrow rows,
-    * delete keys probed outside the projection — is codec-independent).
+    * decodes 2 column chunks per row group, not 50 (delete keys are
+    * requested beside the projection, never instead of it).
     */
   private var required: Option[StructType] = None
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -3147,18 +3087,7 @@ private[sources] class ManifestScan(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // whole-scan columnar decision (Spark refuses mixed partition kinds):
-    // runtime filters only SHRINK the planned set after this point, so
-    // "every planned file is parquet" can never flip underneath it
-    val ls = lines
-    // pending equality deletes no longer force the row path (round 16):
-    // the columnar reader applies them as a per-batch row-id mapping
-    // (ManifestColumnar MoR) — key columns are integral by construction,
-    // always batch-readable
-    val columnar =
-      ManifestColumnar.eligibleProjection(requiredSchema.getOrElse(schema)) &&
-        plannedEntriesOf(ls).forall(_._1._1.endsWith(ManifestCodec.ParquetExt))
+  override def createReaderFactory(): PartitionReaderFactory =
     new ManifestReaderFactory(schema,
       // a file-restricted scan (CDF version diff) reads the files RAW:
       // planInputPartitions still computes applicable deletes per file,
@@ -3169,26 +3098,16 @@ private[sources] class ManifestScan(
       // row-group skipping inside each planned file (file-restricted
       // CDF reads stay raw — they re-emit whole files by contract)
       if (onlyFiles.isDefined) Seq.empty
-      else scala.collection.immutable.ArraySeq.unsafeWrapArray(pushed ++ runtime),
-      columnar)
-  }
+      else scala.collection.immutable.ArraySeq.unsafeWrapArray(pushed ++ runtime))
 }
 
 private[sources] sealed trait ManifestPartition extends InputPartition {
   def file: String
   def applicableDeletes: Seq[String]
-  /** Streaming path's PER-BATCH columnar stamp: the micro-batch stream
-    * plans each batch's partitions together and stamps them uniformly
-    * (Spark refuses mixed kinds within one scan; batches re-plan, so
-    * the decision may differ per batch). The batch scan decides at the
-    * FACTORY instead and leaves this false.
-    */
-  def columnarOk: Boolean = false
 }
 
 private[sources] case class ManifestFilePartition(
-    file: String, applicableDeletes: Seq[String] = Seq.empty,
-    override val columnarOk: Boolean = false)
+    file: String, applicableDeletes: Seq[String] = Seq.empty)
     extends ManifestPartition
 
 /** A partition that also declares its storage partition key — what lets
@@ -3327,20 +3246,9 @@ private[sources] class ManifestMicroBatchStream(
                 ManifestTable.priorDeleteApplies(dseq, di, stats, i) => dn
         }) }
       .toSeq
-    // per-BATCH columnar stamp ([[ManifestPartition.columnarOk]]): this
-    // batch vectorizes when every planned file is parquet, none carries
-    // applicable deletes, and the (pruned) projection is eligible —
-    // uniform across the batch by construction, re-decided next batch
-    val batchColumnar =
-      ManifestColumnar.eligibleProjection(requiredSchema.getOrElse(schema)) &&
-        planned.nonEmpty &&
-        planned.forall { case (name, _) =>
-          name.endsWith(ManifestCodec.ParquetExt)
-        }
     planned.iterator.map { case (name, dels) =>
       ManifestFilePartition(
-        ManifestTable.dir(path).resolve(name).toString, dels,
-        columnarOk = batchColumnar): InputPartition
+        ManifestTable.dir(path).resolve(name).toString, dels): InputPartition
     }.toArray
   }
 
@@ -3370,100 +3278,57 @@ private[sources] class ManifestReaderFactory(
     schema: StructType,
     deleteKeysByEntry: Map[String, (String, Set[Long])] = Map.empty,
     readSchema: Option[StructType] = None,
-    filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
-    columnar: Boolean = false)
+    filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
     extends PartitionReaderFactory {
 
-  /** VECTORIZED as a WHOLE-SCAN decision ([[ManifestColumnar]] has the
-    * scope rationale): Spark `require`-fails on a scan mixing row and
-    * columnar partitions, so the SCAN decides once — columnar only when
-    * every planned file is parquet, no equality deletes are pending, and
-    * the projection is scalar — and this factory answers uniformly.
+  private val projection = readSchema.getOrElse(schema)
+
+  /** Every read with a column is a [[ManifestColumnar]] batch read —
+    * uniform across the scan, as Spark requires. A ZERO-column
+    * projection (count-style shapes) is served as rows by
+    * [[createReader]] instead.
     */
   override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar || p.asInstanceOf[ManifestPartition].columnarOk
+    projection.fields.nonEmpty
+
+  /** The partition's merge-on-read deletes as (key column, type, key
+    * set): only the delete entries SEQUENCED AFTER this data file apply
+    * to it (ManifestScan.planInputPartitions has the ordering
+    * rationale); entries on the same column union into one key set.
+    */
+  private def deletesOf(part: ManifestPartition): Seq[(String, DataType, Set[Long])] =
+    part.applicableDeletes
+      .flatMap(deleteKeysByEntry.get)
+      .groupBy(_._1)
+      .map { case (c, es) =>
+        val dt = schema.fields(schema.fieldIndex(c)).dataType
+        if (dt != LongType && dt != IntegerType) throw new IllegalStateException(
+          s"manifest delete entry on non-integral column $c: $dt")
+        (c, dt, es.iterator.flatMap(_._2).toSet)
+      }.toSeq
 
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val part = p.asInstanceOf[ManifestPartition]
-    // merge-on-read on the batch: same per-partition delete resolution
-    // as the row reader below, served to the columnar reader as
-    // (key column, type, key set) specs
-    val deletes = part.applicableDeletes
-      .flatMap(deleteKeysByEntry.get)
-      .groupBy(_._1)
-      .map { case (c, es) =>
-        (c, schema.fields(schema.fieldIndex(c)).dataType,
-          es.iterator.flatMap(_._2).toSet)
-      }.toSeq
-    ManifestColumnar.open(part.file, readSchema.getOrElse(schema), filters,
-      deletes, schema)
+    ManifestColumnar.open(part.file, projection, filters, deletesOf(part), schema)
   }
 
+  /** A zero-column projection: the footer row count when no delete
+    * applies, else the delete-key columns read through the batch reader
+    * so only live rows are counted.
+    */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ManifestPartition]
-    val file = part.file
-    // COLUMN PRUNING: emit only the projected fields. The codec reader
-    // materializes `wanted` = projection ++ delete-key columns, so
-    // pruning the key column out of the projection can never skip
-    // merge-on-read filtering (for text, only wanted tokens are parsed;
-    // for parquet, only wanted columns are read from the file)
-    val projSchema = readSchema.getOrElse(schema)
-    // only the delete entries SEQUENCED AFTER this data file apply to it
-    // (ManifestScan.planInputPartitions has the ordering rationale);
-    // entries on the same column union into one key set
-    val byCol: Map[String, Set[Long]] = part.applicableDeletes
-      .flatMap(deleteKeysByEntry.get)
-      .groupBy(_._1)
-      .map { case (c, es) => c -> es.iterator.flatMap(_._2).toSet }
-    byCol.keys.foreach { colName =>
-      schema.fields(schema.fieldIndex(colName)).dataType match {
-        case LongType | IntegerType => ()
-        case dt => throw new IllegalStateException(
-          s"manifest delete entry on non-integral column $colName: $dt")
-      }
-    }
-    val extra = byCol.keys.toSeq.sorted
-      .filterNot(c => projSchema.fieldNames.contains(c))
-      .map(c => schema.fields(schema.fieldIndex(c)))
-    val wanted = StructType(projSchema.fields ++ extra)
-    // (wanted index, isLong, deleted keys) per delete column — a row is
-    // dead when ANY delete column matches; a NULL key never matches
-    // (equality deletes are null-rejecting, like the zone-map filters)
-    val dels: Array[(Int, Boolean, Set[Long])] =
-      byCol.iterator.map { case (colName, keys) =>
-        val i = wanted.fieldIndex(colName)
-        (i, wanted.fields(i).dataType == LongType, keys)
-      }.toArray
-    val rdr = ManifestCodec.openReader(file, schema, wanted, filters)
-    val k = projSchema.fields.length
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      private def deleted(r: InternalRow): Boolean = {
-        var j = 0
-        while (j < dels.length) {
-          val (i, isLong, keys) = dels(j)
-          if (!r.isNullAt(i) &&
-            keys.contains(if (isLong) r.getLong(i) else r.getInt(i).toLong))
-            return true
-          j += 1
-        }
-        false
-      }
-      override def next(): Boolean = {
-        while (rdr.next()) {
-          val r = rdr.get()
-          if (!deleted(r)) {
-            row = if (extra.isEmpty) r
-              else InternalRow.fromSeq(Array.tabulate[Any](k)(j =>
-                r.get(j, wanted.fields(j).dataType)).toSeq)
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = rdr.close()
+    val deletes = deletesOf(part)
+    if (deletes.nonEmpty)
+      ManifestColumnar.rows(
+        ManifestColumnar.open(part.file, projection, filters, deletes, schema))
+    else new PartitionReader[InternalRow] {
+      private var remaining = ManifestCodec.footerRowCount(part.file)
+      override def next(): Boolean =
+        if (remaining > 0) { remaining -= 1; true } else false
+      override def get(): InternalRow = InternalRow.empty
+      override def close(): Unit = ()
     }
   }
 }
@@ -3474,7 +3339,6 @@ private[sources] class ManifestWrite(
     bloomCols: Seq[String] = Seq.empty,
     bloomBits: Int = ManifestTable.DefaultBloomBits,
     bucketSpec: Option[(String, Int)] = None,
-    codec: String = ManifestCodec.DefaultCodec,
     // `.option("groupThreshold", n)`: per-COMMIT two-level spill point,
     // overriding the process default — a writer that knows its commit
     // cadence tunes the fold without mutating global state under
@@ -3520,7 +3384,7 @@ private[sources] class ManifestWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new ManifestWriterFactory(path, schema, partitionCol, bloomCols, bloomBits,
-      bucketSpec, codec)
+      bucketSpec)
 
   /** Driver-side atomic commit with optimistic concurrency: next
     * manifest = previous files ∪ this job's files, staged to a temp name
@@ -3592,13 +3456,12 @@ private[sources] case class StagedFiles(files: Seq[StagedFile])
 private[sources] class StagedFileWriter(
     d: Path, schema: StructType, partitionId: Int, taskId: Long,
     bloomCols: Seq[String] = Seq.empty,
-    bloomBits: Int = ManifestTable.DefaultBloomBits,
-    codec: String = ManifestCodec.DefaultCodec) {
+    bloomBits: Int = ManifestTable.DefaultBloomBits) {
   val name = s"data-$partitionId-$taskId-" +
-    s"${java.util.UUID.randomUUID().toString.take(8)}${ManifestCodec.extOf(codec)}"
+    s"${java.util.UUID.randomUUID().toString.take(8)}${ManifestCodec.ParquetExt}"
   // rows stream straight to the staged file — O(1) task memory; the
   // file stays invisible until the driver's manifest commit lists it
-  private val out = ManifestCodec.newWriter(d.resolve(name), schema, codec)
+  private val out = ManifestCodec.newWriter(d.resolve(name), schema)
   private var n = 0L
   // zone-map accumulators for every long-ordered column — integrals,
   // dates (epoch days), timestamps (micros), decimals (unscaled)
@@ -3688,8 +3551,7 @@ private[sources] class ManifestWriterFactory(
     path: String, schema: StructType, partitionCol: Option[String] = None,
     bloomCols: Seq[String] = Seq.empty,
     bloomBits: Int = ManifestTable.DefaultBloomBits,
-    bucketSpec: Option[(String, Int)] = None,
-    codec: String = ManifestCodec.DefaultCodec)
+    bucketSpec: Option[(String, Int)] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val d = ManifestTable.dir(path)
@@ -3715,7 +3577,7 @@ private[sources] class ManifestWriterFactory(
               if (isLong) row.getLong(i) else row.getInt(i).toLong, n))
           open.getOrElseUpdate(key,
             new StagedFileWriter(d, schema, partitionId, taskId,
-              bloomCols, bloomBits, codec))
+              bloomCols, bloomBits))
             .write(row)
         }
         override def commit(): WriterCommitMessage =
@@ -3731,7 +3593,7 @@ private[sources] class ManifestWriterFactory(
       case None =>
         new DataWriter[InternalRow] {
           private val w = new StagedFileWriter(d, schema, partitionId, taskId,
-            bloomCols, bloomBits, codec)
+            bloomCols, bloomBits)
           override def write(row: InternalRow): Unit = w.write(row)
           override def commit(): WriterCommitMessage = w.finish(Seq.empty)
           override def abort(): Unit = w.abort()
@@ -3766,7 +3628,7 @@ private[sources] class ManifestWriterFactory(
             }
             open.getOrElseUpdate(key,
               new StagedFileWriter(d, schema, partitionId, taskId,
-                bloomCols, bloomBits, codec))
+                bloomCols, bloomBits))
               .write(row)
           }
           override def commit(): WriterCommitMessage =

@@ -8,19 +8,21 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.ManifestCodec
+import graft.sources.{ManifestCodec, ManifestColumnar}
 
-/** ScalaCheck laws for the manifest data-file codecs — randomized
-  * coverage over schemas, values (nulls, hostile strings, extreme
-  * numerics), projections, and pushed filters that the example-based
-  * specs can't give:
+/** ScalaCheck laws for the manifest store's data files, written by
+  * `ManifestCodec.newWriter` and read by `ManifestColumnar.open` —
+  * randomized coverage over schemas, values (nulls, hostile strings,
+  * extreme numerics), projections, and pushed filters that the
+  * example-based specs can't give:
   *
-  *   - any row set round-trips BYTE-FAITHFULLY through either codec;
+  *   - any row set round-trips BYTE-FAITHFULLY;
   *   - any projection returns exactly the projected originals;
-  *   - a pushed filter returns exactly the rows a null-rejecting
-  *     evaluation of the same predicate keeps (pushdown may never be
-  *     stronger OR weaker than the semantics it mirrors, because Spark
-  *     re-applies the residual only to what the scan emits).
+  *   - a pushed filter returns either every row (declined, or the row
+  *     group kept) or exactly the rows a null-rejecting evaluation of
+  *     the same predicate keeps (pushdown may never be stronger than the
+  *     semantics it mirrors, because Spark re-applies the residual only
+  *     to what the scan emits).
   */
 object ManifestCodecProps extends Properties("ManifestCodec") {
 
@@ -144,7 +146,7 @@ object ManifestCodecProps extends Properties("ManifestCodec") {
     case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
     case (x: org.apache.spark.sql.catalyst.util.MapData,
         y: org.apache.spark.sql.catalyst.util.MapData) =>
-      // entry order round-trips (the codec writes and reads in order)
+      // entry order round-trips (entries are written and read in order)
       val mt = dt.asInstanceOf[MapType]
       cellEq(ArrayType(mt.keyType), x.keyArray(), y.keyArray()) &&
         cellEq(ArrayType(mt.valueType), x.valueArray(), y.valueArray())
@@ -165,20 +167,22 @@ object ManifestCodecProps extends Properties("ManifestCodec") {
     case (x, y) => x == y
   }
 
-  private def roundTrip(codec: String, schema: StructType,
+  private def roundTrip(schema: StructType,
       rows: Seq[Seq[Any]], wanted: StructType,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
       : Seq[Seq[Any]] = {
     val d: Path = Files.createTempDirectory("graft_codec_props")
-    val file = d.resolve(s"data-props${ManifestCodec.extOf(codec)}")
+    val file = d.resolve(s"data-props${ManifestCodec.ParquetExt}")
     try {
-      val w = ManifestCodec.newWriter(file, schema, codec)
+      val w = ManifestCodec.newWriter(file, schema)
       try rows.foreach(r => w.write(InternalRow.fromSeq(r))) finally w.close()
-      val r = ManifestCodec.openReader(file.toString, schema, wanted, filters)
+      val r = ManifestColumnar.rows(
+        ManifestColumnar.open(file.toString, wanted, filters))
       val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
       try {
         while (r.next()) {
-          val row = r.get()
+          // a row is a view into the reader's reused vectors: copy it
+          val row = r.get().copy()
           out += wanted.fields.zipWithIndex.map { case (f, i) =>
             row.get(i, f.dataType)
           }.toSeq
@@ -204,35 +208,19 @@ object ManifestCodecProps extends Properties("ManifestCodec") {
 
   property("parquet round-trips any row set byte-faithfully") =
     forAll(schemaGen.flatMap(s => rowsGen(s).map(s -> _))) { case (schema, rows) =>
-      rowsEq(schema, roundTrip("parquet", schema, rows, schema), rows)
+      rowsEq(schema, roundTrip(schema, rows, schema), rows)
     }
 
-  property("text round-trips any 5-primitive-type row set byte-faithfully") = {
-    val textSchemaGen = for {
-      n <- Gen.chooseNum(1, 5)
-      ts <- Gen.listOfN(n, Gen.oneOf[DataType](
-        LongType, IntegerType, DoubleType, BooleanType, StringType))
-    } yield StructType(ts.zipWithIndex.map { case (t, i) =>
-      StructField(s"c$i", t, nullable = true)
-    })
-    forAll(textSchemaGen.flatMap(s => rowsGen(s).map(s -> _))) { case (schema, rows) =>
-      rowsEq(schema, roundTrip("text", schema, rows, schema), rows)
-    }
-  }
-
-  property("any projection returns exactly the projected originals (both codecs)") =
+  property("any projection returns exactly the projected originals") =
     forAll(for {
       schema <- schemaGen
       rows <- rowsGen(schema)
       keep <- Gen.someOf(schema.fields.indices)
-      codec <- Gen.oneOf("parquet", "text")
-      if codec == "parquet" || schema.fields.forall(f =>
-        ManifestCodec.supportedType("text", f.dataType))
-    } yield (schema, rows, keep.toSeq.sorted, codec)) {
-      case (schema, rows, keep, codec) =>
+    } yield (schema, rows, keep.toSeq.sorted)) {
+      case (schema, rows, keep) =>
         val wanted = StructType(keep.map(schema.fields))
         val expected = rows.map(r => keep.map(r))
-        rowsEq(wanted, roundTrip(codec, schema, rows, wanted), expected)
+        rowsEq(wanted, roundTrip(schema, rows, wanted), expected)
     }
 
   // ---- pushed-filter equivalence --------------------------------------
@@ -280,11 +268,13 @@ object ManifestCodecProps extends Properties("ManifestCodec") {
       rows <- rowsGen(schema)
       fe <- filterGen(schema)
     } yield (schema, rows, fe)) { case (schema, rows, (flt, eval)) =>
-      val got = roundTrip("parquet", schema, rows, schema, Seq(flt))
+      val got = roundTrip(schema, rows, schema, Seq(flt))
       val expected = rows.filter(eval)
       // the pushdown may DECLINE (untranslatable type/value combo, e.g.
-      // decimal or double ranges) — then everything comes back; it may
-      // never disagree with the evaluation when it does fire
+      // decimal or double ranges) or keep the file's one row group (the
+      // vectorized reader skips whole row groups; it never filters
+      // records) — then everything comes back; a skipped group must hold
+      // no match
       rowsEq(schema, got, expected) || rowsEq(schema, got, rows)
     }
 }

@@ -8,14 +8,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ManifestCodec, ManifestTable}
+import graft.sources.ManifestTable
 
-/** The manifest store's parquet data-file codec (the round-14 default):
-  * full-type round trips, per-file codec dispatch in MIXED stores (old
-  * text files + new parquet appends under one manifest), the extended
-  * zone maps (date/timestamp/decimal order as longs → file skipping on
-  * a DATE works like on a BIGINT), and the text codec's loud refusal of
-  * the types it cannot hold.
+/** The manifest store's parquet data files: full-type round trips, the
+  * extended zone maps (date/timestamp/decimal order as longs → file
+  * skipping on a DATE works like on a BIGINT), and the retired text
+  * codec's loud refusals — naming `codec` in a write or layout, and
+  * scanning a manifest that still lists a `.rows` data file.
   */
 class ManifestCodecSpec extends AnyFunSuite with SparkSessionFixture {
 
@@ -52,19 +51,28 @@ class ManifestCodecSpec extends AnyFunSuite with SparkSessionFixture {
       df.orderBy("id").collect().map(_.toString).toSeq)
   }
 
-  test("a mixed store reads per file: text v1 + parquet v2 under one manifest") {
+  test("a manifest listing a .rows data file fails the scan with its name") {
     val dir = freshDir()
-    Seq((1L, "old")).toDF("id", "s").coalesce(1)
-      .write.format(Fmt).option("path", dir)
-      .option("codec", "text").mode("append").save()
     Seq((2L, "new")).toDF("id", "s").coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
-    val names = dataNames(dir)
-    assert(names.exists(_.endsWith(".rows")) && names.exists(_.endsWith(".parquet")),
-      s"expected one text and one parquet file, got $names")
-    assert(spark.read.format(Fmt).option("path", dir).load()
-      .orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "old"), (2L, "new")))
+    // an old store's text file, listed by a later manifest as the text
+    // codec's writes were: a name plus its row count
+    val d = java.nio.file.Paths.get(dir)
+    val legacy = "data-0-0-0000aaaa.rows"
+    Files.write(d.resolve(legacy), java.util.List.of("1\u0001sold"))
+    val v1 = Files.readAllLines(d.resolve("manifest-1.json")).asScala
+    Files.write(d.resolve("manifest-2.json"),
+      (v1 :+ s"$legacy\t${ManifestTable.RowStatKey}=1:10").asJava)
+    val e = intercept[Exception] {
+      spark.read.format(Fmt).option("path", dir).load().collect()
+    }
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(chain(e).exists(m => m.contains(legacy) && m.contains("parquet only")),
+      s"the scan must fail naming $legacy, got: ${chain(e)}")
+    // the version before it still reads
+    assert(spark.read.format(Fmt).option("path", dir).option("version", "1")
+      .load().as[(Long, String)].collect().toSeq == Seq((2L, "new")))
   }
 
   test("schema evolution null-pads old parquet files under the widened DDL") {
@@ -179,21 +187,26 @@ class ManifestCodecSpec extends AnyFunSuite with SparkSessionFixture {
     assert(spark.read.format(Fmt).option("path", dir).load().count() == 3L)
   }
 
-  test("the text codec refuses temporal/decimal columns loudly") {
+  test("naming codec refuses in a write, a create and a layout change") {
     val dir = freshDir()
     val df = Seq((1L, Date.valueOf("1996-01-01"))).toDF("id", "d")
-    val e = intercept[Exception] {
-      df.write.format(Fmt).option("path", dir)
-        .option("codec", "text").mode("append").save()
+    // `parquet` refuses too: `codec` is not a setting any more
+    Seq("text", "parquet").foreach { c =>
+      val e = intercept[Exception] {
+        df.write.format(Fmt).option("path", dir)
+          .option("codec", c).mode("append").save()
+      }
+      assert(e.getMessage.contains("parquet only"), e.getMessage)
     }
-    assert(e.getMessage.contains("does not support column"))
-    // binary/array/float refuse for text too, with the codec hint
-    val e2 = intercept[Exception] {
-      Seq((1L, Array[Byte](1, 2))).toDF("id", "b")
-        .write.format(Fmt).option("path", dir)
-        .option("codec", "text").mode("append").save()
-    }
-    assert(e2.getMessage.contains("float/binary/array"))
+    assert(ManifestTable.currentManifest(dir).isEmpty, "nothing committed")
+    val e2 = intercept[IllegalArgumentException](
+      ManifestTable.createEmpty(dir, df.schema, Map("codec" -> "text")))
+    assert(e2.getMessage.contains("parquet only"))
+    df.write.format(Fmt).option("path", dir).mode("append").save()
+    val e3 = intercept[IllegalArgumentException](
+      ManifestTable.alterSetLayout(dir, Map("codec" -> Some("text"))))
+    assert(e3.getMessage.contains("parquet only"))
+    assert(dataNames(dir).forall(_.endsWith(".parquet")))
   }
 
   test("decimal beyond precision 18 round-trips through FIXED_LEN_BYTE_ARRAY") {

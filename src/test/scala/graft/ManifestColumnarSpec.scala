@@ -6,13 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ManifestCodec, ManifestTable}
+import graft.sources.ManifestTable
 
-/** The vectorized (ColumnarBatch) read path for parquet data files
-  * ([[graft.sources.ManifestColumnar]]): the scan must go columnar
-  * exactly when it's safe (parquet files, no applicable deletes,
-  * scalar/array projection), produce values identical to the row path across the full
-  * type surface, and fall back — never break — everywhere else.
+/** The vectorized (ColumnarBatch) read path for the store's parquet
+  * data files ([[graft.sources.ManifestColumnar]]): every scan with a
+  * column — batch or streaming, with or without standing deletes, over
+  * scalars and nested columns alike — plans columnar and returns exact
+  * values across the full type surface.
   */
 class ManifestColumnarSpec extends AnyFunSuite with SparkSessionFixture {
 
@@ -71,30 +71,20 @@ class ManifestColumnarSpec extends AnyFunSuite with SparkSessionFixture {
       .filter(col("id") % 97 === 13L).count())
   }
 
-  test("fallbacks: text files read by row; deletes stay columnar; arrays vectorize") {
-    // text codec → row path
-    val t1 = freshDir()
-    spark.range(0, 10).select(col("id")).coalesce(1)
-      .write.format(Fmt).option("path", t1).option("codec", "text")
-      .mode("append").save()
-    val textScan = spark.read.format(Fmt).option("path", t1).load()
-    assert(!isColumnar(textScan))
-    assert(textScan.count() == 10L)
-
-    // a MIXED store (text v1 + parquet v2) falls back as a whole
-    spark.range(10, 20).select(col("id"))
-      .write.format(Fmt).option("path", t1).mode("append").save()
-    val mixed = spark.read.format(Fmt).option("path", t1).load()
-    assert(!isColumnar(mixed))
-    assert(mixed.count() == 20L)
-
-    // pending equality deletes STAY columnar (round 16 — merge-on-read
-    // applies as a per-batch row-id mapping, ManifestColumnar); the
-    // filter is value-exact including a projection that EXCLUDES the
-    // key column (the reader requests it alongside)
+  test("deletes stay columnar and exact; arrays vectorize") {
+    // pending equality deletes STAY columnar (merge-on-read applies as a
+    // per-batch row-id mapping, ManifestColumnar); the filter is
+    // value-exact including a projection that EXCLUDES the key column
+    // (the reader requests it alongside)
     val t2 = freshDir()
     spark.range(0, 100).select(col("id"), (col("id") * 2).as("v"))
       .coalesce(1).write.format(Fmt).option("path", t2).mode("append").save()
+    // a delete matching nothing leaves count and sum unchanged
+    ManifestTable.deleteKeys(t2, "id", Seq(-1L))
+    val noMatch = spark.read.format(Fmt).option("path", t2).load()
+    assert(isColumnar(noMatch))
+    assert(noMatch.agg(count(lit(1)), sum("id")).as[(Long, Long)].head() ==
+      ((100L, (0L until 100L).sum)))
     ManifestTable.deleteKeys(t2, "id", Seq(5L, 6L))
     val withDel = spark.read.format(Fmt).option("path", t2).load()
     assert(isColumnar(withDel),
@@ -152,30 +142,34 @@ class ManifestColumnarSpec extends AnyFunSuite with SparkSessionFixture {
       .na.drop().as[Double].collect().sorted.toSeq == Seq(0.0, 5.0))
   }
 
-  test("the streaming source vectorizes per batch; text appends fall back per batch") {
-    import org.apache.spark.sql.streaming.Trigger
+  test("every micro-batch of a marker-carrying sink store vectorizes") {
     val dir = freshDir()
-    spark.range(0, 100).select(col("id"), (col("id") * 2).as("v")).coalesce(2)
-      .write.format(Fmt).option("path", dir).mode("append").save()
-    // parquet-only snapshot batch: stamped columnar — values exact
+    // a sink store: every version carries a `batch-*.rows` marker beside
+    // its parquet data file
+    def commit(b: Int): Unit = ManifestTable.commitBatch(spark, dir, b.toLong,
+      spark.range(b * 10L, b * 10L + 10).select(col("id"), (col("id") * 2).as("v"))
+        .coalesce(1))
+    commit(0)
     val q = spark.readStream.format(Fmt).option("path", dir).load()
       .select("v")
-      .writeStream.format("memory").queryName("col_stream")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .writeStream.format("memory").queryName("col_stream").start()
+    try {
+      // one micro-batch per commit; each batch's executed plan checked
+      (0 until 3).foreach { b =>
+        if (b > 0) commit(b)
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[
+          org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan
+        assert(plan.toString.contains("ColumnarToRow"),
+          s"micro-batch for commit $b must plan columnar:\n$plan")
+      }
+    } finally q.stop()
+    val markers = ManifestTable.dataEntries(ManifestTable.currentManifest(dir).get._2)
+      .map(ManifestTable.parseEntry(_)._1).filter(_.startsWith("batch-"))
+    assert(markers.size == 3, s"expected 3 markers, got $markers")
     assert(spark.table("col_stream").as[Long].collect().sorted.toSeq ==
-      (0L until 100L).map(_ * 2))
-    // a text append makes its OWN batch fall back (per-batch stamp) —
-    // a fresh stream over the mixed store still reads exactly
-    spark.range(100, 110).select(col("id"), (col("id") * 2).as("v")).coalesce(1)
-      .write.format(Fmt).option("path", dir).option("codec", "text")
-      .mode("append").save()
-    val q2 = spark.readStream.format(Fmt).option("path", dir).load()
-      .select("v")
-      .writeStream.format("memory").queryName("col_stream2")
-      .trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination()
-    assert(spark.table("col_stream2").count() == 110L)
+      (0L until 30L).map(_ * 2))
   }
 
   test("schema evolution: columnar scans null-pad columns old files lack") {
@@ -191,13 +185,6 @@ class ManifestColumnarSpec extends AnyFunSuite with SparkSessionFixture {
     assert(t.agg(sum("extra")).as[Long].head() == (50L until 60L).map(_ * 3).sum)
   }
 
-  /** Measurement note, not a gate: on this spec's 2M×4-column synthetic,
-    * the columnar path has measured ~2–6× the Group-API row path's scan
-    * throughput (JIT- and page-cache-dependent). The assertion below
-    * only pins that BOTH paths return identical results — the ratio is
-    * printed for the curious and recorded in STATUS.md, because a timing
-    * assertion on shared CI hardware is a flake generator.
-    */
   test("nested struct/map columns vectorize (round 16)") {
     val dir = freshDir()
     val df = spark.sql("""
@@ -237,27 +224,5 @@ class ManifestColumnarSpec extends AnyFunSuite with SparkSessionFixture {
       .withColumn("props", map_entries(col("props")))
     assert(cmp(scan).exceptAll(cmp(df)).isEmpty &&
       cmp(df).exceptAll(cmp(scan)).isEmpty)
-  }
-
-  test("columnar and row paths agree on a 2M-row scan (throughput printed)") {
-    val dir = freshDir()
-    spark.range(0, 2000000).select(
-      col("id"), (col("id") % 1000).as("k"),
-      (col("id") * 1.5).as("x"), concat(lit("v"), col("id") % 100).as("s"))
-      .coalesce(2).write.format(Fmt).option("path", dir).mode("append").save()
-
-    def scanAgg(): (Long, Long) = {
-      val t = spark.read.format(Fmt).option("path", dir).load()
-      val r = t.agg(count(lit(1)), sum(col("k"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    // columnar (default)
-    val c0 = System.nanoTime(); val resC = scanAgg(); val cMs = (System.nanoTime() - c0) / 1e6
-    // row path, forced by projecting the (ineligible) full row through a
-    // delete: simplest honest forcing is a pending delete on a fresh key
-    ManifestTable.deleteKeys(dir, "id", Seq(-1L)) // matches nothing; forces row path
-    val r0 = System.nanoTime(); val resR = scanAgg(); val rMs = (System.nanoTime() - r0) / 1e6
-    assert(resC == resR, s"columnar $resC != row $resR")
-    info(f"columnar ${cMs}%.0f ms vs row ${rMs}%.0f ms (x${rMs / cMs}%.1f)")
   }
 }

@@ -89,23 +89,23 @@ class ManifestCtasSpec extends AnyFunSuite with SparkSessionFixture {
     assert(probe.rdd.getNumPartitions < back.rdd.getNumPartitions)
   }
 
-  test("TBLPROPERTIES codec=text writes the text layout; temporal columns then refuse") {
+  test("TBLPROPERTIES codec refuses: the store writes parquet only") {
     ensureCatalog()
     val dir = freshDir()
     spark.range(0, 5).select(col("id"), lit("x").as("s"))
       .createOrReplaceTempView("ctas_tsrc")
-    spark.sql(
-      s"CREATE TABLE graft_cat.`$dir` TBLPROPERTIES ('codec'='text') " +
-        "AS SELECT id, s FROM ctas_tsrc")
+    Seq("text", "parquet").foreach { c =>
+      val e = intercept[Exception](spark.sql(
+        s"CREATE TABLE graft_cat.`$dir` TBLPROPERTIES ('codec'='$c') " +
+          "AS SELECT id, s FROM ctas_tsrc"))
+      assert(e.getMessage.contains("parquet only"), e.getMessage)
+      assert(ManifestTable.currentManifest(dir).isEmpty, "nothing committed")
+    }
+    // without it, the CTAS lands parquet files
+    spark.sql(s"CREATE TABLE graft_cat.`$dir` AS SELECT id, s FROM ctas_tsrc")
     val names = ManifestTable.dataEntries(ManifestTable.currentManifest(dir).get._2)
       .map(ManifestTable.parseEntry(_)._1)
-    assert(names.nonEmpty && names.forall(_.endsWith(".rows")), s"got $names")
-    // and a text-codec table with a DATE column refuses at create
-    val dir2 = freshDir()
-    val e = intercept[Exception](spark.sql(
-      s"CREATE TABLE graft_cat.`$dir2` (id BIGINT, d DATE) " +
-        "TBLPROPERTIES ('codec'='text')"))
-    assert(e.getMessage.contains("does not support column"))
+    assert(names.nonEmpty && names.forall(_.endsWith(".parquet")), s"got $names")
   }
 
   test("a shallow clone inherits the persisted layout; its inserts stay partitioned") {

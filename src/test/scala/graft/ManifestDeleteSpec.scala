@@ -80,14 +80,14 @@ class ManifestDeleteSpec extends AnyFunSuite with SparkSessionFixture {
     assert(readIds(dir) == before)
     val lines = manifestLines(dir)
     assert(ManifestTable.deleteEntriesOf(lines).isEmpty)
-    // decode every line of every referenced data file: ids 2 and 13 must
+    // decode every row of every referenced data file: ids 2 and 13 must
     // be absent from the bytes, not just filtered at read time
     val schema = ManifestTable.readSchemaFromManifest(dir)
     val idsInFiles = ManifestTable.dataEntries(lines)
       .map(l => ManifestTable.parseEntry(l)._1)
       .flatMap { f =>
-        val r = graft.sources.ManifestCodec.openReader(
-          Paths.get(dir).resolve(f).toString, schema, schema)
+        val r = graft.sources.ManifestColumnar.rows(graft.sources.ManifestColumnar
+          .open(Paths.get(dir).resolve(f).toString, schema, Seq.empty))
         val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
         try { while (r.next()) buf += r.get().getLong(0) } finally r.close()
         buf.toSeq

@@ -223,12 +223,18 @@ class ManifestLayoutMaintenanceSpec extends AnyFunSuite with SparkSessionFixture
     }
   }
 
-  test("compaction keeps bloom pruning and the persisted codec") {
+  test("compaction keeps blooms; a persisted codec key is ignored") {
     val dir = freshDir()
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("name", StringType)))
-    ManifestTable.createEmpty(dir, schema,
-      Map("bloomCols" -> "name", "codec" -> "text"))
+    ManifestTable.createEmpty(dir, schema, Map("bloomCols" -> "name"))
+    // an old store's header persisting the retired text codec
+    val m1 = java.nio.file.Paths.get(dir).resolve("manifest-1.json")
+    val header = Files.readAllLines(m1)
+    assert(header.get(0).endsWith("#layout=bloomCols=name"), header.get(0))
+    header.set(0, header.get(0) + ";codec=text")
+    Files.write(m1, header)
+    assert(ManifestTable.tableLayout(dir) == Map("bloomCols" -> "name"))
     spark.range(0, 500)
       .select(col("id").as("k"), concat(lit("n"), col("id")).as("name"))
       .repartition(3)
@@ -240,9 +246,9 @@ class ManifestLayoutMaintenanceSpec extends AnyFunSuite with SparkSessionFixture
 
     assert(ManifestTable.compactSmallFiles(spark, dir, 100000L, 2) > 0)
     val lines = dataLines(dir)
-    // the persisted text codec survives the rewrite (no silent re-encode)
-    assert(lines.forall(l => ManifestTable.parseEntry(l)._1.endsWith(".rows")),
-      s"packed files must keep the table's codec:\n${lines.mkString("\n")}")
+    // appends and the rewrite write parquet whatever the header said
+    assert(lines.forall(l => ManifestTable.parseEntry(l)._1.endsWith(".parquet")),
+      s"packed files must be parquet:\n${lines.mkString("\n")}")
     val t = read(dir)
     val all = planned(t)
     assert(all == 2)

@@ -314,15 +314,16 @@ class ManifestSqlSpec extends AnyFunSuite with SparkSessionFixture {
     rejects(s"ALTER TABLE graft_cat.`$dir` ADD COLUMN x BIGINT AFTER k", "trailing-only")
     rejects(s"ALTER TABLE graft_cat.`$dir` ADD COLUMN x BIGINT NOT NULL", "nullable")
     rejects(s"ALTER TABLE graft_cat.`$dir` ADD COLUMN k BIGINT", "already exists")
-    // an array column CAN be added (the codec holds it); a text-codec
-    // table refuses an array add at the same gate as a widened append
+    // an array column CAN be added (the parquet files hold it); the
+    // retired codec property refuses at create and at a layout change
     spark.sql(s"ALTER TABLE graft_cat.`$dir` ADD COLUMN emb ARRAY<FLOAT>")
     assert(spark.table(s"graft_cat.`$dir`").schema("emb").dataType ==
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, true))
     val tdir = java.nio.file.Files
       .createTempDirectory("graft_sql_alter_text").toString + "/t"
-    spark.sql(s"CREATE TABLE graft_cat.`$tdir` (k BIGINT) TBLPROPERTIES ('codec'='text')")
-    rejects(s"ALTER TABLE graft_cat.`$tdir` ADD COLUMN emb ARRAY<FLOAT>",
-      "does not support column")
+    rejects(s"CREATE TABLE graft_cat.`$tdir` (k BIGINT) TBLPROPERTIES ('codec'='text')",
+      "parquet only")
+    rejects(s"ALTER TABLE graft_cat.`$dir` SET TBLPROPERTIES ('codec'='text')",
+      "parquet only")
   }
 }
