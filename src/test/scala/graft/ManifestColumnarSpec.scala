@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.ManifestTable
+import graft.sources.{ManifestColumnar, ManifestTable}
 
 /** The vectorized (ColumnarBatch) read path for the store's parquet
   * data files ([[graft.sources.ManifestColumnar]]): every scan with a
@@ -224,5 +224,48 @@ class ManifestColumnarSpec extends AnyFunSuite with SparkSessionFixture {
       .withColumn("props", map_entries(col("props")))
     assert(cmp(scan).exceptAll(cmp(df)).isEmpty &&
       cmp(df).exceptAll(cmp(scan)).isEmpty)
+  }
+
+  /** Measurement note, not a gate: the timings are printed, not
+    * asserted, because a timing assertion on shared CI hardware is a
+    * flake generator. The assertions pin that the vectorized scan and
+    * the row reads (`ManifestColumnar.rows`, the path CDF reads and
+    * zero-column scans under deletes take) return identical results.
+    */
+  test("columnar and row paths agree on a 2M-row scan (throughput printed)") {
+    val dir = freshDir()
+    spark.range(0, 2000000).select(
+      col("id"), (col("id") % 1000).as("k"),
+      (col("id") * 1.5).as("x"), concat(lit("v"), col("id") % 100).as("s"))
+      .coalesce(2).write.format(Fmt).option("path", dir).mode("append").save()
+    // a pending delete matching nothing keeps merge-on-read live on both paths
+    ManifestTable.deleteKeys(dir, "id", Seq(-1L))
+    val t = spark.read.format(Fmt).option("path", dir).load()
+
+    val c0 = System.nanoTime()
+    val agg = t.agg(count(lit(1)), sum(col("k"))).head()
+    val resC = (agg.getLong(0), agg.getLong(1))
+    val cMs = (System.nanoTime() - c0) / 1e6
+    assert(isColumnar(t.select("k")))
+
+    // row path: every data file read row by row through the batch reader
+    val files = ManifestTable.dataEntries(ManifestTable.currentManifest(dir).get._2)
+      .map(l => java.nio.file.Paths.get(dir).resolve(ManifestTable.parseEntry(l)._1).toString)
+    assert(files.size == 2, s"got $files")
+    val k = t.schema.fieldIndex("k")
+    val r0 = System.nanoTime()
+    var n = 0L; var sumK = 0L
+    files.foreach { f =>
+      val rdr = ManifestColumnar.rows(ManifestColumnar.open(f, t.schema, Seq.empty))
+      try while (rdr.next()) { n += 1; sumK += rdr.get().getLong(k) }
+      finally rdr.close()
+    }
+    val rMs = (System.nanoTime() - r0) / 1e6
+    val expected = (2000000L, (0L until 2000000L).map(_ % 1000).sum)
+    assert(resC == expected, s"columnar $resC != $expected")
+    assert((n, sumK) == resC, s"row ${(n, sumK)} != columnar $resC")
+    // a zero-column count under the pending delete reads rows too
+    assert(t.count() == 2000000L)
+    info(f"columnar ${cMs}%.0f ms vs row ${rMs}%.0f ms (x${rMs / cMs}%.1f)")
   }
 }
