@@ -1547,7 +1547,8 @@ object Feeds {
   }
 
   /** ADDITIVE SCHEMA EVOLUTION on the manifest table driven end-to-end —
-    * Iceberg's add-column shape on the token-positional row store:
+    * Iceberg's add-column shape (each file's columns a prefix of the
+    * table's order, which the vectorized read relies on):
     * snapshot 1 lands two-thirds of orders under the 3-column schema,
     * then an append carrying a FOURTH column (`prio`) commits the
     * remaining third and EVOLVES the table DDL to the wider of the two

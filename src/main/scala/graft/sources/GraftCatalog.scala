@@ -190,8 +190,9 @@ class GraftCatalog extends TableCatalog
     * prefix-evolution commit ([[ManifestTable.alterAddColumns]]) —
     * trailing, nullable, top-level columns only. Everything else
     * (rename/retype/reorder/drop, nested fields, positioned adds)
-    * stays loudly rejected: rows are token-positional, so any
-    * non-trailing change would decode old tokens under wrong fields.
+    * stays loudly rejected: [[ManifestColumnar.open]] relies on each
+    * file's columns being a prefix of the table's order, which any
+    * non-trailing change would break for the files already written.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val path = pathOf(ident)
@@ -215,8 +216,9 @@ class GraftCatalog extends TableCatalog
           "graft_cat ALTER TABLE: nested ADD COLUMN is not supported " +
             s"(got ${add.fieldNames().mkString(".")})")
         require(add.position() == null,
-          "graft_cat ALTER TABLE: ADD COLUMN is trailing-only (rows are " +
-            "token-positional) — FIRST/AFTER positions are not supported")
+          "graft_cat ALTER TABLE: ADD COLUMN is trailing-only (each file's " +
+            "columns are a prefix of the table's order) — FIRST/AFTER " +
+            "positions are not supported")
         require(add.isNullable,
           "graft_cat ALTER TABLE: added columns must be nullable " +
             "(existing rows have no value to backfill)")
@@ -236,8 +238,8 @@ class GraftCatalog extends TableCatalog
     * up when the AS-SELECT write throws), and refusing there would MASK
     * the write's real failure behind an UnsupportedOperation.
     *
-    * Deletes ONLY graft-created artifacts (manifest files, staged/orphan
-    * data and delete files, scratch dirs) and removes the directory only
+    * Deletes ONLY the names the store owns ([[ManifestTable.owned]]:
+    * manifests, store files, scratch) and removes the directory only
     * if nothing else remains: CREATE TABLE never verified the target
     * directory was empty, so a create pointed at a directory that
     * already held FOREIGN files must not wipe them on drop — the drop
@@ -248,26 +250,14 @@ class GraftCatalog extends TableCatalog
     ManifestTable.currentManifestShallow(path) match {
       case Some((1, lines, _)) if lines.isEmpty =>
         val d = Paths.get(path)
-        def graftOwned(name: String): Boolean =
-          name.matches("manifest-\\d+\\.json") ||
-            name.startsWith("data-") || name.startsWith("delete-") ||
-            name.startsWith("batch-") || name.startsWith(".merge_stage_") ||
-            name.startsWith(".merge_keys_") ||
-            // commit-staging debris (a crashed commit's temp file) and
-            // two-level child manifests are engine artifacts too
-            name.startsWith(".manifest_stage") || name.startsWith("group-")
-        val walk = Files.walk(d)
-        val paths = try {
-          walk.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.toList
-        } finally walk.close()
-        paths.filterNot(_ == d).foreach { p =>
-          // ownership is decided at the TOP component under the table
-          // dir: a graft scratch dir owns everything inside it, a
-          // foreign subdirectory keeps everything inside it
-          if (graftOwned(d.relativize(p).getName(0).toString))
-            Files.deleteIfExists(p)
-        }
+        // ownership is decided at the TOP component under the table dir
+        // ([[ManifestTable.owned]]): an owned scratch dir goes with
+        // everything inside it, a foreign subdirectory keeps everything
+        val top = Files.list(d)
+        val owned = try top.iterator().asScala
+            .filter(p => ManifestTable.owned(p.getFileName.toString).isDefined).toList
+          finally top.close()
+        owned.foreach(graft.util.Fs.deleteRecursively)
         val left = Files.list(d)
         val foreign = try {
           left.iterator().asScala.nonEmpty

@@ -14,6 +14,8 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.util.Fs
+
 /** A complete DataSource V2 WRITE path with an atomic manifest-commit
   * protocol — the ACID-lite table-format pattern (the core idea behind
   * Delta/Iceberg commit logs) built from the raw connector API:
@@ -71,8 +73,8 @@ object ManifestTable {
     extends IllegalStateException(msg)
 
   /** Test seam for deterministic commit-race interleavings: invoked by
-    * the maintenance rewrites after deriving a rewrite and immediately
-    * BEFORE their truncating commit — a spec installs an append here to
+    * [[rewrite]] after an op derives its new line set and immediately
+    * BEFORE the truncating commit — a spec installs an append here to
     * reproduce "writer lands between snapshot read and commit" exactly
     * once. A no-op in production (never reassigned outside specs).
     */
@@ -403,16 +405,12 @@ object ManifestTable {
     * Returns (committed version, children before, children after);
     * version is unchanged when the layout is already minimal.
     */
-  def rewriteManifests(path: String): (Int, Int, Int) = {
-    var attempts = 0
-    while (true) {
-      val (v, shallow, _) = currentManifestShallow(path).getOrElse(
-        throw new IllegalStateException(s"rewriteManifests: no manifest at $path"))
-      val flat = expandLines(path, shallow)
-      val (foldable, keep) = flat.partition(l =>
+  def rewriteManifests(path: String): (Int, Int, Int) =
+    rewrite[(Int, Int, Int)](path, "rewriteManifests") { base =>
+      val (foldable, keep) = base.lines.partition(l =>
         !isDeleteEntry(l) && !isRetiredEntry(l) &&
           parseEntry(l)._1.startsWith("data-"))
-      val priorOnly = flat.filter(l => isDeleteEntry(l) && isPriorOnlyDelete(l))
+      val priorOnly = base.lines.filter(l => isDeleteEntry(l) && isPriorOnlyDelete(l))
       if (priorOnly.exists(l => deleteSeqOf(l).isEmpty) ||
           (priorOnly.nonEmpty &&
             foldable.exists(l => seqOf(parseEntry(l)._2).isEmpty)))
@@ -420,40 +418,27 @@ object ManifestTable {
           s"rewriteManifests at $path: a pre-sequence-stamping prior-only " +
             "delete is pending and its scoping leans on manifest line " +
             "order, which regrouping destroys — run compactDeletes first")
-      val childrenBefore = shallow.count(isGroupEntry)
+      val childrenBefore = base.shallow.count(isGroupEntry)
       val grouped = foldable.groupBy(partIdentityKey)
       val (multi, single) = grouped.values.partition(_.size >= 2)
       // already minimal: no loose line shares a partition with anything,
       // and no partition spans two children ⇒ the rewrite would only
       // churn child names
-      val looseData = shallow.filter(l => !isDeleteEntry(l) &&
+      val looseData = base.shallow.filter(l => !isDeleteEntry(l) &&
         !isRetiredEntry(l) && !isGroupEntry(l) &&
         parseEntry(l)._1.startsWith("data-"))
-      val childKeys = shallow.filter(isGroupEntry).map(partIdentityKey)
+      val childKeys = base.shallow.filter(isGroupEntry).map(partIdentityKey)
       if (childKeys.distinct.size == childKeys.size &&
           looseData.forall(l => grouped(partIdentityKey(l)).size == 1))
-        return (v, childrenBefore, childrenBefore)
-      val d = dir(path)
-      val written = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val groupLines = multi.toSeq.sortBy(_.head).map { members =>
-        val (child, p) = writeChild(d, members)
-        written += p
-        groupLine(child, members)
-      }
-      try {
-        val nv = commitVersion(path,
-          keep ++ groupLines ++ single.toSeq.flatten,
-          replacePrev = true, schemaDdl = None, expectedBase = Some(v))
-        return (nv, childrenBefore, groupLines.size)
-      } catch {
-        case e: ConcurrentCommitException =>
-          written.foreach(Files.deleteIfExists(_))
-          attempts += 1
-          if (attempts >= 5) throw e
+        Left((base.version, childrenBefore, childrenBefore))
+      else {
+        val groupLines = multi.toSeq.sortBy(_.head).map { members =>
+          groupLine(writeChild(dir(path), members)._1, members)
+        }
+        Right((keep ++ groupLines ++ single.toSeq.flatten,
+          nv => (nv, childrenBefore, groupLines.size)))
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   def deleteEntriesOf(lines: Seq[String]): Seq[(String, String)] =
     lines.filter(isDeleteEntry).map(parseDeleteEntry)
@@ -903,6 +888,40 @@ object ManifestTable {
       }.toMap
   }
 
+  /** THE OWNED-NAME RULE: what a name directly under a table directory
+    * is to the store, or None for a name the store never makes (a table
+    * may share its directory with foreign files). [[vacuum]] sweeps only
+    * owned names and [[GraftCatalog.dropTable]] deletes only owned names.
+    * Store files are the names manifest lines reach: data files (parquet,
+    * and retired text-codec `.rows` debris), batch markers, child lists
+    * and delete keys. Scratch is dot-prefixed: [[staged]]'s store, a
+    * commit's temp manifest, and `.merge_keys_` key-render dirs that
+    * older builds kept beside the stage.
+    */
+  private[sources] def owned(name: String): Option[Owned.Value] =
+    if (name.matches("manifest-\\d+\\.json")) Some(Owned.Manifest)
+    else if (Seq("data-" -> ".parquet", "data-" -> ".rows", "batch-" -> ".rows",
+        "group-" -> ".list", "delete-" -> ".keys")
+        .exists { case (p, x) => name.startsWith(p) && name.endsWith(x) })
+      Some(Owned.StoreFile)
+    else if (Seq(StagePrefix, ManifestStagePrefix, ".merge_keys_").exists(name.startsWith))
+      Some(Owned.Scratch)
+    else None
+
+  private[sources] object Owned extends Enumeration { val Manifest, StoreFile, Scratch = Value }
+
+  private val StagePrefix = ".merge_stage_"
+  private val ManifestStagePrefix = ".manifest_stage"
+
+  /** The file a manifest line names — data file, delete keys or child
+    * list — or None for a retired marker, which names no file.
+    */
+  private def fileOf(line: String): Option[String] =
+    if (isRetiredEntry(line)) None
+    else if (isDeleteEntry(line)) Some(parseDeleteEntry(line)._1)
+    else if (isGroupEntry(line)) Some(parseEntry(line)._1.substring(1))
+    else Some(parseEntry(line)._1)
+
   /** Retention: keep ONLY the newest manifest; delete older manifest
     * files and every data file the survivor does not reference.
     * Returns (manifests deleted, data files deleted). Snapshot isolation
@@ -941,14 +960,7 @@ object ManifestTable {
       case Some((v, _, _)) =>
         require(olderThanMs >= 0, s"vacuumOlderThan: negative window $olderThanMs")
         val cutoff = System.currentTimeMillis() - olderThanMs
-        val d = dir(path)
-        val listing = Files.list(d)
-        val versions =
-          try listing.iterator().asScala.map(_.getFileName.toString).collect {
-            case n if n.startsWith("manifest-") && n.endsWith(".json") =>
-              n.stripPrefix("manifest-").stripSuffix(".json").toInt
-          }.toList.sorted
-          finally listing.close()
+        val versions = listVersions(path).sorted
         // an UNSTAMPED version (legacy pre-timestamp store) cannot be
         // dated — it is conservatively INSIDE the window (`forall`:
         // never sweep what can't be proven stale). `exists` here would
@@ -970,10 +982,9 @@ object ManifestTable {
       val names =
         try listing.iterator().asScala.map(_.getFileName.toString).toList
         finally listing.close()
-      val keepFloor = rawFloor
       val oldManifests = names.filter { n =>
         n.startsWith("manifest-") && n.endsWith(".json") &&
-          n.stripPrefix("manifest-").stripSuffix(".json").toInt < keepFloor
+          n.stripPrefix("manifest-").stripSuffix(".json").toInt < rawFloor
       }
       // every file name a manifest's lines reach: data/delete names on
       // loose lines, plus — for group lines — the CHILD manifest itself
@@ -982,19 +993,13 @@ object ManifestTable {
       // nothing — its members are already swept or aging as orphans)
       def reachable(m: String): Iterator[String] = {
         val ls = Files.readAllLines(d.resolve(m)).asScala.drop(1)
-        ls.iterator.filterNot(isRetiredEntry).flatMap { l =>
-          if (isDeleteEntry(l)) Iterator.single(parseDeleteEntry(l)._1)
-          else if (isGroupEntry(l)) {
-            val child = parseEntry(l)._1.substring(1)
-            val members =
-              if (Files.exists(d.resolve(child)))
-                Files.readAllLines(d.resolve(child)).asScala.iterator
-                  .filter(_.nonEmpty).map(parseEntry(_)._1)
-              else Iterator.empty
-            Iterator.single(child) ++ members
-          }
-          else Iterator.single(parseEntry(l)._1)
-        }
+        ls.iterator.flatMap(l => fileOf(l).iterator.flatMap { f =>
+          val child = d.resolve(f)
+          if (isGroupEntry(l) && Files.exists(child))
+            Iterator.single(f) ++ Files.readAllLines(child).asScala.iterator
+              .filter(_.nonEmpty).map(parseEntry(_)._1)
+          else Iterator.single(f)
+        })
       }
       // files referenced by ANY surviving manifest stay
       val referenced: Set[String] = names.iterator
@@ -1011,12 +1016,7 @@ object ManifestTable {
       val expired: Set[String] = oldManifests.iterator.flatMap(reachable).toSet
       val sweepBefore = System.currentTimeMillis() - 3600000L
       val orphans = names.filter { n =>
-        ((n.startsWith("data-") && n.endsWith(".rows")) ||
-          (n.startsWith("data-") && n.endsWith(".parquet")) ||
-          (n.startsWith("batch-") && n.endsWith(".rows")) ||
-          (n.startsWith("group-") && n.endsWith(".list")) ||
-          (n.startsWith("delete-") && n.endsWith(".keys"))) &&
-          !referenced.contains(n) &&
+        owned(n).contains(Owned.StoreFile) && !referenced.contains(n) &&
           (expired.contains(n) || {
             val p = d.resolve(n)
             !Files.exists(p) ||
@@ -1024,21 +1024,15 @@ object ManifestTable {
           })
       }
       (oldManifests ++ orphans).foreach(n => Files.deleteIfExists(d.resolve(n)))
-      // crashed [[mergeKeys]] staging dirs: normally removed by the
-      // merge's own finally; a hard crash can strand one. Age-gated
-      // (1 h) on the dir's HEARTBEAT mtime — mergeKeys re-touches its
-      // scratch after every step, so a live merge is never swept from
-      // under it no matter how long any single step takes.
-      names.filter(n => n.startsWith(".merge_stage_") || n.startsWith(".merge_keys_"))
+      // crashed ops' scratch ([[staged]]'s store, a commit's temp
+      // manifest): normally removed by the op's own finally; a hard crash
+      // can strand one. Age-gated (1 h) on the HEARTBEAT mtime — a staged
+      // op re-touches its scratch after every step, so a live op is never
+      // swept from under it no matter how long any single step takes.
+      names.filter(n => owned(n).contains(Owned.Scratch))
         .map(n => d.resolve(n))
-        .filter(p => Files.isDirectory(p) &&
-          Files.getLastModifiedTime(p).toMillis < sweepBefore)
-        .foreach { p =>
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(x => Files.deleteIfExists(x))
-          finally walk.close()
-        }
+        .filter(p => Files.getLastModifiedTime(p).toMillis < sweepBefore)
+        .foreach(Fs.deleteRecursively)
       (oldManifests.size, orphans.size)
   }
 
@@ -1067,7 +1061,8 @@ object ManifestTable {
     val d = dir(path)
     Files.createDirectories(d)
     var attempts = 0
-    while (true) {
+    var lost: Throwable = null
+    while (attempts < 100) {
       attempts += 1
       // SHALLOW read: existing group lines carry forward by REFERENCE
       // (children are immutable, shared across versions like data
@@ -1120,9 +1115,9 @@ object ManifestTable {
           else if (extension(pp, sp)) p
           else throw new IllegalArgumentException(
             s"graft manifest table at $path: append schema is not an " +
-              s"additive extension of the table schema (rows are " +
-              s"token-positional — only trailing ADD COLUMN evolves); " +
-              s"table=[$p] append=[$s]")
+              s"additive extension of the table schema (each file's columns " +
+              s"must be a prefix of the table's order — only trailing ADD " +
+              s"COLUMN evolves); table=[$p] append=[$s]")
         case _ =>
           schemaDdl.orElse(prevDdl).getOrElse(throw new IllegalArgumentException(
             s"graft manifest table at $path has no committed manifest to inherit a schema from"))
@@ -1160,7 +1155,7 @@ object ManifestTable {
       val content =
         (s"$ddl$CommitMsTag$ts${layout.fold("")(LayoutTag + _)}" +:
           finalLines).mkString("\n")
-      val tmp = Files.createTempFile(d, ".manifest_stage", ".tmp")
+      val tmp = Files.createTempFile(d, ManifestStagePrefix, ".tmp")
       Files.write(tmp, content.getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.TRUNCATE_EXISTING)
       try {
@@ -1169,11 +1164,11 @@ object ManifestTable {
       } catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           spilledChildren.foreach(Files.deleteIfExists(_))
-          if (attempts >= 100) throw new IllegalStateException(
-            s"manifest commit at $path lost 100 consecutive version races", e)
+          lost = e
       } finally Files.deleteIfExists(tmp)
     }
-    -1 // unreachable
+    throw new IllegalStateException(
+      s"manifest commit at $path lost 100 consecutive version races", lost)
   }
 
   /** EQUALITY DELETE (merge-on-read): commit `keys` as deleted on integral
@@ -1203,6 +1198,113 @@ object ManifestTable {
     commitVersion(path, Seq(s"$DeleteMark$name\t$keyCol"),
       replacePrev = false, schemaDdl = None)
   }
+
+  /** A staged write ([[staged]]): its scratch store, and the data lines
+    * its scratch manifest lists, `#seq` stripped ([[stripSeq]]) and each
+    * file already linked into the table.
+    */
+  private final case class Staged(scratch: Path, lines: Seq[String], ddl: String) {
+    /** Re-touch the scratch for [[vacuum]]'s 1 h gate, which then
+      * measures time since the op last made progress, not since it began.
+      */
+    def heartbeat(): Unit = Files.setLastModifiedTime(scratch,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+  }
+
+  /** THE STAGING PATH of every op that adds rows other than a plain append
+    * ([[mergeKeys]], [[commitBatch]] and the four truncating rewrites):
+    * `df` is written by a distributed DSv2 write into ONE dot-prefixed
+    * scratch store under the table's `layout` (plus `options`), its data
+    * files are hard-linked into the table (same filesystem), and `body`
+    * runs on the [[Staged]] result; the scratch goes in one finally.
+    *
+    * EMPTY RULE: the writer commits a scratch manifest for every
+    * successful write, empty or not, so a missing one is a failed write
+    * and throws, while a write of zero rows stages zero data lines and
+    * the op commits what its lines say — a rewrite that keeps no row
+    * commits a version listing no data file (earlier versions still
+    * time-travel). A failure before the op's own commit leaves at most
+    * unreferenced links, swept by [[vacuum]] past its age gate.
+    */
+  private def staged[T](
+      path: String, df: org.apache.spark.sql.DataFrame,
+      layout: Map[String, String], options: Map[String, String] = Map.empty)(
+      body: Staged => T): T = {
+    val d = dir(path)
+    Files.createDirectories(d)
+    val scratch = Files.createTempDirectory(d, StagePrefix)
+    try {
+      withLayout(df.write.format("graft.sources.ManifestTable")
+        .option("path", scratch.toString), layout)
+        .options(options).mode("append").save()
+      val (_, lines, ddl) = currentManifest(scratch.toString).getOrElse(
+        throw new IllegalStateException(
+          s"staging write at $path produced no manifest at $scratch"))
+      val s = Staged(scratch, dataEntries(lines).map(stripSeq), ddl)
+      s.heartbeat()
+      s.lines.foreach { l =>
+        val name = parseEntry(l)._1
+        Files.createLink(d.resolve(name), scratch.resolve(name))
+      }
+      s.heartbeat()
+      body(s)
+    } finally if (Files.exists(scratch)) Fs.deleteRecursively(scratch)
+  }
+
+  /** The snapshot a truncating rewrite derives from: its version, its
+    * shallow lines (group lines by reference) and the expanded view.
+    */
+  private final case class Snapshot(version: Int, shallow: Seq[String], lines: Seq[String])
+
+  /** THE BASE-VALIDATED LOOP of every truncating rewrite
+    * ([[rewriteManifests]], [[compactSmallFiles]], [[deleteMatching]],
+    * [[compactDeletes]], [[compactZOrder]]): read the current snapshot;
+    * `derive` answers `Left(result)` for "nothing to do" (no commit) or
+    * `Right((lines, report))`; run [[preCommitHook]]; commit `lines`
+    * REPLACING the line set, validated against the snapshot's version,
+    * and return `report(committed version)`. A lost race
+    * ([[ConcurrentCommitException]]: a commit landed in between, which a
+    * blind replace would drop) unlinks every file the attempt's lines
+    * name that the base did not — staged data files, new child lists —
+    * and re-derives from the new current; the fifth loss rethrows.
+    */
+  private def rewrite[R](path: String, op: String)(
+      derive: Snapshot => Either[R, (Seq[String], Int => R)]): R = {
+    var attempts = 0
+    var lost: ConcurrentCommitException = null
+    while (attempts < 5) {
+      attempts += 1
+      val (v, shallow, _) = currentManifestShallow(path).getOrElse(
+        throw new IllegalStateException(s"$op: no manifest at $path"))
+      val base = Snapshot(v, shallow, expandLines(path, shallow))
+      derive(base) match {
+        case Left(result) => return result
+        case Right((lines, report)) =>
+          preCommitHook()
+          try return report(commitVersion(path, lines, replacePrev = true,
+            schemaDdl = None, expectedBase = Some(v)))
+          catch {
+            case e: ConcurrentCommitException =>
+              val baseFiles = (shallow ++ base.lines).flatMap(fileOf).toSet
+              lines.flatMap(fileOf).filterNot(baseFiles)
+                .foreach(f => Files.deleteIfExists(dir(path).resolve(f)))
+              lost = e
+          }
+      }
+    }
+    throw lost
+  }
+
+  /** The rewrites that copy rows into new files refuse while
+    * equality-delete entries are pending: a rewrite stamps the rows it
+    * copies at its own `#seq` ([[SeqStatKey]]), so a pending prior-only
+    * delete would stop reaching them and its rows would come back.
+    */
+  private def refusePendingDeletes(op: String, path: String, lines: Seq[String]): Unit =
+    require(deleteEntriesOf(lines).isEmpty,
+      s"$op at $path: equality-delete entries pending — run compactDeletes " +
+        "first (a rewrite stamps the rows it copies at its own #seq, so a " +
+        "pending prior-only delete would no longer reach them)")
 
   /** MERGE / UPSERT (merge-on-read): apply `updates` — full rows in the
     * table's schema, keyed by integral `keyCol` — as ONE atomic manifest
@@ -1248,71 +1350,34 @@ object ManifestTable {
         s"mergeKeys: no column '$keyCol' in ${schema.toDDL}"))
     require(f.dataType == LongType || f.dataType == IntegerType,
       s"mergeKeys: merge keys must be integral; '$keyCol' is ${f.dataType}")
-    val d = dir(path)
-    Files.createDirectories(d)
-    val scratch = Files.createTempDirectory(d, ".merge_stage_")
-    val keysDir = Files.createTempDirectory(d, ".merge_keys_")
-    // heartbeat for vacuum's liveness gate: every step re-touches the
-    // scratch dirs, so the 1 h sweep threshold measures time since the
-    // merge last MADE PROGRESS, not time since it started — a slow key
-    // render or a long optimistic-retry fight can't get its scratch
-    // swept mid-merge
-    def heartbeat(): Unit = {
-      val now = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())
-      Files.setLastModifiedTime(scratch, now)
-      Files.setLastModifiedTime(keysDir, now)
-    }
-    try {
-      // 1. stage the update rows as manifest data files (distributed) —
-      //    the ONLY evaluation of `updates`; everything downstream
-      //    derives from these committed staging rows, so even a
-      //    nondeterministic frame cannot stage one row set and
-      //    tombstone a different key set
-      // staged under the table's persisted layout: merged-in replacement
-      // rows keep the same @partition/@bucket/bloom metadata any direct
-      // append to the table would carry
-      withLayout(updates.write.format("graft.sources.ManifestTable")
-        .option("path", scratch.toString), tableLayout(path))
-        .mode("append").save()
-      heartbeat()
-      val dataLines = dataEntries(
-        currentManifest(scratch.toString).getOrElse(throw new IllegalStateException(
-          s"mergeKeys: staging write produced no manifest at $scratch"))._2)
-        .map(stripSeq)
-      // 2. stage the key file, rendered by Spark FROM THE STAGED ROWS
-      //    (one small text file; no second pass over `updates`)
-      val keysOut = keysDir.resolve("out")
+    // 1. stage the update rows as manifest data files (distributed) —
+    //    the ONLY evaluation of `updates`; everything downstream derives
+    //    from these committed staging rows, so even a nondeterministic
+    //    frame cannot stage one row set and tombstone a different key
+    //    set. Staged under the table's persisted layout: merged-in
+    //    replacement rows keep the same @partition/@bucket/bloom
+    //    metadata any direct append to the table would carry
+    staged(path, updates, tableLayout(path)) { s =>
+      // 2. render the key file FROM THE STAGED ROWS into the scratch (one
+      //    small text file; no second pass over `updates`)
+      val keysOut = s.scratch.resolve("keys")
       spark.read.format("graft.sources.ManifestTable")
-        .option("path", scratch.toString).load()
+        .option("path", s.scratch.toString).load()
         .select(keyCol).distinct()
         .selectExpr(s"CAST($keyCol AS STRING) AS k")
         .coalesce(1).write.mode("overwrite").text(keysOut.toString)
-      heartbeat()
+      s.heartbeat()
       val keysPart = keysOut.toFile.listFiles()
         .find(x => x.getName.startsWith("part-")).getOrElse(
           throw new IllegalStateException("mergeKeys: key render wrote no part file"))
       val delName = s"delete-${java.util.UUID.randomUUID().toString.take(8)}.keys"
-      Files.move(keysPart.toPath, d.resolve(delName))
-      // 3. adopt the staged data files (hard links — same filesystem)
-      dataLines.foreach { l =>
-        val name = parseEntry(l)._1
-        Files.createLink(d.resolve(name), scratch.resolve(name))
-      }
-      heartbeat()
-      // 4. ONE commit: the PRIOR-ONLY delete line first (covers existing
-      //    files, exempts this commit's own inserts), then the new data
+      Files.move(keysPart.toPath, dir(path).resolve(delName))
+      // 3. ONE commit: the PRIOR-ONLY delete line first (covers existing
+      //    files, exempts this commit's own inserts), then the staged data
       //    lines — the atomic upsert
       commitVersion(path,
-        s"$DeleteMark$delName\t$keyCol\t$PriorOnlyScope" +: dataLines,
+        s"$DeleteMark$delName\t$keyCol\t$PriorOnlyScope" +: s.lines,
         replacePrev = false, schemaDdl = None)
-    } finally {
-      def rmTree(p: Path): Unit = if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => Files.deleteIfExists(x))
-        finally walk.close()
-      }
-      rmTree(scratch); rmTree(keysDir)
     }
   }
 
@@ -1336,10 +1401,10 @@ object ManifestTable {
     *     travel re-materializes any prefix.
     *
     * The batch rows are staged by a distributed DSv2 write into a
-    * dot-prefixed scratch dir and hard-linked in (the [[mergeKeys]]
-    * shape). Returns the committed (or already-committed) version.
-    */
-  /** `partitionCol`: route the batch's rows through the partitioned
+    * dot-prefixed scratch dir and hard-linked in ([[staged]]). Returns
+    * the committed (or already-committed) version.
+    *
+    * `partitionCol`: route the batch's rows through the partitioned
     * writer, so every micro-batch version's files carry first-class
     * `@col` fields — streaming ingest INTO the date-partitioned layout,
     * where a day's query over months of accreted batch versions still
@@ -1352,7 +1417,6 @@ object ManifestTable {
       partitionCol: Option[String] = None): Int = {
     require(batchId >= 0, s"commitBatch: negative batchId $batchId")
     val d = dir(path)
-    Files.createDirectories(d)
     val marker = f"batch-$batchId%06d.rows"
     // fast path: already committed (replay) — nothing re-staged; a
     // RETIRED marker (compaction absorbed the batch file) counts, or
@@ -1364,40 +1428,20 @@ object ManifestTable {
         return v
       case _ => ()
     }
-    val scratch = Files.createTempDirectory(d, ".merge_stage_")
-    try {
-      // persisted layout first, explicit partitionCol override second —
-      // a micro-batch sink into a laid-out table keeps landing laid-out
-      // files without re-declaring the layout; an explicit partitionCol
-      // replaces the whole persisted split (partition and bucket alike),
-      // it never stacks into the writer's mutual-exclusion check
-      val persisted =
-        if (partitionCol.isDefined)
-          tableLayout(path) -- Seq("partitionCol", "bucketCol", "bucketCount")
-        else tableLayout(path)
-      val w = withLayout(batch.write.format("graft.sources.ManifestTable")
-        .option("path", scratch.toString), persisted)
-      partitionCol.foreach(c => w.option("partitionCol", c))
-      w.mode("append").save()
-      val (_, scratchLines, scratchDdl) =
-        currentManifest(scratch.toString).getOrElse(throw new IllegalStateException(
-          s"commitBatch: staging write produced no manifest at $scratch"))
-      val dataLines = dataEntries(scratchLines).map(stripSeq)
-      dataLines.foreach { l =>
-        val name = parseEntry(l)._1
-        Files.createLink(d.resolve(name), scratch.resolve(name))
-      }
+    // persisted layout first, explicit partitionCol override second — a
+    // micro-batch sink into a laid-out table keeps landing laid-out files
+    // without re-declaring the layout; an explicit partitionCol replaces
+    // the whole persisted split (partition and bucket alike), it never
+    // stacks into the writer's mutual-exclusion check
+    val persisted = tableLayout(path)
+    val layout = partitionCol.fold(persisted)(c =>
+      persisted -- Seq("partitionCol", "bucketCol", "bucketCount") +
+        ("partitionCol" -> c))
+    staged(path, batch, layout) { s =>
       Files.write(d.resolve(marker), Array.emptyByteArray)
-      commitVersion(path, s"$marker\t$RowStatKey=0:0" +: dataLines,
-        replacePrev = false, schemaDdl = Some(scratchDdl),
+      commitVersion(path, s"$marker\t$RowStatKey=0:0" +: s.lines,
+        replacePrev = false, schemaDdl = Some(s.ddl),
         dedupeEntry = Some(marker))
-    } finally {
-      if (Files.exists(scratch)) {
-        val walk = Files.walk(scratch)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(x => Files.deleteIfExists(x))
-        finally walk.close()
-      }
     }
   }
 
@@ -1413,34 +1457,25 @@ object ManifestTable {
     * O(small files), and prior snapshots still time-travel (the old
     * manifests keep referencing the originals until [[vacuum]]).
     *
-    * Refused while equality-delete entries are pending: delete scoping
-    * is manifest-LINE-ORDERED (prior-only merge deletes), so reordering
-    * data lines under live deletes could resurrect dead rows — fold
-    * deletes first ([[compactDeletes]]), then bin-pack. Returns the
-    * committed version, or -1 when nothing qualified (no empty commit).
+    * Refused while equality-delete entries are pending
+    * ([[refusePendingDeletes]]) — fold deletes first
+    * ([[compactDeletes]]), then bin-pack. Returns the committed version,
+    * or -1 when nothing qualified (no empty commit).
     */
   def compactSmallFiles(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      minRows: Long, targetPartitions: Int = 1): Int = {
-    var attempts = 0
-    while (true) {
-      val (baseV, lines, _) = currentManifest(path).getOrElse(
-        throw new IllegalStateException(s"compactSmallFiles: no manifest at $path"))
-      require(deleteEntriesOf(lines).isEmpty,
-        s"compactSmallFiles at $path: equality-delete entries pending — " +
-          "run compactDeletes first (delete scoping is line-ordered; " +
-          "bin-packing under live deletes could resurrect rows)")
-      val parsed = dataEntries(lines).map(parseEntry)
+      minRows: Long, targetPartitions: Int = 1): Int =
+    rewrite[Int](path, "compactSmallFiles") { base =>
+      refusePendingDeletes("compactSmallFiles", path, base.lines)
+      val parsed = dataEntries(base.lines).map(parseEntry)
       val (small, big) = parsed.partition { case (_, stats) =>
         stats.get(RowStatKey).exists(_._1 < minRows)
       }
       // markers (0 rows) are "small" — compacting absorbs them; but with
       // <2 qualifying files there is nothing to pack
-      if (small.size < 2) return -1
-      val d = dir(path)
-      val layout = layoutAt(path, baseV)
-      val scratch = Files.createTempDirectory(d, ".merge_stage_")
-      try {
+      if (small.size < 2) Left(-1)
+      else {
+        val layout = layoutAt(path, base.version)
         val smallDf = spark.read.format("graft.sources.ManifestTable")
           .option("path", path)
           .option("files", small.map(_._1).mkString(","))
@@ -1454,49 +1489,15 @@ object ManifestTable {
         val packed =
           if (grouped.isEmpty) smallDf.repartition(targetPartitions)
           else smallDf.repartition(targetPartitions, grouped: _*)
-        withLayout(
-          packed.write.format("graft.sources.ManifestTable")
-            .option("path", scratch.toString), layout)
-          .mode("append").save()
-        val packedLines = dataEntries(
-          currentManifest(scratch.toString).getOrElse(throw new IllegalStateException(
-            s"compactSmallFiles: staging write produced no manifest at $scratch"))._2)
-          .map(stripSeq)
-        packedLines.foreach { l =>
-          val name = parseEntry(l)._1
-          Files.createLink(d.resolve(name), scratch.resolve(name))
-        }
-        // one commit REPLACING the line set: survivors ++ packed files —
-        // VALIDATED against the snapshot this rewrite was derived from
-        // (a concurrent append between read and commit must not vanish)
-        val bigLines = lines.filter(l =>
-          !isDeleteEntry(l) && !isRetiredEntry(l) &&
-            big.exists(_._1 == parseEntry(l)._1))
-        preCommitHook()
-        try {
-          return commitVersion(path,
-            retirements(lines, small.map(_._1)) ++ bigLines ++ packedLines,
-            replacePrev = true, schemaDdl = None, expectedBase = Some(baseV))
-        } catch {
-          case e: ConcurrentCommitException =>
-            // this attempt's packed links are orphaned names — unlink
-            // them and re-derive the whole pack from the new current
-            packedLines.foreach(l =>
-              Files.deleteIfExists(d.resolve(parseEntry(l)._1)))
-            attempts += 1
-            if (attempts >= 5) throw e
-        }
-      } finally {
-        if (Files.exists(scratch)) {
-          val walk = Files.walk(scratch)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(x => Files.deleteIfExists(x))
-          finally walk.close()
-        }
+        val packedLines = staged(path, packed, layout)(_.lines)
+        // survivors ++ packed files, replacing the line set
+        val bigNames = big.map(_._1).toSet
+        val bigLines = base.lines.filter(l =>
+          !isDeleteEntry(l) && !isRetiredEntry(l) && bigNames(parseEntry(l)._1))
+        Right((retirements(base.lines, small.map(_._1)) ++ bigLines ++ packedLines,
+          identity))
       }
     }
-    -1 // unreachable
-  }
 
   /** The three metadata pruning passes, shared verbatim by the scan's
     * partition planning ([[ManifestScan]]) and the copy-on-write delete's
@@ -1666,23 +1667,19 @@ object ManifestTable {
     *     deleted here; [[vacuum]] owns retirement);
     *   - an untranslatable predicate just makes every file a candidate —
     *     correct, merely a full rewrite;
-    *   - refused while equality-delete entries are pending (delete
-    *     scoping is manifest-line-ordered; fold them first), and a
-    *     predicate no file can match returns the current version with NO
-    *     empty commit.
+    *   - refused while equality-delete entries are pending
+    *     ([[refusePendingDeletes]]; fold them first), and a predicate no
+    *     file can match returns the current version with NO empty commit;
+    *   - a predicate every row matches commits a version with no data
+    *     lines ([[staged]]'s empty rule).
     *
     * Returns the committed (or unchanged) version.
     */
   def deleteMatching(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      condition: org.apache.spark.sql.Column): Int = {
-    var attempts = 0
-    while (true) {
-      val (v, lines, _) = currentManifest(path).getOrElse(
-        throw new IllegalStateException(s"deleteMatching: no manifest at $path"))
-      require(deleteEntriesOf(lines).isEmpty,
-        s"deleteMatching at $path: equality-delete entries pending — run " +
-          "compactDeletes first (delete scoping is line-ordered)")
+      condition: org.apache.spark.sql.Column): Int =
+    rewrite[Int](path, "deleteMatching") { base =>
+      refusePendingDeletes("deleteMatching", path, base.lines)
       // recover the Catalyst tree through a probe plan's ANALYZED filter
       // (the public route to a Column's expression), so attribute names are
       // resolved against this very table's schema before translation
@@ -1693,7 +1690,7 @@ object ManifestTable {
       }.getOrElse(throw new IllegalStateException(
         s"deleteMatching: probe plan for $path carries no filter"))
       val filters = translateConjuncts(condExpr)
-      val entries = dataEntries(lines).map(l => (l, parseEntry(l)))
+      val entries = dataEntries(base.lines).map(l => (l, parseEntry(l)))
       // the scan's three pruning passes, re-applied driver-side: may-match
       // files are candidates, provably-unmatchable files survive by reference
       val (cands, survivors) = entries.partition { case (l, (_, stats)) =>
@@ -1702,53 +1699,21 @@ object ManifestTable {
             mayMatchBucketField(stats, f) && mayMatchBloomLine(l, f)
         }
       }
-      if (cands.isEmpty) return v
-      val d = dir(path)
-      val layout = layoutAt(path, v)
-      val scratch = Files.createTempDirectory(d, ".merge_stage_")
-      try {
+      if (cands.isEmpty) Left(base.version)
+      else {
         import org.apache.spark.sql.functions.{coalesce => fnCoalesce, lit, not}
-        withLayout(
+        val rewritten = staged(path,
           spark.read.format("graft.sources.ManifestTable")
             .option("path", path)
             .option("files", cands.map(_._2._1).mkString(","))
             .load()
             // keep rows where the predicate is NOT TRUE (NULL keeps the row)
-            .where(not(fnCoalesce(condition, lit(false))))
-            .write.format("graft.sources.ManifestTable")
-            .option("path", scratch.toString), layout)
-          .mode("append").save()
-        val rewritten = dataEntries(
-          currentManifest(scratch.toString).getOrElse(throw new IllegalStateException(
-            s"deleteMatching: staging write produced no manifest at $scratch"))._2)
-          .map(stripSeq)
-        rewritten.foreach { l =>
-          Files.createLink(d.resolve(parseEntry(l)._1), scratch.resolve(parseEntry(l)._1))
-        }
-        preCommitHook()
-        try {
-          return commitVersion(path,
-            retirements(lines, cands.map(_._2._1)) ++
-              survivors.map(_._1) ++ rewritten,
-            replacePrev = true, schemaDdl = None, expectedBase = Some(v))
-        } catch {
-          case e: ConcurrentCommitException =>
-            rewritten.foreach(l =>
-              Files.deleteIfExists(d.resolve(parseEntry(l)._1)))
-            attempts += 1
-            if (attempts >= 5) throw e
-        }
-      } finally {
-        if (Files.exists(scratch)) {
-          val walk = Files.walk(scratch)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(x => Files.deleteIfExists(x))
-          finally walk.close()
-        }
+            .where(not(fnCoalesce(condition, lit(false)))),
+          layoutAt(path, base.version))(_.lines)
+        Right((retirements(base.lines, cands.map(_._2._1)) ++
+          survivors.map(_._1) ++ rewritten, identity))
       }
     }
-    -1 // unreachable
-  }
 
   /** Fold the merge-on-read deletes into the data files: materialize a
     * VERSION-PINNED snapshot (deletes applied by the scan) into scratch
@@ -1764,52 +1729,17 @@ object ManifestTable {
     * appended rows are IN the post-compaction current, never dropped to
     * a time-travel-only version. Returns the committed version.
     */
-  def compactDeletes(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    var attempts = 0
-    while (true) {
-      val (baseV, baseLines, _) = currentManifest(path).getOrElse(
-        throw new IllegalStateException(s"compactDeletes: no manifest at $path"))
-      val d = dir(path)
-      val layout = layoutAt(path, baseV)
-      val scratch = Files.createTempDirectory(d, ".merge_stage_")
-      try {
-        withLayout(
-          spark.read.format("graft.sources.ManifestTable")
-            .option("path", path).option("version", baseV.toString).load()
-            .write.format("graft.sources.ManifestTable")
-            .option("path", scratch.toString), layout)
-          .mode("append").save()
-        // an all-deleted snapshot stages zero data files (no scratch
-        // manifest) — the rewrite legitimately commits an empty line set
-        val rewritten = currentManifest(scratch.toString)
-          .map(m => dataEntries(m._2).map(stripSeq)).getOrElse(Seq.empty)
-        rewritten.foreach { l =>
-          Files.createLink(d.resolve(parseEntry(l)._1), scratch.resolve(parseEntry(l)._1))
-        }
-        preCommitHook()
-        try {
-          return commitVersion(path,
-            retirements(baseLines,
-              dataEntries(baseLines).map(parseEntry(_)._1)) ++ rewritten,
-            replacePrev = true, schemaDdl = None, expectedBase = Some(baseV))
-        } catch {
-          case e: ConcurrentCommitException =>
-            rewritten.foreach(l =>
-              Files.deleteIfExists(d.resolve(parseEntry(l)._1)))
-            attempts += 1
-            if (attempts >= 5) throw e
-        }
-      } finally {
-        if (Files.exists(scratch)) {
-          val walk = Files.walk(scratch)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(x => Files.deleteIfExists(x))
-          finally walk.close()
-        }
-      }
+  def compactDeletes(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    rewrite[Int](path, "compactDeletes") { base =>
+      // an all-deleted snapshot stages zero data lines and commits a
+      // version listing none ([[staged]]'s empty rule)
+      val rewritten = staged(path,
+        spark.read.format("graft.sources.ManifestTable")
+          .option("path", path).option("version", base.version.toString).load(),
+        layoutAt(path, base.version))(_.lines)
+      Right((retirements(base.lines,
+        dataEntries(base.lines).map(parseEntry(_)._1)) ++ rewritten, identity))
     }
-    -1 // unreachable
-  }
 
   /** OPTIMIZE ZORDER BY (Delta's clustering rewrite as explicit
     * maintenance): a full truncating rewrite range-clustered on the
@@ -1837,94 +1767,59 @@ object ManifestTable {
           f.dataType == DateType,
         s"compactZOrder: '$c' must be integral or DATE; got ${f.dataType}")
     }
-    var attempts = 0
-    while (true) {
-      val (baseV, baseLines, _) = currentManifest(path).getOrElse(
-        throw new IllegalStateException(s"compactZOrder: no manifest at $path"))
-      require(deleteEntriesOf(baseLines).isEmpty,
-        s"compactZOrder at $path: equality-delete entries pending — run " +
-          "compactDeletes first (delete scoping is line-ordered)")
-      val d = dir(path)
-      val layout = layoutAt(path, baseV)
-      val scratch = Files.createTempDirectory(d, ".merge_stage_")
-      try {
-        import org.apache.spark.sql.functions.{col, lit}
-        val df = spark.read.format("graft.sources.ManifestTable")
-          .option("path", path).option("version", baseV.toString).load()
-        val boundExprs = cols.flatMap(c => Seq(
-          org.apache.spark.sql.functions.min(col(c)),
-          org.apache.spark.sql.functions.max(col(c))))
-        val bounds = df.agg(boundExprs.head, boundExprs.tail: _*).head()
-        def asLong(i: Int): Long = bounds.get(i) match {
-          case null => 0L
-          case l: Long => l
-          case n: Int => n.toLong
-          case dte: java.sql.Date =>
-            org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(dte).toLong
-          case dte: java.time.LocalDate => dte.toEpochDay
-          case other => throw new IllegalStateException(s"bound $other")
-        }
-        val bits = 12
-        val scaled = cols.zipWithIndex.map { case (c, j) =>
-          val (lo, hi) = (asLong(2 * j), asLong(2 * j + 1))
-          // dates as epoch days (a date cannot cast to long directly)
-          val longCol =
-            if (schema.fields.find(_.name == c).exists(_.dataType == DateType))
-              org.apache.spark.sql.functions.unix_date(col(c)).cast("long")
-            else col(c).cast("long")
-          ((longCol - lit(lo)) * lit((1L << bits) - 1) /
-            lit(math.max(1L, hi - lo))).cast("long")
-        }
-        // on a PARTITIONED table, cluster WITHIN partition values (Delta's
-        // OPTIMIZE ZORDER semantics): the partition columns lead the range
-        // key, so each task holds whole partition groups z-sorted inside —
-        // the layout-splitting writer then emits per-value files whose
-        // @col fields survive AND whose zone maps are z-tight. A bucketed
-        // table ranges on z alone (the writer splits per bucket, so each
-        // file is one bucket × one z-slice — prunable on both grains).
-        val partLead = layout.get("partitionCol").toSeq
-          .flatMap(_.split(',').iterator.map(_.trim).filter(_.nonEmpty))
-          .map(col)
-        val rangeKey = partLead :+ col("__graft_z")
-        withLayout(
-          df.withColumn("__graft_z", ZOrder.interleaveNative(scaled, bits))
-            .repartitionByRange(targetPartitions, rangeKey: _*)
-            .sortWithinPartitions(rangeKey: _*)
-            .drop("__graft_z")
-            .write.format("graft.sources.ManifestTable")
-            .option("path", scratch.toString), layout)
-          // this rewrite's (partition cols, z) range clustering is the
-          // point — the writer must not replace it with a value hash
-          .option("clusterWrite", "false")
-          .mode("append").save()
-        val rewritten = currentManifest(scratch.toString)
-          .map(m => dataEntries(m._2).map(stripSeq)).getOrElse(Seq.empty)
-        rewritten.foreach { l =>
-          Files.createLink(d.resolve(parseEntry(l)._1), scratch.resolve(parseEntry(l)._1))
-        }
-        preCommitHook()
-        try {
-          return commitVersion(path,
-            retirements(baseLines,
-              dataEntries(baseLines).map(parseEntry(_)._1)) ++ rewritten,
-            replacePrev = true, schemaDdl = None, expectedBase = Some(baseV))
-        } catch {
-          case e: ConcurrentCommitException =>
-            rewritten.foreach(l =>
-              Files.deleteIfExists(d.resolve(parseEntry(l)._1)))
-            attempts += 1
-            if (attempts >= 5) throw e
-        }
-      } finally {
-        if (Files.exists(scratch)) {
-          val walk = Files.walk(scratch)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(x => Files.deleteIfExists(x))
-          finally walk.close()
-        }
+    rewrite[Int](path, "compactZOrder") { base =>
+      refusePendingDeletes("compactZOrder", path, base.lines)
+      val layout = layoutAt(path, base.version)
+      import org.apache.spark.sql.functions.{col, lit}
+      val df = spark.read.format("graft.sources.ManifestTable")
+        .option("path", path).option("version", base.version.toString).load()
+      val boundExprs = cols.flatMap(c => Seq(
+        org.apache.spark.sql.functions.min(col(c)),
+        org.apache.spark.sql.functions.max(col(c))))
+      val bounds = df.agg(boundExprs.head, boundExprs.tail: _*).head()
+      def asLong(i: Int): Long = bounds.get(i) match {
+        case null => 0L
+        case l: Long => l
+        case n: Int => n.toLong
+        case dte: java.sql.Date =>
+          org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(dte).toLong
+        case dte: java.time.LocalDate => dte.toEpochDay
+        case other => throw new IllegalStateException(s"bound $other")
       }
+      val bits = 12
+      val scaled = cols.zipWithIndex.map { case (c, j) =>
+        val (lo, hi) = (asLong(2 * j), asLong(2 * j + 1))
+        // dates as epoch days (a date cannot cast to long directly)
+        val longCol =
+          if (schema.fields.find(_.name == c).exists(_.dataType == DateType))
+            org.apache.spark.sql.functions.unix_date(col(c)).cast("long")
+          else col(c).cast("long")
+        ((longCol - lit(lo)) * lit((1L << bits) - 1) /
+          lit(math.max(1L, hi - lo))).cast("long")
+      }
+      // on a PARTITIONED table, cluster WITHIN partition values (Delta's
+      // OPTIMIZE ZORDER semantics): the partition columns lead the range
+      // key, so each task holds whole partition groups z-sorted inside —
+      // the layout-splitting writer then emits per-value files whose
+      // @col fields survive AND whose zone maps are z-tight. A bucketed
+      // table ranges on z alone (the writer splits per bucket, so each
+      // file is one bucket × one z-slice — prunable on both grains).
+      val partLead = layout.get("partitionCol").toSeq
+        .flatMap(_.split(',').iterator.map(_.trim).filter(_.nonEmpty))
+        .map(col)
+      val rangeKey = partLead :+ col("__graft_z")
+      val rewritten = staged(path,
+        df.withColumn("__graft_z", ZOrder.interleaveNative(scaled, bits))
+          .repartitionByRange(targetPartitions, rangeKey: _*)
+          .sortWithinPartitions(rangeKey: _*)
+          .drop("__graft_z"),
+        layout,
+        // this rewrite's (partition cols, z) range clustering is the
+        // point — the writer must not replace it with a value hash
+        Map("clusterWrite" -> "false"))(_.lines)
+      Right((retirements(base.lines,
+        dataEntries(base.lines).map(parseEntry(_)._1)) ++ rewritten, identity))
     }
-    -1 // unreachable
   }
 
   /** ZERO-COPY SHALLOW CLONE (Delta `CREATE TABLE … SHALLOW CLONE`): a
@@ -1954,14 +1849,15 @@ object ManifestTable {
     * spelling of the store's additive prefix evolution, which until
     * round 15 was reachable only through a widened APPEND: commit a new
     * version listing the SAME lines under the widened schema. Every
-    * existing file (text or parquet) null-pads the new trailing columns
-    * at read time — the exact contract a widened append already pinned
+    * existing file null-pads the new trailing columns at read time — the
+    * exact contract a widened append already pinned
     * (ManifestEvolutionSpec) — and time travel to pre-alter versions
     * reads the old DDL those manifests carry. Base-validated: a racing
     * commit fails this alter loudly rather than being dropped from the
     * re-listed line set. Rename / retype / reorder / drop stay rejected
-    * at the catalog (rows are token-positional; only trailing ADD is
-    * decodable-safe).
+    * at the catalog: [[ManifestColumnar.open]] relies on each file's
+    * columns being a prefix of the table's order, which only a trailing
+    * ADD keeps true.
     */
   def alterAddColumns(path: String, cols: Seq[StructField]): Int = {
     require(cols.nonEmpty, "alterAddColumns: no columns to add")
@@ -2080,18 +1976,14 @@ object ManifestTable {
     val sd = dir(src)
     val dd = dir(dst)
     Files.createDirectories(dd)
-    lines.foreach { l =>
-      // retired markers are fileless metadata: carried into the clone's
-      // manifest verbatim (the clone inherits the source's replay
-      // history), nothing to link
-      if (!isRetiredEntry(l)) {
-        val name =
-          if (isDeleteEntry(l)) parseDeleteEntry(l)._1 else parseEntry(l)._1
-        val target = dd.resolve(name)
-        // a crashed earlier clone attempt may have linked some files; the
-        // link content is the same immutable inode either way
-        if (!Files.exists(target)) Files.createLink(target, sd.resolve(name))
-      }
+    // retired markers name no file: carried into the clone's manifest
+    // verbatim (the clone inherits the source's replay history), nothing
+    // to link
+    lines.flatMap(fileOf).foreach { name =>
+      val target = dd.resolve(name)
+      // a crashed earlier clone attempt may have linked some files; the
+      // link content is the same immutable inode either way
+      if (!Files.exists(target)) Files.createLink(target, sd.resolve(name))
     }
     // base 0: a clone CREATES a table — if any commit raced in since the
     // emptiness check above, fail loudly rather than truncate it away.
@@ -2114,17 +2006,8 @@ object ManifestTable {
     * driver work and nothing else. `nRows`/`bytes` are -1 when any line
     * predates per-file stats (a legacy store can't answer).
     */
-  def history(path: String): Seq[VersionInfo] = {
-    val d = dir(path)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val listing = Files.list(d)
-    val versions =
-      try listing.iterator().asScala.map(_.getFileName.toString).collect {
-        case s if s.startsWith("manifest-") && s.endsWith(".json") =>
-          s.stripPrefix("manifest-").stripSuffix(".json").toInt
-      }.toSeq.sorted
-      finally listing.close()
-    versions.map { v =>
+  def history(path: String): Seq[VersionInfo] =
+    listVersions(path).sorted.map { v =>
       val lines = manifestAt(path, Some(v)).get._2
       val data = dataEntries(lines).map(parseEntry)
       val rowStats = data.map(_._2.get(RowStatKey))
@@ -2134,7 +2017,6 @@ object ManifestTable {
       VersionInfo(v, data.size.toLong, rows,
         lines.count(isDeleteEntry).toLong, bytes)
     }
-  }
 
   /** Newest committed manifest (version, data file names, schema DDL),
     * group lines EXPANDED — the flat view (see [[GroupMark]]).
@@ -2164,16 +2046,7 @@ object ManifestTable {
 
   private[graft] def manifestAtRaw(
       path: String, version: Option[Int]): Option[(Int, Seq[String], String)] = {
-    val d = dir(path)
-    if (!Files.isDirectory(d)) return None
-    val listing = Files.list(d)
-    val versions =
-      try listing.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("manifest-") && s.endsWith(".json") =>
-          s.stripPrefix("manifest-").stripSuffix(".json").toInt
-        }.toSeq
-      finally listing.close()
+    val versions = listVersions(path)
     if (versions.isEmpty) return None
     val v = version match {
       case Some(want) =>
@@ -2182,7 +2055,7 @@ object ManifestTable {
         want
       case None => versions.max
     }
-    val lines = Files.readAllLines(d.resolve(s"manifest-$v.json")).asScala
+    val lines = Files.readAllLines(dir(path).resolve(s"manifest-$v.json")).asScala
     // line 1: schema DDL (+ optional commit-time suffix, stripped here);
     // rest: one data-file name per line
     Some((v, lines.drop(1).toSeq, ddlOfHeader(lines.head)))

@@ -122,6 +122,44 @@ class ManifestConcurrencySpec extends AnyFunSuite with SparkSessionFixture {
     assertGapFreeVersions(dir, v)
   }
 
+  test("an append racing rewriteManifests survives") {
+    val dir = freshDir()
+    def appendParts(from: Long): Unit =
+      spark.range(from, from + 40)
+        .select(col("id"), (col("id") % 4).as("p"))
+        .write.format(Fmt).option("path", dir)
+        .option("partitionCol", "p").mode("append").save()
+    val prev = ManifestTable.groupThreshold
+    ManifestTable.groupThreshold = 8
+    try {
+      // 4 partitions × 6 appends spill twice: two children per partition
+      (0 until 6).foreach(i => appendParts(i * 100L))
+      val before = ids(dir)
+      val fired = new AtomicInteger
+      val (v, childrenBefore, childrenAfter) = withHook(() =>
+          if (fired.getAndIncrement() == 0) appendParts(1000L)) {
+        ManifestTable.rewriteManifests(dir)
+      }
+      assert(fired.get() >= 2,
+        "the base-version conflict must force a re-derive (hook runs once per attempt)")
+      assert(childrenBefore == 8 && childrenAfter == 4,
+        s"expected 8 children folded to 4, got ($childrenBefore, $childrenAfter)")
+      assert(ids(dir) == before ++ (1000L until 1040L),
+        "rows appended mid-rewrite were dropped from the current snapshot")
+      assertGapFreeVersions(dir, v)
+      // the lost attempt's child lists were unlinked: every child on
+      // disk is named by some manifest
+      val d = ManifestTable.dir(dir)
+      val named = Files.list(d).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("manifest-"))
+        .flatMap(m => Files.readAllLines(d.resolve(m)).asScala).mkString("\n")
+      val children = Files.list(d).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("group-")).toSeq
+      assert(children.forall(named.contains),
+        s"an unreferenced child list was left behind: ${children.filterNot(named.contains)}")
+    } finally ManifestTable.groupThreshold = prev
+  }
+
   test("a rewrite that keeps losing the race gives up loudly after bounded retries") {
     val dir = freshDir()
     (0 until 3).foreach(i => append(dir, i * 10L, 5))

@@ -210,8 +210,13 @@ class ManifestCtasSpec extends AnyFunSuite with SparkSessionFixture {
       d.resolve("foreign_dir").resolve("inner.bin"), "also not graft's")
 
     spark.sql(s"CREATE TABLE graft_cat.`$dir` (k BIGINT)")
+    // a crashed op's scratch store is the table's, so the drop takes it
+    val scratch = d.resolve(".merge_stage_crashed")
+    java.nio.file.Files.createDirectories(scratch)
+    java.nio.file.Files.writeString(scratch.resolve("data-0-0-x.parquet"), "staged")
     spark.sql(s"DROP TABLE graft_cat.`$dir`")
     assert(ManifestTable.currentManifest(dir).isEmpty, "the table is gone")
+    assert(!java.nio.file.Files.exists(scratch), "DROP kept the table's scratch")
     assert(java.nio.file.Files.exists(d.resolve("keepme.txt")),
       "DROP wiped a foreign file")
     assert(java.nio.file.Files.exists(d.resolve("foreign_dir").resolve("inner.bin")),

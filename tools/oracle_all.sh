@@ -12,10 +12,18 @@
 # Bench times.
 # A known non-defect is listed in KNOWN below and printed as a named exception
 # on every run, never dropped. The exit status is non-zero when a query fails
-# in Verify or diverges from DuckDB without a KNOWN entry.
+# in Verify or diverges from DuckDB without a KNOWN entry, and the script
+# refuses to start (status 2) while a perfbench/run.py process is alive.
 set -u -o pipefail
 
 [ $# -ge 1 ] || { echo "usage: $0 <testdata_dir> [out_dir]" >&2; exit 2; }
+# perfbench/run.py's cleanup removes every /dev/shm/graft_ck_* directory made
+# while it runs, so a streaming query's checkpoint in this run would vanish
+if pids=$(pgrep -f "python[0-9.]* [^ ]*perfbench/run\.py"); then
+  echo "$0: perfbench/run.py is running (pid $(echo $pids)); its checkpoint" \
+    "cleanup would delete this run's /dev/shm/graft_ck_* state — run after it ends" >&2
+  exit 2
+fi
 data=$(realpath -m -- "$1")
 out=$(realpath -m -- "${2:-/tmp/graft_oracle_all}")
 scales=(sf0.001 sf0.01 sf0.1)
