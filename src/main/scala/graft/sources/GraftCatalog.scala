@@ -239,10 +239,11 @@ class GraftCatalog extends TableCatalog
     * the write's real failure behind an UnsupportedOperation.
     *
     * Deletes ONLY the names the store owns ([[ManifestTable.owned]]:
-    * manifests, store files, scratch) and removes the directory only
-    * if nothing else remains: CREATE TABLE never verified the target
-    * directory was empty, so a create pointed at a directory that
-    * already held FOREIGN files must not wipe them on drop — the drop
+    * manifests, store files and their `.crc` sidecars, scratch) and
+    * removes the directory only if nothing else remains: CREATE TABLE
+    * never verified the target directory was empty, so a create pointed
+    * at a directory that already held FOREIGN files must not wipe them
+    * on drop — the drop
     * retires the table, not the directory's other tenants.
     */
   override def dropTable(ident: Identifier): Boolean = {

@@ -47,10 +47,7 @@ class ManifestTable extends TableProvider {
     // .option("changeFeed", true): the CHANGE-FEED read surface — table
     // columns plus (_change_type, _commit_version), served by the CDF
     // streaming source (ManifestCdfMicroBatchStream)
-    if (options.getBoolean("changeFeed", false))
-      StructType(base.fields :+
-        StructField(ManifestCdf.ChangeTypeCol, StringType, nullable = false) :+
-        StructField(ManifestCdf.CommitVersionCol, IntegerType, nullable = false))
+    if (options.getBoolean("changeFeed", false)) ManifestTable.withChangeColumns(base)
     else base
   }
   override def getTable(
@@ -82,6 +79,12 @@ object ManifestTable {
 
   def dir(path: String): Path = Paths.get(path)
 
+  /** The change-feed schema: the table's columns plus the change columns. */
+  private[sources] def withChangeColumns(table: StructType): StructType =
+    StructType(table.fields :+
+      StructField(ManifestCdf.ChangeTypeCol, StringType, nullable = false) :+
+      StructField(ManifestCdf.CommitVersionCol, IntegerType, nullable = false))
+
   /** Marker prefix for EQUALITY-DELETE manifest lines (`~<file>\t<col>`):
     * the merge-on-read row-delete shape (Iceberg equality deletes / Delta
     * deletion vectors) — a delete commits as a new manifest VERSION that
@@ -96,13 +99,10 @@ object ManifestTable {
   def isDeleteEntry(line: String): Boolean =
     line.nonEmpty && line.charAt(0) == DeleteMark
 
-  /** Scope marker for a PRIOR-ONLY delete entry (`~<file>\t<col>\tprior`):
-    * unlike the default snapshot-global tombstone, a prior-only delete
-    * applies ONLY to data files on earlier manifest lines — the Iceberg
-    * sequence-number shape, which is what lets [[mergeKeys]] commit
+  /** Scope marker for a PRIOR-ONLY delete entry (`~<file>\t<col>\tprior`),
+    * the Iceberg sequence-number shape that lets [[mergeKeys]] commit
     * [delete, replacement rows] as ONE version whose own inserts survive
-    * its own delete. Plain [[deleteKeys]] tombstones keep the stated
-    * snapshot-global semantic (ManifestDeleteSpec pins it).
+    * its own delete. [[Snapshot.deletesFor]] states the scoping rule.
     */
   val PriorOnlyScope = "prior"
 
@@ -341,13 +341,7 @@ object ManifestTable {
   private def spillGroups(
       path: String, lines: Seq[String],
       threshold: Int): (Seq[String], Seq[Path]) = {
-    val priorOnly = lines.filter(l => isDeleteEntry(l) && isPriorOnlyDelete(l))
-    if (priorOnly.exists(l => deleteSeqOf(l).isEmpty) ||
-        (priorOnly.nonEmpty && lines.exists(l =>
-          !isDeleteEntry(l) && !isRetiredEntry(l) && !isGroupEntry(l) &&
-            parseEntry(l)._1.startsWith("data-") &&
-            seqOf(parseEntry(l)._2).isEmpty)))
-      return (lines, Seq.empty)
+    if (leansOnLineOrder(lines)) return (lines, Seq.empty)
     val (loose, keep) = lines.partition(l =>
       !isRetiredEntry(l) && !isGroupEntry(l) &&
         parseEntry(l)._1.startsWith("data-"))
@@ -361,6 +355,17 @@ object ManifestTable {
       groupLine(written.last.getFileName.toString, members)
     }
     (keep ++ groupLines ++ single.toSeq.flatten, written.toSeq)
+  }
+
+  /** Does a pending prior-only delete still scope by line order? True
+    * when the delete, or a loose `data-*` line it may reach, predates
+    * sequence stamping: regrouping the lines would change what it deletes.
+    */
+  private def leansOnLineOrder(lines: Seq[String]): Boolean = {
+    val priorOnly = lines.filter(l => isDeleteEntry(l) && isPriorOnlyDelete(l))
+    priorOnly.exists(l => deleteSeqOf(l).isEmpty) || priorOnly.nonEmpty &&
+      dataEntries(lines).map(parseEntry).exists { case (n, st) =>
+        n.startsWith("data-") && seqOf(st).isEmpty }
   }
 
   /** The partition-identity grouping key of a data line: its sorted
@@ -410,14 +415,10 @@ object ManifestTable {
       val (foldable, keep) = base.lines.partition(l =>
         !isDeleteEntry(l) && !isRetiredEntry(l) &&
           parseEntry(l)._1.startsWith("data-"))
-      val priorOnly = base.lines.filter(l => isDeleteEntry(l) && isPriorOnlyDelete(l))
-      if (priorOnly.exists(l => deleteSeqOf(l).isEmpty) ||
-          (priorOnly.nonEmpty &&
-            foldable.exists(l => seqOf(parseEntry(l)._2).isEmpty)))
-        throw new IllegalStateException(
-          s"rewriteManifests at $path: a pre-sequence-stamping prior-only " +
-            "delete is pending and its scoping leans on manifest line " +
-            "order, which regrouping destroys — run compactDeletes first")
+      if (leansOnLineOrder(base.lines)) throw new IllegalStateException(
+        s"rewriteManifests at $path: a pre-sequence-stamping prior-only " +
+          "delete is pending and its scoping leans on manifest line " +
+          "order, which regrouping destroys — run compactDeletes first")
       val childrenBefore = base.shallow.count(isGroupEntry)
       val grouped = foldable.groupBy(partIdentityKey)
       val (multi, single) = grouped.values.partition(_.size >= 2)
@@ -675,8 +676,7 @@ object ManifestTable {
   /** Does the prior-only delete at line index `di` (sequence `delSeq`)
     * apply to the data entry at line index `i` with stats `stats`? By
     * SEQUENCE when both sides are stamped (reorder-proof), by line order
-    * for legacy pairs. Snapshot-global deletes never reach here — they
-    * apply unconditionally.
+    * for legacy pairs; [[Snapshot.deletesFor]] is its one caller.
     */
   def priorDeleteApplies(
       delSeq: Option[Long], di: Int,
@@ -894,9 +894,11 @@ object ManifestTable {
     * owned names and [[GraftCatalog.dropTable]] deletes only owned names.
     * Store files are the names manifest lines reach: data files (parquet,
     * and retired text-codec `.rows` debris), batch markers, child lists
-    * and delete keys. Scratch is dot-prefixed: [[staged]]'s store, a
-    * commit's temp manifest, and `.merge_keys_` key-render dirs that
-    * older builds kept beside the stage.
+    * and delete keys. A store file's Hadoop checksum sidecar
+    * (`.<file>.crc`, written beside every data file an append writes in
+    * place) is part of that file: it lives and dies with it. Scratch is
+    * dot-prefixed: [[staged]]'s store, a commit's temp manifest, and
+    * `.merge_keys_` key-render dirs that older builds kept beside the stage.
     */
   private[sources] def owned(name: String): Option[Owned.Value] =
     if (name.matches("manifest-\\d+\\.json")) Some(Owned.Manifest)
@@ -904,11 +906,27 @@ object ManifestTable {
         "group-" -> ".list", "delete-" -> ".keys")
         .exists { case (p, x) => name.startsWith(p) && name.endsWith(x) })
       Some(Owned.StoreFile)
+    else if (sidecarBase(name).exists(owned(_).contains(Owned.StoreFile)))
+      Some(Owned.Sidecar)
     else if (Seq(StagePrefix, ManifestStagePrefix, ".merge_keys_").exists(name.startsWith))
       Some(Owned.Scratch)
     else None
 
-  private[sources] object Owned extends Enumeration { val Manifest, StoreFile, Scratch = Value }
+  private[sources] object Owned extends Enumeration {
+    val Manifest, StoreFile, Sidecar, Scratch = Value
+  }
+
+  /** The file a `.<file>.crc` checksum sidecar belongs to. */
+  private def sidecarBase(name: String): Option[String] =
+    if (name.length > 5 && name.startsWith(".") && name.endsWith(".crc"))
+      Some(name.substring(1, name.length - 4))
+    else None
+
+  /** Delete a store file together with its checksum sidecar. */
+  private[sources] def deleteStoreFile(d: Path, name: String): Unit = {
+    Files.deleteIfExists(d.resolve(name))
+    Files.deleteIfExists(d.resolve(s".$name.crc"))
+  }
 
   private val StagePrefix = ".merge_stage_"
   private val ManifestStagePrefix = ".manifest_stage"
@@ -1015,15 +1033,19 @@ object ManifestTable {
       // live merge's links are seconds old
       val expired: Set[String] = oldManifests.iterator.flatMap(reachable).toSet
       val sweepBefore = System.currentTimeMillis() - 3600000L
+      def aged(n: String): Boolean = {
+        val p = d.resolve(n)
+        !Files.exists(p) || Files.getLastModifiedTime(p).toMillis < sweepBefore
+      }
       val orphans = names.filter { n =>
         owned(n).contains(Owned.StoreFile) && !referenced.contains(n) &&
-          (expired.contains(n) || {
-            val p = d.resolve(n)
-            !Files.exists(p) ||
-              Files.getLastModifiedTime(p).toMillis < sweepBefore
-          })
+          (expired.contains(n) || aged(n))
       }
-      (oldManifests ++ orphans).foreach(n => Files.deleteIfExists(d.resolve(n)))
+      (oldManifests ++ orphans).foreach(deleteStoreFile(d, _))
+      // a sidecar whose file is already gone: the same 1 h gate
+      names.filter(n => owned(n).contains(Owned.Sidecar) &&
+          sidecarBase(n).exists(f => !Files.exists(d.resolve(f))) && aged(n))
+        .foreach(n => Files.deleteIfExists(d.resolve(n)))
       // crashed ops' scratch ([[staged]]'s store, a commit's temp
       // manifest): normally removed by the op's own finally; a hard crash
       // can strand one. Age-gated (1 h) on the HEARTBEAT mtime — a staged
@@ -1251,10 +1273,114 @@ object ManifestTable {
     } finally if (Files.exists(scratch)) Fs.deleteRecursively(scratch)
   }
 
-  /** The snapshot a truncating rewrite derives from: its version, its
-    * shallow lines (group lines by reference) and the expanded view.
+  /** A data or group line, parsed once: name, stats, and the raw line
+    * its bloom and NDV pieces decode from (lazily, at most once).
+    * `index` is the line's place on the SHALLOW list; a group's members
+    * share their group's index, which keeps their order against every
+    * delete entry, since delete entries never live inside a child.
     */
-  private final case class Snapshot(version: Int, shallow: Seq[String], lines: Seq[String])
+  private[sources] final class Entry(val line: String, val index: Int) {
+    val (name, stats) = parseEntry(line)
+    lazy val blooms: Map[String, Array[Byte]] = parseBlooms(line)
+    lazy val ndvs: Map[String, Array[Byte]] = parseNdvs(line)
+  }
+
+  /** A delete line: key file, key column, scope, `#seq` and shallow index. */
+  private[sources] final case class DeleteEntry(
+      file: String, column: String, priorOnly: Boolean, seq: Option[Long], index: Int)
+
+  /** THE READ MODEL: what version `version` of the store at `path`
+    * says, parsed once from its shallow list. Every reader plans from
+    * one: the batch scan and its aggregate pushdown, both micro-batch
+    * streams, the change feed, and the truncating rewrites ([[rewrite]]).
+    * Version 0 is the empty pre-history (no manifest yet).
+    *
+    * DELETE SCOPING is stated here once, in [[deletesFor]]: a plain
+    * entry ([[deleteKeys]]) applies to every data file of the snapshot,
+    * including files appended after it; a prior-only entry
+    * ([[mergeKeys]]) applies to data committed strictly earlier, by
+    * `#seq` ([[SeqStatKey]]) when both lines carry one and by line order
+    * otherwise.
+    */
+  private[sources] final class Snapshot(
+      val path: String, val version: Int, val shallow: Seq[String]) {
+    /** The expanded line set (children inlined), as rewrites re-list it. */
+    lazy val lines: Seq[String] = expandLines(path, shallow)
+
+    private val (deleteLines, entryLines) = shallow.zipWithIndex
+      .filterNot(l => isRetiredEntry(l._1)).partition(l => isDeleteEntry(l._1))
+
+    val deletes: Seq[DeleteEntry] = deleteLines.map { case (l, i) =>
+      val (file, column) = parseDeleteEntry(l)
+      DeleteEntry(file, column, isPriorOnlyDelete(l), deleteSeqOf(l), i)
+    }
+
+    private val entries = entryLines.map { case (l, i) => new Entry(l, i) }
+
+    /** Data files that may hold a row matching every filter, in line
+      * order, 0-row markers dropped. A group whose aggregate stats fail
+      * [[mayMatch]] is never opened: every member's stats lie inside the
+      * group's hull, and each pass is monotone under that containment.
+      */
+    def files(filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[Entry] =
+      entries.flatMap { e =>
+        if (!isGroupEntry(e.line)) Seq(e)
+        else if (!mayMatch(e, filters)) Seq.empty
+        else readChild(path, e.name.substring(1)).map(new Entry(_, e.index))
+      }.filter(e => !e.stats.get(RowStatKey).exists(_._1 == 0L) && mayMatch(e, filters))
+
+    lazy val dataFiles: Seq[Entry] = files(Seq.empty)
+
+    /** The delete entries that apply to data file `f` of this snapshot. */
+    def deletesFor(f: Entry): Seq[DeleteEntry] = deletes.filter(d =>
+      !d.priorOnly || priorDeleteApplies(d.seq, d.index, f.stats, f.index))
+
+    /** The key sets this snapshot's delete entries name (key file →
+      * (column, keys)), read once on first use. Deletes are REQUESTS
+      * (erasure and update-key lists), not corpus, so the sets ship to
+      * every reader task: a broadcast of the delete list, the Iceberg
+      * merge-on-read shape.
+      */
+    lazy val keys: Map[String, (String, Set[Long])] = deletes.map { d =>
+      d.file -> (d.column, Files.readAllLines(dir(path).resolve(d.file),
+        StandardCharsets.UTF_8).asScala.iterator.filter(_.nonEmpty).map(_.toLong).toSet)
+    }.toMap
+
+    /** What this snapshot adds over the earlier `prev`: its new data files
+      * and its new delete entries. A range that REMOVED a data file
+      * (truncating overwrite, compaction) is a rewrite, not a change: the
+      * change feed and the streaming source both refuse it here.
+      */
+    def diff(prev: Snapshot): (Seq[Entry], Seq[DeleteEntry]) = {
+      val now = dataFiles.map(_.name).toSet
+      val before = prev.dataFiles.map(_.name).toSet
+      val removed = (before -- now).toSeq.sorted
+      if (removed.nonEmpty) throw new IllegalStateException(
+        s"graft manifest table at $path: versions (${prev.version}, $version] " +
+          s"removed data files (${removed.take(5).mkString(", ")}) — truncating " +
+          "rewrites/compaction are not expressible as a change feed or an " +
+          "append stream; restart feeds from the compacted state")
+      val prevDeletes = prev.deletes.map(_.file).toSet
+      (dataFiles.filterNot(f => before(f.name)), deletes.filterNot(d => prevDeletes(d.file)))
+    }
+  }
+
+  private[sources] object Snapshot {
+    def at(path: String, version: Option[Int]): Snapshot =
+      (if (version.contains(0)) None else manifestAtRaw(path, version))
+        .fold(new Snapshot(path, 0, Seq.empty))(m => new Snapshot(path, m._1, m._2))
+  }
+
+  /** The key sets of the named delete entries, unioned per key column.
+    * A planned entry with no loaded key set fails the read, naming it:
+    * skipping it would resurrect deleted rows.
+    */
+  private[sources] def keySets(
+      keys: Map[String, (String, Set[Long])], entries: Seq[String],
+      file: String): Seq[(String, Set[Long])] =
+    entries.map(e => keys.getOrElse(e, throw new IllegalStateException(
+      s"manifest delete entry $e planned for $file has no key set")))
+      .groupBy(_._1).map { case (c, es) => (c, es.iterator.flatMap(_._2).toSet) }.toSeq
 
   /** THE BASE-VALIDATED LOOP of every truncating rewrite
     * ([[rewriteManifests]], [[compactSmallFiles]], [[deleteMatching]],
@@ -1274,18 +1400,17 @@ object ManifestTable {
     var lost: ConcurrentCommitException = null
     while (attempts < 5) {
       attempts += 1
-      val (v, shallow, _) = currentManifestShallow(path).getOrElse(
-        throw new IllegalStateException(s"$op: no manifest at $path"))
-      val base = Snapshot(v, shallow, expandLines(path, shallow))
+      val base = Snapshot.at(path, None)
+      if (base.version == 0) throw new IllegalStateException(s"$op: no manifest at $path")
       derive(base) match {
         case Left(result) => return result
         case Right((lines, report)) =>
           preCommitHook()
           try return report(commitVersion(path, lines, replacePrev = true,
-            schemaDdl = None, expectedBase = Some(v)))
+            schemaDdl = None, expectedBase = Some(base.version)))
           catch {
             case e: ConcurrentCommitException =>
-              val baseFiles = (shallow ++ base.lines).flatMap(fileOf).toSet
+              val baseFiles = (base.shallow ++ base.lines).flatMap(fileOf).toSet
               lines.flatMap(fileOf).filterNot(baseFiles)
                 .foreach(f => Files.deleteIfExists(dir(path).resolve(f)))
               lost = e
@@ -1300,9 +1425,9 @@ object ManifestTable {
     * copies at its own `#seq` ([[SeqStatKey]]), so a pending prior-only
     * delete would stop reaching them and its rows would come back.
     */
-  private def refusePendingDeletes(op: String, path: String, lines: Seq[String]): Unit =
-    require(deleteEntriesOf(lines).isEmpty,
-      s"$op at $path: equality-delete entries pending — run compactDeletes " +
+  private def refusePendingDeletes(op: String, base: Snapshot): Unit =
+    require(base.deletes.isEmpty,
+      s"$op at ${base.path}: equality-delete entries pending — run compactDeletes " +
         "first (a rewrite stamps the rows it copies at its own #seq, so a " +
         "pending prior-only delete would no longer reach them)")
 
@@ -1310,10 +1435,9 @@ object ManifestTable {
     * table's schema, keyed by integral `keyCol` — as ONE atomic manifest
     * version: a delete entry for the update keys followed by the update
     * rows' data files, in that order. The delete commits with the
-    * PRIOR-ONLY scope ([[PriorOnlyScope]]: it applies only to data files
-    * on EARLIER manifest lines — the Iceberg sequence-number shape,
-    * [[ManifestScan.planInputPartitions]]), which exempts the commit's
-    * own inserts from its own delete, so a reader sees either the
+    * PRIOR-ONLY scope ([[PriorOnlyScope]]: it applies only to data
+    * committed EARLIER, [[Snapshot.deletesFor]]), which exempts the
+    * commit's own inserts from its own delete, so a reader sees either the
     * wholly-old or the wholly-new state, never both copies of a key and
     * never neither; plain [[deleteKeys]] tombstones keep their stated
     * snapshot-global semantic. Keys present in the table are REPLACED;
@@ -1466,7 +1590,7 @@ object ManifestTable {
       spark: org.apache.spark.sql.SparkSession, path: String,
       minRows: Long, targetPartitions: Int = 1): Int =
     rewrite[Int](path, "compactSmallFiles") { base =>
-      refusePendingDeletes("compactSmallFiles", path, base.lines)
+      refusePendingDeletes("compactSmallFiles", base)
       val parsed = dataEntries(base.lines).map(parseEntry)
       val (small, big) = parsed.partition { case (_, stats) =>
         stats.get(RowStatKey).exists(_._1 < minRows)
@@ -1499,10 +1623,8 @@ object ManifestTable {
       }
     }
 
-  /** The three metadata pruning passes, shared verbatim by the scan's
-    * partition planning ([[ManifestScan]]) and the copy-on-write delete's
-    * candidate selection ([[deleteMatching]]) — one implementation, so
-    * "which files can this predicate touch" has exactly one answer.
+  /** The metadata pruning passes [[mayMatch]] combines, so "which files
+    * can this predicate touch" has exactly one answer.
     *
     * Zone-map test: can ANY value in [lo,hi] satisfy the predicate?
     * Columns absent from a file's stats never skip it (nulls are ignored
@@ -1589,18 +1711,29 @@ object ManifestTable {
     * probe, so null values' absence from the bloom is correct, and a
     * false positive only means one extra file read.
     */
-  private[sources] def mayMatchBloomLine(
-      line: String, f: org.apache.spark.sql.sources.Filter): Boolean = {
+  private def mayMatchBloom(
+      blooms: => Map[String, Array[Byte]], f: org.apache.spark.sql.sources.Filter): Boolean = {
     import org.apache.spark.sql.sources._
     f match {
       case EqualTo(a, v: String) =>
-        parseBlooms(line).get(a).forall(bits => bloomMightContain(bits, v))
+        blooms.get(a).forall(bits => bloomMightContain(bits, v))
       case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        parseBlooms(line).get(a).forall(bits =>
+        blooms.get(a).forall(bits =>
           vs.exists(v => bloomMightContain(bits, v.asInstanceOf[String])))
       case _ => true
     }
   }
+
+  /** THE PRUNING PREDICATE: can data or group line `e` hold a row
+    * matching every filter? Partition field, bucket field, zone map,
+    * then bloom — the one conjunction the scan, the group expansion, the
+    * change feed's delete probes and [[deleteMatching]] all apply.
+    */
+  private[sources] def mayMatch(
+      e: Entry, filters: Seq[org.apache.spark.sql.sources.Filter]): Boolean =
+    filters.forall(f =>
+      mayMatchPartitionField(e.stats, f) && mayMatchBucketField(e.stats, f) &&
+        mayMatchZone(e.stats, f) && mayMatchBloom(e.blooms, f))
 
   /** Best-effort driver-side translation of a Catalyst predicate into the
     * V1 filter shapes the manifest's pruning passes understand —
@@ -1679,7 +1812,7 @@ object ManifestTable {
       spark: org.apache.spark.sql.SparkSession, path: String,
       condition: org.apache.spark.sql.Column): Int =
     rewrite[Int](path, "deleteMatching") { base =>
-      refusePendingDeletes("deleteMatching", path, base.lines)
+      refusePendingDeletes("deleteMatching", base)
       // recover the Catalyst tree through a probe plan's ANALYZED filter
       // (the public route to a Column's expression), so attribute names are
       // resolved against this very table's schema before translation
@@ -1690,28 +1823,24 @@ object ManifestTable {
       }.getOrElse(throw new IllegalStateException(
         s"deleteMatching: probe plan for $path carries no filter"))
       val filters = translateConjuncts(condExpr)
-      val entries = dataEntries(base.lines).map(l => (l, parseEntry(l)))
-      // the scan's three pruning passes, re-applied driver-side: may-match
+      // the scan's pruning predicate, re-applied driver-side: may-match
       // files are candidates, provably-unmatchable files survive by reference
-      val (cands, survivors) = entries.partition { case (l, (_, stats)) =>
-        filters.forall { f =>
-          mayMatchZone(stats, f) && mayMatchPartitionField(stats, f) &&
-            mayMatchBucketField(stats, f) && mayMatchBloomLine(l, f)
-        }
-      }
+      val cands = base.files(filters).map(_.name)
       if (cands.isEmpty) Left(base.version)
       else {
         import org.apache.spark.sql.functions.{coalesce => fnCoalesce, lit, not}
         val rewritten = staged(path,
           spark.read.format("graft.sources.ManifestTable")
             .option("path", path)
-            .option("files", cands.map(_._2._1).mkString(","))
+            .option("files", cands.mkString(","))
             .load()
             // keep rows where the predicate is NOT TRUE (NULL keeps the row)
             .where(not(fnCoalesce(condition, lit(false)))),
           layoutAt(path, base.version))(_.lines)
-        Right((retirements(base.lines, cands.map(_._2._1)) ++
-          survivors.map(_._1) ++ rewritten, identity))
+        val hit = cands.toSet
+        Right((retirements(base.lines, cands) ++
+          dataEntries(base.lines).filterNot(l => hit(parseEntry(l)._1)) ++ rewritten,
+          identity))
       }
     }
 
@@ -1768,7 +1897,7 @@ object ManifestTable {
         s"compactZOrder: '$c' must be integral or DATE; got ${f.dataType}")
     }
     rewrite[Int](path, "compactZOrder") { base =>
-      refusePendingDeletes("compactZOrder", path, base.lines)
+      refusePendingDeletes("compactZOrder", base)
       val layout = layoutAt(path, base.version)
       import org.apache.spark.sql.functions.{col, lit}
       val df = spark.read.format("graft.sources.ManifestTable")
@@ -1822,29 +1951,6 @@ object ManifestTable {
     }
   }
 
-  /** ZERO-COPY SHALLOW CLONE (Delta `CREATE TABLE … SHALLOW CLONE`): a
-    * new table at `dst` whose manifest-1 lists exactly `src`'s current
-    * snapshot — data and delete-key files adopted by HARD LINK (the
-    * same-volume spelling of "reference, don't copy"; an object-store
-    * deployment would record source paths the way this store records
-    * names). O(#files) metadata work, zero data bytes moved:
-    *
-    *   - line ORDER is preserved, so prior-only delete scoping reads
-    *     identically in the clone;
-    *   - the tables then diverge freely — appends/deletes/merges on
-    *     either side never touch the other's manifests;
-    *   - [[vacuum]] on the source unlinks the source's NAMES; the shared
-    *     inodes survive through the clone's links (and vice versa), so
-    *     retention on one table can never corrupt the other — the
-    *     refcounting an object store does with reference counts, done
-    *     here by the filesystem;
-    *   - refused onto a directory that already has a committed manifest
-    *     (a clone creates a table, it never overwrites one).
-    *
-    * The dev/test branch-off a training pipeline wants before a risky
-    * backfill: branch, experiment, throw away — all metadata. Returns
-    * the clone's committed version (always 1).
-    */
   /** `ALTER TABLE ADD COLUMN` ([[GraftCatalog.alterTable]]) — the DDL
     * spelling of the store's additive prefix evolution, which until
     * round 15 was reachable only through a widened APPEND: commit a new
@@ -1968,6 +2074,29 @@ object ManifestTable {
       layoutSpec = if (layout.isEmpty) None else Some(encodeLayout(layout)))
   }
 
+  /** ZERO-COPY SHALLOW CLONE (Delta `CREATE TABLE … SHALLOW CLONE`): a
+    * new table at `dst` whose manifest-1 lists exactly `src`'s current
+    * snapshot — data and delete-key files adopted by HARD LINK (the
+    * same-volume spelling of "reference, don't copy"; an object-store
+    * deployment would record source paths the way this store records
+    * names). O(#files) metadata work, zero data bytes moved:
+    *
+    *   - line ORDER is preserved, so prior-only delete scoping reads
+    *     identically in the clone;
+    *   - the tables then diverge freely — appends/deletes/merges on
+    *     either side never touch the other's manifests;
+    *   - [[vacuum]] on the source unlinks the source's NAMES; the shared
+    *     inodes survive through the clone's links (and vice versa), so
+    *     retention on one table can never corrupt the other — the
+    *     refcounting an object store does with reference counts, done
+    *     here by the filesystem;
+    *   - refused onto a directory that already has a committed manifest
+    *     (a clone creates a table, it never overwrites one).
+    *
+    * The dev/test branch-off a training pipeline wants before a risky
+    * backfill: branch, experiment, throw away — all metadata. Returns
+    * the clone's committed version (always 1).
+    */
   def cloneTable(src: String, dst: String): Int = {
     val (srcV, lines, ddl) = currentManifest(src).getOrElse(
       throw new IllegalStateException(s"cloneTable: no manifest at $src"))
@@ -2076,6 +2205,9 @@ private[graft] class ManifestTbl(
     path: String, schema0: StructType,
     pinnedVersion: Option[Int] = None,
     cdf: Boolean = false,
+    // the version range (a, b] a change-feed BATCH read covers — set only
+    // by [[ManifestCdf.changes]], never by a read option
+    changeRange: Option[(Int, Int)] = None,
     // CTAS-declared layout defaults ([[GraftCatalog.createTable]]'s
     // PARTITIONED BY / TBLPROPERTIES): used when the write's own options
     // don't override them, so `CREATE TABLE … PARTITIONED BY (c) AS
@@ -2153,9 +2285,10 @@ private[graft] class ManifestTbl(
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // change-feed reads: a dedicated streaming-only scan whose rows are
-    // the version-diff changes (see ManifestCdfMicroBatchStream); batch
-    // change reads go through ManifestCdf.changes
+    // change-feed reads: a dedicated scan whose rows are the version-diff
+    // changes, planned by ManifestCdf.partitions — per micro-batch by
+    // ManifestCdfMicroBatchStream, or over `changeRange` for the batch
+    // read ManifestCdf.changes builds
     if (cdf) {
       val maxVersions = options.getInt("maxVersionsPerBatch", Int.MaxValue)
       // two addressing modes for where the feed starts, one must win
@@ -2178,6 +2311,16 @@ private[graft] class ManifestTbl(
               : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
             new ManifestCdfMicroBatchStream(
               path, tableSchema, maxVersions, startingVersion)
+          override def toBatch: Batch = {
+            val (a, b) = changeRange.getOrElse(throw new UnsupportedOperationException(
+              s"$description: batch change reads go through ManifestCdf.changes"))
+            new Batch {
+              override def planInputPartitions(): Array[InputPartition] =
+                ManifestCdf.partitions(path, a, b)
+              override def createReaderFactory(): PartitionReaderFactory =
+                new ManifestCdfReaderFactory(tableSchema)
+            }
+          }
         }
       }
     }
@@ -2202,10 +2345,9 @@ private[graft] class ManifestTbl(
     // micro-batch stream (admission control); default drains all new
     // versions per trigger
     val maxVersions = options.getInt("maxVersionsPerBatch", Int.MaxValue)
-    // CDF internals ([[ManifestCdf]]): .option("files", "a,b") restricts
-    // the scan to exactly those manifest-listed files and reads them RAW
-    // (no equality-delete filtering) — file-grain access for version
-    // diffs without a second read path
+    // .option("files", "a,b") restricts the scan to exactly those
+    // manifest-listed files — the file-grain read of compactSmallFiles and
+    // deleteMatching, which both refuse while deletes are pending
     val onlyFiles = Option(options.get("files"))
       .map(_.split(",").iterator.filter(_.nonEmpty).toSet)
     // storage-partitioned join: .option("reportPartitioning", true)
@@ -2323,6 +2465,9 @@ private[sources] class ManifestScanBuilder(
 
   private var accepted: Array[Filter] = Array.empty
 
+  /** The snapshot the aggregate pushdown and the scan both plan from. */
+  private lazy val snapshot = ManifestTable.Snapshot.at(path, version)
+
   /** COLUMN PRUNING: a 2-column projection over a 50-column table
     * decodes 2 column chunks per row group, not 50 (delete keys are
     * requested beside the projection, never instead of it).
@@ -2377,18 +2522,15 @@ private[sources] class ManifestScanBuilder(
       : Option[(StructType, Seq[Seq[Any]])] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
+    type Stats = Map[String, (Long, Long)]
     if (accepted.nonEmpty || onlyFiles.isDefined) return None
-    val lines = ManifestTable.manifestAt(path, version).map(_._2)
-      .getOrElse(return None)
-    if (lines.exists(ManifestTable.isDeleteEntry)) return None
-    val allEntries = ManifestTable.dataEntries(lines).map(ManifestTable.parseEntry)
-    if (allEntries.exists(_._2.get(ManifestTable.RowStatKey).isEmpty))
-      return None // legacy stat-less line: the manifest cannot answer
-    // mirror the row scan's zero-row skip (plannedEntries): a committed
-    // empty file carrying an @col field must not fabricate a count-0
-    // group a non-pushed scan of the same table would never produce
-    val entries = allEntries
-      .filterNot(_._2.get(ManifestTable.RowStatKey).exists(_._1 == 0L))
+    val snap = snapshot
+    if (snap.version == 0 || snap.deletes.nonEmpty) return None
+    // the scan's data files: a committed empty file carrying an @col field
+    // must not fabricate a count-0 group a non-pushed scan would never
+    // produce, and a legacy stat-less line means the manifest cannot answer
+    val entries: Seq[Stats] = snap.dataFiles.map(_.stats)
+    if (entries.exists(_.get(ManifestTable.RowStatKey).isEmpty)) return None
 
     // any long-ordered zone-mapped column: integrals, dates (epoch-day
     // ints), timestamps (micros) — the recorded lo:hi longs are exact
@@ -2421,43 +2563,35 @@ private[sources] class ManifestScanBuilder(
       case Array(e) =>
         val f = integralField(e).getOrElse(return None)
         val key = ManifestTable.PartStatPrefix + f.name
-        if (entries.forall(_._2.contains(key))) Some(f) else return None
+        if (entries.forall(_.contains(key))) Some(f) else return None
       case _ => return None
     }
 
-    val groups: Seq[(Option[Long], Seq[(String, Map[String, (Long, Long)])])] =
-      groupField match {
-        case None => Seq((None, entries))
-        case Some(f) =>
-          entries.groupBy(e =>
-            e._2(ManifestTable.PartStatPrefix + f.name)._1)
-            .toSeq.sortBy(_._1).map { case (v, es) => (Some(v), es) }
-      }
+    val groups: Seq[(Option[Long], Seq[Stats])] = groupField match {
+      case None => Seq((None, entries))
+      case Some(f) =>
+        entries.groupBy(_(ManifestTable.PartStatPrefix + f.name)._1)
+          .toSeq.sortBy(_._1).map { case (v, es) => (Some(v), es) }
+    }
 
-    def bound(es: Seq[(String, Map[String, (Long, Long)])],
-        col: String, takeMin: Boolean): Any = {
-      val vals = es.flatMap(_._2.get(col))
-        .map(mm => if (takeMin) mm._1 else mm._2)
+    def bound(es: Seq[Stats], col: String, takeMin: Boolean): Any = {
+      val vals = es.flatMap(_.get(col)).map(mm => if (takeMin) mm._1 else mm._2)
       if (vals.isEmpty) null // zero non-null values anywhere
       else if (takeMin) vals.min else vals.max
     }
 
     // one (field, per-group compute) pair per aggregate expression
-    val computed: Array[Option[(StructField,
-        Seq[(String, Map[String, (Long, Long)])] => Any)]] =
+    val computed: Array[Option[(StructField, Seq[Stats] => Any)]] =
       agg.aggregateExpressions().map {
         case _: CountStar =>
           Some((StructField("count_star", LongType, nullable = false),
-            (es: Seq[(String, Map[String, (Long, Long)])]) =>
-              es.map(_._2(ManifestTable.RowStatKey)._1).sum: Any))
+            (es: Seq[Stats]) => es.map(_(ManifestTable.RowStatKey)._1).sum: Any))
         case m: Min => integralField(m.column).map(f =>
           (StructField(s"min_${f.name}", f.dataType, nullable = true),
-            (es: Seq[(String, Map[String, (Long, Long)])]) =>
-              asFieldValue(f, bound(es, f.name, takeMin = true))))
+            (es: Seq[Stats]) => asFieldValue(f, bound(es, f.name, takeMin = true))))
         case m: Max => integralField(m.column).map(f =>
           (StructField(s"max_${f.name}", f.dataType, nullable = true),
-            (es: Seq[(String, Map[String, (Long, Long)])]) =>
-              asFieldValue(f, bound(es, f.name, takeMin = false))))
+            (es: Seq[Stats]) => asFieldValue(f, bound(es, f.name, takeMin = false))))
         case _ => None
       }
     if (computed.exists(_.isEmpty)) return None
@@ -2512,7 +2646,7 @@ private[sources] class ManifestScanBuilder(
   override def build(): Scan = aggResult match {
     case Some((aggSchema, values)) => new ManifestAggScan(path, aggSchema, values)
     case None =>
-      new ManifestScan(path, schema, version, accepted, reportStats,
+      new ManifestScan(path, snapshot, schema, version, accepted, reportStats,
         maxVersionsPerBatch, onlyFiles, reportPartitioning, pushedLimit,
         required)
   }
@@ -2551,7 +2685,8 @@ private[sources] class ManifestAggScan(
 }
 
 private[sources] class ManifestScan(
-    path: String, schema: StructType, version: Option[Int] = None,
+    path: String, snapshot: => ManifestTable.Snapshot,
+    schema: StructType, version: Option[Int] = None,
     pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     reportStats: Boolean = true, maxVersionsPerBatch: Int = Int.MaxValue,
     onlyFiles: Option[Set[String]] = None,
@@ -2616,102 +2751,18 @@ private[sources] class ManifestScan(
       s"ReadSchema=[${readSchema().fieldNames.mkString(",")}]"
   override def toBatch: Batch = this
 
-  /** This snapshot's manifest lines, read once per scan. */
-  /** The SHALLOW list (group lines unexpanded) — what the driver parses
-    * per plan: O(loose + children), not O(total files).
-    */
-  private lazy val shallowLines: Seq[String] =
-    ManifestTable.manifestAtRaw(path, version).map(_._2).getOrElse(Seq.empty)
+  /** Read once, on first use — a streaming read never touches it. */
+  private lazy val snap = snapshot
 
-  /** Children already read by THIS scan — re-planning (runtime filters
-    * tighten after DPP) re-prunes the groups but never re-reads a child.
-    */
-  private val childCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-
-  /** GROUP-PRUNED expansion (the two-level manifest's planning payoff):
-    * a child whose aggregated stats cannot satisfy the effective filters
-    * is never opened — its members are provably unmatchable, because
-    * every member's stats lie inside the group's hull and all four
-    * pruning passes are monotone under interval containment (bloom union
-    * ⊇ member blooms; `@bucket` only survives aggregation when shared).
-    * Surviving children expand IN PLACE, preserving line order relative
-    * to delete entries (prior-only scoping stays exact).
-    */
-  private def expandPruned(
-      effective: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] =
-    shallowLines.flatMap { l =>
-      if (!ManifestTable.isGroupEntry(l)) Seq(l)
-      else {
-        val (gname, stats) = ManifestTable.parseEntry(l)
-        val keep = effective.forall(f =>
-          ManifestTable.mayMatchPartitionField(stats, f) &&
-            ManifestTable.mayMatchBucketField(stats, f) &&
-            ManifestTable.mayMatchZone(stats, f) &&
-            ManifestTable.mayMatchBloomLine(l, f))
-        if (!keep) Seq.empty
-        else childCache.getOrElseUpdate(gname.substring(1),
-          ManifestTable.readChild(path, gname.substring(1)))
-      }
-    }
-
-  private def lines: Seq[String] = expandPruned(pushed ++ runtime)
-
-  /** Equality-delete key sets PER ENTRY (key file name → (column, keys)),
-    * loaded driver-side at plan time: deletes are REQUESTS (erasure /
-    * update-key lists), not corpus-sized data — the same boundedness
-    * argument as the ANN tombstone anti-join — and the sets ship to every
-    * reader task (at cluster scale this is a broadcast of the delete
-    * list, the Iceberg merge-on-read shape).
-    */
-  private lazy val deleteKeysByEntry: Map[String, (String, Set[Long])] =
-    // the shallow list suffices: spillGroups folds only `data-*` lines,
-    // so a delete entry always stays on the top-level list
-    ManifestTable.deleteEntriesOf(shallowLines).map { case (f, colName) =>
-      f -> (colName, Files.readAllLines(
-        ManifestTable.dir(path).resolve(f), StandardCharsets.UTF_8)
-        .asScala.iterator.filter(_.nonEmpty).map(_.toLong).toSet)
-    }.toMap
-
-  /** Delete SCOPING: a plain tombstone ([[ManifestTable.deleteKeys]])
-    * applies to every data file in the snapshot — the stated
-    * delete-then-reinsert semantic, unchanged. A PRIOR-ONLY delete
-    * ([[ManifestTable.mergeKeys]]'s flavor, Iceberg sequence-number
-    * shape expressed by manifest line order) applies only to data files
-    * on EARLIER lines — which is what exempts a merge's own replacement
-    * rows from its own delete and makes a one-version upsert
-    * expressible.
-    */
-  /** Data entries surviving zone-map skipping, with their line index:
-    * ((file name, stats), manifest line index). Shared by partition
-    * planning and statistics reporting so the reported stats always
-    * describe exactly the files that will be read — post-skipping, the
-    * number the optimizer actually needs for a broadcast decision.
+  /** Data files surviving pruning and the file-grain LIMIT, in line
+    * order. Shared by partition planning and statistics reporting, so the
+    * reported stats always describe exactly the files that will be read.
     * A def, not a lazy val: [[filter]] can tighten the filter set AFTER
     * statistics were estimated, and the re-plan must see it.
     */
-  private def plannedEntries: Seq[((String, Map[String, (Long, Long)]), Int)] =
-    plannedEntriesOf(lines)
-
-  private def plannedEntriesOf(
-      ls: Seq[String]): Seq[((String, Map[String, (Long, Long)]), Int)] = {
-    val effective = pushed ++ runtime
-    limited(ls, ls.zipWithIndex
-      .filter { case (l, _) =>
-        !ManifestTable.isDeleteEntry(l) && !ManifestTable.isRetiredEntry(l) }
-      .map { case (l, i) => (ManifestTable.parseEntry(l), i) }
-      .filter { case ((name, _), _) => onlyFiles.forall(_.contains(name)) }
-      // a file RECORDED as 0 rows (streaming batch markers, empty
-      // writes) plans no task; stat-less legacy files always plan
-      .filter { case ((_, stats), _) =>
-        !stats.get(ManifestTable.RowStatKey).exists(_._1 == 0L) }
-      .filter { case ((_, stats), i) =>
-        effective.forall(f =>
-          ManifestTable.mayMatchPartitionField(stats, f) &&
-            ManifestTable.mayMatchBucketField(stats, f) &&
-            ManifestTable.mayMatchZone(stats, f) &&
-            ManifestTable.mayMatchBloomLine(ls(i), f)) })
-  }
+  private def plannedEntries: Seq[ManifestTable.Entry] =
+    limited(snap.files(pushed.toSeq ++ runtime)
+      .filter(f => onlyFiles.forall(_.contains(f.name))))
 
   /** File-grain LIMIT truncation over the filtered entries: plan files
     * until their recorded live row counts reach the pushed limit, skip
@@ -2720,22 +2771,35 @@ private[sources] class ManifestScan(
     * and every surviving line stat-carrying; otherwise the limit is
     * ignored and Spark's retained Limit operator does all the work.
     */
-  private def limited(
-      ls: Seq[String],
-      entries: Seq[((String, Map[String, (Long, Long)]), Int)])
-      : Seq[((String, Map[String, (Long, Long)]), Int)] =
+  private def limited(entries: Seq[ManifestTable.Entry]): Seq[ManifestTable.Entry] =
     pushedLimit match {
       case Some(n)
-          if !ls.exists(ManifestTable.isDeleteEntry) &&
-            entries.forall(_._1._2.contains(ManifestTable.RowStatKey)) =>
+          if snap.deletes.isEmpty &&
+            entries.forall(_.stats.contains(ManifestTable.RowStatKey)) =>
         var cum = 0L
         entries.takeWhile { e =>
           val take = cum < n
-          cum += e._1._2(ManifestTable.RowStatKey)._1
+          cum += e.stats(ManifestTable.RowStatKey)._1
           take
         }
       case _ => entries
     }
+
+  /** The reportable layout shapes: one VALUE per file (identity
+    * partition, `@col`) or one HASH BUCKET per file (`@bucket(col,n)` —
+    * the high-cardinality case, where one file per value is impossible).
+    * The bucket transform resolves against [[GraftBucketFunction]]
+    * through the catalog, so bucket-SPJ reads go through `graft_cat`.
+    */
+  private sealed trait SpjLayout { def fieldKey: String }
+  private case class SpjIdentity(col: String, isLong: Boolean) extends SpjLayout {
+    def fieldKey: String = col
+  }
+  private case class SpjBucket(col: String, n: Int) extends SpjLayout {
+    def fieldKey: String = ManifestTable.bucketFieldKey(col, n)
+  }
+
+  private val BucketKeyRe = """bucket\((.+),(\d+)\)""".r
 
   /** STORAGE-PARTITIONED JOIN (the Iceberg SPJ shape): when the read
     * opts in (`.option("reportPartitioning", true)`) and EVERY planned
@@ -2754,28 +2818,10 @@ private[sources] class ManifestScan(
     * lacks the field — NULL-partition files and unpartitioned writes
     * make the layout non-reportable rather than wrong.
     */
-  /** The reportable layout shapes: one VALUE per file (identity
-    * partition, `@col`) or one HASH BUCKET per file (`@bucket(col,n)` —
-    * the high-cardinality case, where one file per value is impossible).
-    * The bucket transform resolves against [[GraftBucketFunction]]
-    * through the catalog, so bucket-SPJ reads go through `graft_cat`.
-    */
-  private sealed trait SpjLayout { def fieldKey: String }
-  private case class SpjIdentity(col: String, isLong: Boolean) extends SpjLayout {
-    def fieldKey: String = col
-  }
-  private case class SpjBucket(col: String, n: Int) extends SpjLayout {
-    def fieldKey: String = ManifestTable.bucketFieldKey(col, n)
-  }
-
-  private val BucketKeyRe = """bucket\((.+),(\d+)\)""".r
-
-  private def spjKey(
-      entries: Seq[((String, Map[String, (Long, Long)]), Int)])
-      : Option[SpjLayout] = {
+  private def spjKey(entries: Seq[ManifestTable.Entry]): Option[SpjLayout] = {
     if (!reportPartitioning || entries.isEmpty) return None
-    val perFile = entries.map { case ((_, stats), _) =>
-      stats.keysIterator
+    val perFile = entries.map { e =>
+      e.stats.keysIterator
         .filter(_.startsWith(ManifestTable.PartStatPrefix)).toSeq match {
         case Seq(one) => Some(one.substring(1))
         case _ => None
@@ -2802,7 +2848,7 @@ private[sources] class ManifestScan(
     spjKey(entries) match {
       case Some(layout) =>
         val n = entries
-          .flatMap(_._1._2.get(ManifestTable.PartStatPrefix + layout.fieldKey))
+          .flatMap(_.stats.get(ManifestTable.PartStatPrefix + layout.fieldKey))
           .map(_._1).distinct.size
         val expr = layout match {
           case SpjIdentity(c, _) => Expressions.identity(c)
@@ -2814,28 +2860,16 @@ private[sources] class ManifestScan(
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // ONE expansion shared by the delete ordering and the entry list —
-    // the prior-only index mapping must describe the same line seq
-    val ls = lines
-    val deleteIdx = ls.zipWithIndex.collect {
-      case (l, i) if ManifestTable.isDeleteEntry(l) =>
-        (ManifestTable.parseDeleteEntry(l)._1, i,
-          ManifestTable.isPriorOnlyDelete(l), ManifestTable.deleteSeqOf(l))
-    }
-    val entries = plannedEntriesOf(ls)
+    val entries = plannedEntries
     val keyed = spjKey(entries)
     entries.iterator
-      .map { case ((name, stats), i) =>
-        val file = ManifestTable.dir(path).resolve(name).toString
-        val dels = deleteIdx.collect {
-          case (dn, di, priorOnly, dseq)
-              if !priorOnly ||
-                ManifestTable.priorDeleteApplies(dseq, di, stats, i) => dn
-        }
+      .map { f =>
+        val file = ManifestTable.dir(path).resolve(f.name).toString
+        val dels = snap.deletesFor(f).map(_.file)
         keyed match {
           case Some(layout) =>
             val keyValue =
-              stats(ManifestTable.PartStatPrefix + layout.fieldKey)._1
+              f.stats(ManifestTable.PartStatPrefix + layout.fieldKey)._1
             val keyIsLong = layout match {
               case SpjIdentity(_, isLong) => isLong
               case _: SpjBucket => false // bucket numbers are ints
@@ -2863,17 +2897,16 @@ private[sources] class ManifestScan(
       override def sizeInBytes(): util.OptionalLong = util.OptionalLong.empty()
       override def numRows(): util.OptionalLong = util.OptionalLong.empty()
     }
-    val ls = lines
-    val entries = plannedEntriesOf(ls)
+    val entries = plannedEntries
     var bytes = 0L
     var rows = 0L
     var rowsKnown = true
-    entries.foreach { case ((name, stats), _) =>
-      stats.get(ManifestTable.RowStatKey) match {
+    entries.foreach { e =>
+      e.stats.get(ManifestTable.RowStatKey) match {
         case Some((n, b)) => rows += n; bytes += b
         case None =>
           rowsKnown = false
-          val p = ManifestTable.dir(path).resolve(name)
+          val p = ManifestTable.dir(path).resolve(e.name)
           if (Files.exists(p)) bytes += Files.size(p)
       }
     }
@@ -2889,13 +2922,14 @@ private[sources] class ManifestScan(
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
     if (rowsKnown && entries.nonEmpty) {
-      val parsedNdvs = entries.map { case (_, i) => ManifestTable.parseNdvs(ls(i)) }
+      val parsedNdvs = entries.map(_.ndvs)
+      val stats = entries.map(_.stats)
       schema.fields.foreach { f =>
         val c = f.name
         val nullKey = ManifestTable.NullStatPrefix + c
-        val nullsKnown = entries.forall(_._1._2.contains(nullKey))
+        val nullsKnown = stats.forall(_.contains(nullKey))
         val nulls =
-          if (nullsKnown) entries.iterator.map(_._1._2(nullKey)._1).sum else -1L
+          if (nullsKnown) stats.iterator.map(_(nullKey)._1).sum else -1L
         val ndvKnown = parsedNdvs.forall(_.contains(c))
         val ndv = if (!ndvKnown) -1L else {
           val u = new Array[Byte](ManifestTable.NdvRegisters)
@@ -2911,11 +2945,11 @@ private[sources] class ManifestScan(
         }
         // min/max: hull over files that saw the column non-null; files
         // that were ALL-null for it legitimately lack the zone entry
-        val zoneKnown = entries.forall { case ((_, st), _) =>
+        val zoneKnown = stats.forall { st =>
           st.contains(c) || st.get(nullKey).exists(nc =>
             st.get(ManifestTable.RowStatKey).exists(_._1 == nc._1))
         }
-        val present = entries.flatMap(_._1._2.get(c))
+        val present = stats.flatMap(_.get(c))
         val (minObj, maxObj): (Any, Any) =
           if (!zoneKnown || present.isEmpty) (null, null)
           else {
@@ -2961,17 +2995,10 @@ private[sources] class ManifestScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(schema,
-      // a file-restricted scan (CDF version diff) reads the files RAW:
-      // planInputPartitions still computes applicable deletes per file,
-      // so suppress them here via an empty key map
-      if (onlyFiles.isDefined) Map.empty else deleteKeysByEntry,
-      requiredSchema,
-      // pushed + runtime filters ride into the parquet readers for
-      // row-group skipping inside each planned file (file-restricted
-      // CDF reads stay raw — they re-emit whole files by contract)
-      if (onlyFiles.isDefined) Seq.empty
-      else scala.collection.immutable.ArraySeq.unsafeWrapArray(pushed ++ runtime))
+    // pushed + runtime filters ride into the parquet readers for
+    // row-group skipping inside each planned file
+    new ManifestReaderFactory(schema, snap.keys, requiredSchema,
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(pushed ++ runtime))
 }
 
 private[sources] sealed trait ManifestPartition extends InputPartition {
@@ -2997,48 +3024,33 @@ private[sources] case class ManifestKeyedFilePartition(
     InternalRow(if (keyIsLong) keyValue else keyValue.toInt)
 }
 
-/** The manifest table as a STREAMING SOURCE — the read-side complement
-  * of [[ManifestTable.commitBatch]], the Delta-streaming-source shape:
-  *
-  *   - OFFSETS are manifest VERSIONS. Batch (a, b] reads exactly the
-  *     data files version b lists that version a did not — replays
-  *     regenerate the identical batch from the immutable manifests, the
-  *     exactly-once contract, surviving restarts via the checkpoint's
-  *     offset log.
-  *   - Offset 0 is "nothing consumed": the first batch is the INITIAL
-  *     SNAPSHOT (every live file of the start version, current equality
-  *     deletes applied — the same rows a batch read would return).
-  *   - After the snapshot the source is APPEND-ONLY: a version range
-  *     that removes files (truncating overwrite, compaction) or adds
-  *     delete entries is NOT expressible as an append stream, and the
-  *     stream FAILS loudly rather than silently re-emitting or dropping
-  *     rows (Delta without ignoreChanges, same contract). Run
-  *     maintenance on a quiesced table or start a fresh stream after it.
-  *   - ADMISSION CONTROL: `maxVersionsPerBatch` bounds how many commits
-  *     one micro-batch drains (history catch-up arrives as bounded
-  *     batches); Trigger.AvailableNow pins the target version at start
-  *     and terminates there.
-  */
 private[sources] case class ManifestVersionOffset(version: Int)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = version.toString
 }
 
-private[sources] class ManifestMicroBatchStream(
-    path: String, schema: StructType, maxVersionsPerBatch: Int,
-    requiredSchema: Option[StructType] = None)
+/** The version-offset base of both micro-batch streams, the plain
+  * source ([[ManifestMicroBatchStream]]) and the change feed
+  * ([[ManifestCdfMicroBatchStream]]): OFFSETS are manifest VERSIONS, so
+  * a replayed batch (a, b] re-plans identically from the immutable
+  * manifests and the checkpoint's offset log gives exactly-once across
+  * restarts. ADMISSION CONTROL: `maxVersionsPerBatch` bounds how many
+  * commits one micro-batch drains; Trigger.AvailableNow pins its target
+  * version at start and terminates there.
+  */
+private[sources] abstract class ManifestVersionStream(
+    path: String, maxVersionsPerBatch: Int, initial: Int)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
 
   private def current: Int =
-    ManifestTable.currentManifest(path).map(_._1).getOrElse(0)
+    ManifestTable.currentManifestShallow(path).map(_._1).getOrElse(0)
 
-  /** Trigger.AvailableNow target, pinned at stream start. */
   @volatile private var availableNowTarget: Option[Int] = None
 
-  override def initialOffset(): SOffset = ManifestVersionOffset(0)
+  override def initialOffset(): SOffset = ManifestVersionOffset(initial)
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(current)
@@ -3060,91 +3072,72 @@ private[sources] class ManifestMicroBatchStream(
 
   override def reportLatestOffset(): SOffset = ManifestVersionOffset(current)
 
-  /** Lines of version v; version 0 is the empty pre-history. Vacuum
-    * retention applies to STREAMS too: reading a version whose manifest
-    * was expired fails with the versions listed, exactly like a batch
-    * time travel.
-    */
-  private def linesAt(v: Int): Seq[String] =
-    if (v == 0) Seq.empty
-    else ManifestTable.manifestAt(path, Some(v)).map(_._2).getOrElse(Seq.empty)
+  /** The partitions of versions (a, b]. */
+  protected def plan(a: Int, b: Int): Array[InputPartition]
 
-  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] = {
-    val a = start.asInstanceOf[ManifestVersionOffset].version
-    val b = end.asInstanceOf[ManifestVersionOffset].version
-    if (b <= a) return Array.empty
-    val startLines = linesAt(a)
-    val endLines = linesAt(b)
-    val startData = ManifestTable.dataEntries(startLines)
-      .map(l => ManifestTable.parseEntry(l)._1).toSet
-    val endData = ManifestTable.dataEntries(endLines)
-      .map(l => ManifestTable.parseEntry(l)._1).toSet
-    // APPEND-ONLY check past the initial snapshot: files removed or
-    // delete entries changed inside (a, b] cannot be streamed as appends
-    if (a > 0) {
-      val removed = startData -- endData
-      if (removed.nonEmpty) throw new IllegalStateException(
-        s"graft manifest stream at $path: versions ($a, $b] removed data " +
-          s"files ${removed.toSeq.sorted.take(5).mkString(", ")} — the " +
-          "streaming source is append-only after its initial snapshot; " +
-          "run truncating maintenance on a quiesced table or start a " +
-          "fresh stream from the compacted state")
-      val startDel = startLines.filter(ManifestTable.isDeleteEntry).toSet
-      val endDel = endLines.filter(ManifestTable.isDeleteEntry).toSet
-      if (startDel != endDel) throw new IllegalStateException(
-        s"graft manifest stream at $path: versions ($a, $b] changed " +
-          "equality-delete entries — deletes are not expressible as an " +
-          "append stream; start a fresh stream after compactDeletes")
-    }
-    // initial snapshot (a == 0): apply version b's delete entries the
-    // way the batch scan would, so the stream starts from the table's
-    // live rows; incremental batches (a > 0) are pure appends
-    val deleteIdx = endLines.zipWithIndex.collect {
-      case (l, i) if ManifestTable.isDeleteEntry(l) =>
-        (ManifestTable.parseDeleteEntry(l)._1, i,
-          ManifestTable.isPriorOnlyDelete(l), ManifestTable.deleteSeqOf(l))
-    }
-    val planned = endLines.zipWithIndex.iterator
-      .filter { case (l, _) =>
-        !ManifestTable.isDeleteEntry(l) && !ManifestTable.isRetiredEntry(l) }
-      .map { case (l, i) => (ManifestTable.parseEntry(l), i) }
-      .filter { case ((name, stats), _) =>
-        !startData.contains(name) &&
-          !stats.get(ManifestTable.RowStatKey).exists(_._1 == 0L) }
-      .map { case ((name, stats), i) => (name,
-        if (a > 0) Seq.empty[String]
-        else deleteIdx.collect {
-          case (dn, di, priorOnly, dseq)
-              if !priorOnly ||
-                ManifestTable.priorDeleteApplies(dseq, di, stats, i) => dn
-        }) }
-      .toSeq
-    planned.iterator.map { case (name, dels) =>
-      ManifestFilePartition(
-        ManifestTable.dir(path).resolve(name).toString, dels): InputPartition
-    }.toArray
-  }
-
-  /** Delete key sets for the initial snapshot's readers (same
-    * request-sized boundedness as the batch scan).
-    */
-  private lazy val deleteKeysByEntry: Map[String, (String, Set[Long])] =
-    ManifestTable.deleteEntriesOf(
-      ManifestTable.currentManifest(path).map(_._2).getOrElse(Seq.empty))
-      .map { case (f, colName) =>
-        f -> (colName, Files.readAllLines(
-          ManifestTable.dir(path).resolve(f), StandardCharsets.UTF_8)
-          .asScala.iterator.filter(_.nonEmpty).map(_.toLong).toSet)
-      }.toMap
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ManifestReaderFactory(schema, deleteKeysByEntry, requiredSchema)
+  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] =
+    plan(start.asInstanceOf[ManifestVersionOffset].version,
+      end.asInstanceOf[ManifestVersionOffset].version)
 
   override def deserializeOffset(json: String): SOffset =
     ManifestVersionOffset(json.toInt)
 
   override def commit(end: SOffset): Unit = ()
   override def stop(): Unit = ()
+}
+
+/** The manifest table as a STREAMING SOURCE — the read-side complement
+  * of [[ManifestTable.commitBatch]], the Delta-streaming-source shape:
+  *
+  *   - batch (a, b] reads exactly the data files version b lists that
+  *     version a did not;
+  *   - offset 0 is "nothing consumed": the first batch is the INITIAL
+  *     SNAPSHOT, every live file of its end version with THAT version's
+  *     equality deletes applied — the rows a batch read of it returns;
+  *   - after the snapshot the source is APPEND-ONLY: a version range
+  *     that removes files (truncating overwrite, compaction) or adds
+  *     delete entries is NOT expressible as an append stream, and the
+  *     stream FAILS loudly rather than silently re-emitting or dropping
+  *     rows (Delta without ignoreChanges, same contract). Run
+  *     maintenance on a quiesced table or start a fresh stream after it.
+  *
+  * Vacuum retention applies to streams too: planning a version whose
+  * manifest was expired fails with the versions listed, exactly like a
+  * batch time travel.
+  */
+private[sources] class ManifestMicroBatchStream(
+    path: String, schema: StructType, maxVersionsPerBatch: Int,
+    requiredSchema: Option[StructType] = None)
+    extends ManifestVersionStream(path, maxVersionsPerBatch, initial = 0) {
+
+  /** Key sets of the initial snapshot's deletes; later batches apply none.
+    * Spark plans a batch's partitions before it asks for that batch's
+    * reader factory, which therefore sees the keys planned with it.
+    */
+  @volatile private var keys: Map[String, (String, Set[Long])] = Map.empty
+
+  override protected def plan(a: Int, b: Int): Array[InputPartition] = {
+    if (b <= a) return Array.empty
+    val end = ManifestTable.Snapshot.at(path, Some(b))
+    val files =
+      if (a == 0) end.dataFiles
+      else {
+        val (added, deletes) = end.diff(ManifestTable.Snapshot.at(path, Some(a)))
+        if (deletes.nonEmpty) throw new IllegalStateException(
+          s"graft manifest stream at $path: versions ($a, $b] added " +
+            "equality-delete entries — deletes are not expressible as an " +
+            "append stream; start a fresh stream after compactDeletes")
+        added
+      }
+    if (a == 0) keys = end.keys
+    files.map { f =>
+      ManifestFilePartition(ManifestTable.dir(path).resolve(f.name).toString,
+        if (a == 0) end.deletesFor(f).map(_.file) else Seq.empty): InputPartition
+    }.toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new ManifestReaderFactory(schema, keys, requiredSchema)
 }
 
 private[sources] class ManifestReaderFactory(
@@ -3165,20 +3158,17 @@ private[sources] class ManifestReaderFactory(
     projection.fields.nonEmpty
 
   /** The partition's merge-on-read deletes as (key column, type, key
-    * set): only the delete entries SEQUENCED AFTER this data file apply
-    * to it (ManifestScan.planInputPartitions has the ordering
-    * rationale); entries on the same column union into one key set.
+    * set): the entries [[ManifestTable.Snapshot.deletesFor]] planned for
+    * this file, unioned per column.
     */
   private def deletesOf(part: ManifestPartition): Seq[(String, DataType, Set[Long])] =
-    part.applicableDeletes
-      .flatMap(deleteKeysByEntry.get)
-      .groupBy(_._1)
-      .map { case (c, es) =>
+    ManifestTable.keySets(deleteKeysByEntry, part.applicableDeletes, part.file)
+      .map { case (c, keys) =>
         val dt = schema.fields(schema.fieldIndex(c)).dataType
         if (dt != LongType && dt != IntegerType) throw new IllegalStateException(
           s"manifest delete entry on non-integral column $c: $dt")
-        (c, dt, es.iterator.flatMap(_._2).toSet)
-      }.toSeq
+        (c, dt, keys)
+      }
 
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -3304,9 +3294,7 @@ private[sources] class ManifestWrite(
       case f: StagedFile => Seq(f)
       case StagedFiles(fs) => fs
       case _ => Seq.empty
-    }.foreach { case StagedFile(name, _, _) =>
-      Files.deleteIfExists(d.resolve(name))
-    }
+    }.foreach { case StagedFile(name, _, _) => ManifestTable.deleteStoreFile(d, name) }
   }
 }
 
@@ -3416,7 +3404,7 @@ private[sources] class StagedFileWriter(
 
   def abort(): Unit = {
     out.close()
-    Files.deleteIfExists(d.resolve(name))
+    ManifestTable.deleteStoreFile(d, name)
   }
 }
 

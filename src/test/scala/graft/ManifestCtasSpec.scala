@@ -183,6 +183,15 @@ class ManifestCtasSpec extends AnyFunSuite with SparkSessionFixture {
     // zero-row table left behind
     assert(ManifestTable.currentManifest(dir).isEmpty,
       "failed CTAS must not leave an empty store behind")
+    // nor the checksum sidecars of its aborted data files
+    val d = java.nio.file.Paths.get(dir)
+    if (Files.exists(d)) {
+      import scala.jdk.CollectionConverters._
+      val left = Files.list(d)
+      try assert(!left.iterator().asScala.exists(_.getFileName.toString.endsWith(".crc")),
+        "the dropped table's directory must hold no .crc sidecar")
+      finally left.close()
+    }
     // DROP on a data-holding table still refuses
     val dir2 = freshDir()
     spark.range(0, 3).select(col("id")).write.format(Fmt)

@@ -170,6 +170,28 @@ class ManifestSinkSpec extends AnyFunSuite with SparkSessionFixture {
       s"expected the append-only violation, got: ${messages(e)}")
   }
 
+  test("streaming source: the initial snapshot applies the deletes of its own version") {
+    val dir = freshDir()
+    Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)).toDF("k", "v").coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()     // v1
+    ManifestTable.deleteKeys(dir, "k", Seq(1L))                        // v2
+    ManifestTable.compactDeletes(spark, dir)                           // v3
+    val ck = Files.createTempDirectory("graft_msrc_ck3").toString
+    val out = Files.createTempDirectory("graft_msrc_out3").toString
+    // batch (0, 2] is the initial snapshot at v2; batch (2, 3] crosses
+    // the compaction, which removed data files
+    val e = intercept[Exception] { drainStream(dir, ck, out, maxPerBatch = 2) }
+    val atV2 = spark.read.format(Fmt).option("path", dir).option("version", "2")
+      .load().select("k", "v").as[(Long, Long)].collect().toSeq.sorted
+    assert(spark.read.parquet(out).select("k", "v").as[(Long, Long)]
+      .collect().toSeq.sorted == atV2)
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("append")),
+      s"expected the append-only refusal, got: ${messages(e)}")
+  }
+
   test("a crash before the commit leaves nothing visible; vacuum sweeps aged debris") {
     val dir = freshDir()
     ManifestTable.commitBatch(spark, dir, 0L, Seq((1L, 10L)).toDF("k", "v"))

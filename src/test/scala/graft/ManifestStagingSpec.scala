@@ -155,14 +155,17 @@ class ManifestStagingSpec extends AnyFunSuite with SparkSessionFixture {
     val agedKeys = scratchDir(".merge_keys_aged")
     val foreign = Files.createDirectories(d.resolve("foreign_dir"))
     Files.write(foreign.resolve("inner.bin"), Array[Byte](7))
-    Seq(agedStage, agedData, agedKeys, foreign).foreach(age)
+    // checksum sidecars whose data files are gone
+    val freshCrc = Files.write(d.resolve(".data-9-9-gone1.parquet.crc"), Array[Byte](1))
+    val agedCrc = Files.write(d.resolve(".data-9-9-gone2.parquet.crc"), Array[Byte](1))
+    Seq(agedStage, agedData, agedKeys, foreign, agedCrc).foreach(age)
 
     assert(ManifestTable.vacuum(dir) == ((0, 1)),
       "one aged unreferenced data file, no expired manifest")
-    Seq(freshStage, freshData, foreign, foreign.resolve("inner.bin")).foreach { p =>
+    Seq(freshStage, freshData, foreign, foreign.resolve("inner.bin"), freshCrc).foreach { p =>
       assert(Files.exists(p), s"vacuum swept $p")
     }
-    Seq(agedStage, agedData, agedKeys).foreach { p =>
+    Seq(agedStage, agedData, agedKeys, agedCrc).foreach { p =>
       assert(!Files.exists(p), s"vacuum kept aged $p")
     }
     assert(read(dir).count() == 100L)
