@@ -4686,8 +4686,8 @@ object ExtraSql {
     // Incremental rollup (Rollup.rollupIncremental): the merged result
     // must equal the full-history aggregate; the per-(day,type) partial
     // count doubles as a distinct-day check on the merge granularity.
-    // Exactly-once block runtime (pipeline.BlockRuntime): the committed
-    // store's daily totals must equal the full-history recompute — a
+    // Exactly-once block runtime (pipeline.BlockRuntime, a manifest
+    // store): its daily totals must equal the full-history recompute — a
     // block consumed twice doubles its days, a skipped block loses them.
     "pipeline_incremental_run" ->
       """SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
@@ -4985,8 +4985,8 @@ object ExtraSql {
     // Declarative incremental node: the exactly-once block runtime
     // driven from the graph spec must equal the code-level drive — and
     // both must equal the full-history recompute. (The spec also declares
-    // the maintenance policy — compact_after + merge_sql — which must be
-    // result-invisible.)
+    // the maintenance policy — compact_after + merge_sql, a store fold —
+    // which must be result-invisible.)
     "pipeline_graph_incremental" -> base("pipeline_incremental_run"),
     // Statistics-driven reorder must be value-invisible: the CBO variant
     // shares join_multiway's oracle verbatim.

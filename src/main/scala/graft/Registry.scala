@@ -531,8 +531,8 @@ object Registry {
     // LM quality features, composed from independently-oracled stages
     "pipeline_daily_ingest" -> q(Pipelines.pipelineDailyIngest),
     // Batch exactly-once-per-block runtime (pipeline.BlockRuntime): a
-    // growing block feed consumed across two runs, each block processed
-    // exactly once; oracle = full-history recompute.
+    // growing block feed consumed across three runs, each block one named
+    // commit of the manifest store; oracle = full-history recompute.
     "pipeline_incremental_run" ->
       ((s: org.apache.spark.sql.SparkSession, dir: String) =>
         graft.pipeline.BlockRuntime.pipelineIncrementalRun(s, dir)),

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * is the restart path, the same promotion the bucketed band store got
   * in [[Incremental.incrementalDedupBucketed]].
   *
-  * Commit discipline (the [[graft.sources.ManifestTable]] /
-  * [[graft.pipeline.BlockRuntime]] pattern): all three tables are
-  * written into ONE staging directory, ATOMIC_MOVEd to `snap/`, and only
-  * then does a one-line `meta.log` commit (temp file + ATOMIC_MOVE) make
-  * the index visible — readers key on `meta.log` existence, so a crash
+  * Commit discipline (the [[graft.sources.ManifestTable]] pattern): all
+  * three tables are written into ONE staging directory, ATOMIC_MOVEd to
+  * `snap/`, and only then does a one-line `meta.log` commit (temp file +
+  * ATOMIC_MOVE) make the index visible — readers key on `meta.log`
+  * existence, so a crash
   * at any point leaves either no index (orphan swept on next build) or a
   * complete one, never a torn artifact. The index root embeds a digest
   * of (sfDir, dataset stamp): a regenerated dataset gets a DIFFERENT
@@ -63,7 +63,8 @@ object AnnIndex {
     * ever committed — [[compactDeltas]] folds live dirs away but must not
     * forget the names, or a re-run of an appending query after a compact
     * would re-append the same batch and double its ADC scores (the same
-    * consumed-ids discipline as [[graft.pipeline.BlockRuntime.State]]);
+    * consumed-names discipline as the manifest store's retired markers,
+    * [[graft.sources.ManifestTable.commitNamed]]);
     * `tombs` = committed TOMBSTONE dirs (each holds an `ids` parquet of
     * deleted vec_ids) — the read path anti-joins them out, a compact
     * drops the ids physically and clears the list.
@@ -475,7 +476,7 @@ object AnnIndex {
     * ATOMIC_MOVE → one-line meta commit.
     *
     * Stale dirs are NOT deleted at commit — they are swept at the START
-    * of the NEXT compact (the BlockRuntime sweep pattern). That gives
+    * of the NEXT compact. That gives
     * in-flight readers (a lazy frame resolved against the pre-compact
     * version list, possibly in another process) a full compact cycle of
     * grace instead of a FileNotFound race, and it is also the crash

@@ -25,6 +25,10 @@ import graft.util.Memo
   * optimized join tree differs from the stats-less plan and from the
   * written order); the DuckDB oracle pins that it is value-invisible.
   *
+  * The engine's own stores need no ANALYZE: a manifest table's scan
+  * (the block runtime's state included) reports row counts and column
+  * statistics from its manifest, current at every version.
+  *
   * The session clone ([[graft.util.Sessions]] memo) isolates the CBO
   * confs; the catalog (SharedState) is deliberately shared so the
   * analyzed tables and their stats are visible to it.
@@ -83,42 +87,6 @@ object Cbo {
       .map(_.name)
       .filter(n => n.startsWith(s"graft_cbo_${sfTag}_") && n != keep)
       .foreach(n => spark.sql(s"DROP DATABASE IF EXISTS $n CASCADE"))
-
-  /** Catalog database holding the engine's OWN store statistics — the
-    * freshness loop [[statsDb]] opened for the immutable driver tables,
-    * closed for the stores the engine grows itself.
-    */
-  private[graft] val StoreStatsDb = "graft_store_stats"
-
-  /** Re-point + re-ANALYZE the catalog table tracking a BlockRuntime
-    * store, called by `compact(analyze = true)` right after the fold
-    * commits: without it a CBO session over a growing store plans from
-    * day-one row counts forever (round-11 verdict #4). The table is
-    * dropped and recreated because each compact changes the LOCATION
-    * (the new folded version dir); the ANALYZE scans one folded version —
-    * the same once-per-snapshot cost class as the compact itself, and
-    * strictly smaller than the fold that just ran.
-    */
-  private[graft] def analyzeStoreVersion(
-      spark: SparkSession, stateDir: String, versionPath: String): String = {
-    require(!versionPath.contains("'"),
-      s"analyzeStoreVersion: store path must not contain a single quote: $versionPath")
-    val tbl = "s_" + hash8(stateDir)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $StoreStatsDb")
-    spark.sql(s"DROP TABLE IF EXISTS $StoreStatsDb.$tbl")
-    spark.sql(s"CREATE TABLE $StoreStatsDb.$tbl USING parquet LOCATION '$versionPath'")
-    spark.sql(s"ANALYZE TABLE $StoreStatsDb.$tbl COMPUTE STATISTICS FOR ALL COLUMNS")
-    s"$StoreStatsDb.$tbl"
-  }
-
-  /** Catalog row-count statistic of an analyzed store table — what
-    * CboSpec pins changing across an append+compact cycle.
-    */
-  private[graft] def storeRowStat(spark: SparkSession, stateDir: String): Option[BigInt] = {
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(
-      s"s_${hash8(stateDir)}", Some(StoreStatsDb))
-    spark.sessionState.catalog.getTableMetadata(ident).stats.flatMap(_.rowCount)
-  }
 
   /** Session clone with cost-based optimization on ([[graft.util.Sessions]]
     * memo). Clones share the SparkContext and catalog (where the stats

@@ -35,9 +35,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * node consumes an immutable block feed through the exactly-once
   * [[BlockRuntime]] (basis's Environment semantic, declaratively): its
   * `partial_sql` maps newly-arrived blocks (view `block`) to partial
-  * rows, and producing the node unions every committed store version —
-  * so re-producing the graph after new blocks arrive processes ONLY
-  * those blocks. Malformed specs
+  * rows committed to the node's manifest store, and producing the node
+  * reads that store — so re-producing the graph after new blocks arrive
+  * processes ONLY those blocks. Malformed specs
   * (unknown kind, duplicate or missing nodes, a node name that is not a
   * plain identifier, unknown dep, source table, or registry query,
   * unresolved `${param}`, cyclic deps) are rejected at LOAD time with a
@@ -51,7 +51,7 @@ object GraphLoader {
       feed: String = "", state: String = "",
       schema: String = "", cast: String = "",
       format: String = "", path: String = "",
-      compactAfter: Int = 0, mergeSql: String = "", analyze: Boolean = false,
+      compactAfter: Int = 0, mergeSql: String = "",
       observe: Seq[(String, String)] = Seq.empty, snapshot: Int = 0,
       changeFeed: Boolean = false, startingVersion: Int = 1,
       snapshotTsMs: Long = 0L)
@@ -154,7 +154,7 @@ object GraphLoader {
         "materialize" -> Set("name", "kind", "deps", "format", "path", "schema", "cast"),
         "incremental" -> Set(
           "name", "kind", "feed", "state", "partial_sql", "compact_after",
-          "merge_sql", "analyze"))
+          "merge_sql"))
       allowedFields.get(kind).foreach { ok =>
         val unknown = n.properties().asScala.map(_.getKey).toSet -- ok
         if (unknown.nonEmpty)
@@ -264,15 +264,15 @@ object GraphLoader {
         case "incremental" =>
           // exactly-once-per-block consumption of an immutable block
           // feed (pipeline.BlockRuntime): `feed` is the arrival dir,
-          // `state` the node's meta-log + store dir, `partial_sql` maps
-          // the slice of newly-arrived blocks — visible as the view
-          // `block` — to its partial-aggregate rows. Producing the node
-          // yields the union of every committed store version.
+          // `state` the node's manifest store, `partial_sql` maps the
+          // slice of newly-arrived blocks — visible as the view `block` —
+          // to its partial-aggregate rows. Producing the node yields the
+          // store's current snapshot.
           val feed = subst(str(n, "feed", s"node '$nm'"), s"node '$nm'")
           val state = subst(str(n, "state", s"node '$nm'"), s"node '$nm'")
           val psql = subst(str(n, "partial_sql", s"node '$nm'"), s"node '$nm'")
           // declarative maintenance policy: `compact_after: N` folds the
-          // store once LIVE versions exceed N after a produce, so the
+          // store once its live files exceed N after a produce, so the
           // operator schedules compaction in the spec, not in code;
           // `merge_sql` (view `store`) optionally re-aggregates the
           // folded partials back to the partial grain.
@@ -285,19 +285,8 @@ object GraphLoader {
             .map(v => subst(v.asText, s"node '$nm'")).getOrElse("")
           if (mergeSql.nonEmpty && compactAfter == 0)
             fail(s"node '$nm': 'merge_sql' requires 'compact_after'")
-          // `analyze: true` makes STATISTICS maintenance declarative the
-          // way `compact_after` made compaction: each policy-driven fold
-          // also re-ANALYZEs the store's catalog table, so a CBO session
-          // over the growing store replans from fresh row counts
-          val analyze = Option(n.get("analyze")).map { v =>
-            if (!v.isBoolean)
-              fail(s"node '$nm': 'analyze' must be a boolean")
-            v.asBoolean
-          }.getOrElse(false)
-          if (analyze && compactAfter == 0)
-            fail(s"node '$nm': 'analyze' requires 'compact_after' (statistics refresh rides the policy compact)")
           NodeSpec(nm, "incremental", "", Seq.empty, psql, feed, state,
-            compactAfter = compactAfter, mergeSql = mergeSql, analyze = analyze)
+            compactAfter = compactAfter, mergeSql = mergeSql)
         case other => fail(s"node '$nm': unknown kind '$other'")
       }
     }
@@ -487,12 +476,14 @@ object GraphLoader {
           // resolving the node RUNS the block runtime: unconsumed blocks
           // in `feed` are processed exactly once (their partial rows are
           // committed to the node's store), and the node's frame is the
-          // union of all committed versions — basis `env.produce` over a
-          // growing feed. The arriving slice is visible to `partial_sql`
-          // under the same private-view discipline as sql-node deps.
-          // `compact_after: N` makes store maintenance declarative: the
-          // produce itself folds the live versions once they exceed N
-          // (merge_sql re-aggregates the folded partials, view `store`).
+          // store's snapshot — basis `env.produce` over a growing feed.
+          // The arriving slice is visible to `partial_sql` under the same
+          // private-view discipline as sql-node deps. `compact_after: N`
+          // makes store maintenance declarative: the produce itself folds
+          // the live files once they exceed N (merge_sql re-aggregates the
+          // folded partials, view `store`). The store's scan reports row
+          // counts and column statistics from its manifest, so a CBO
+          // session plans from current counts with no ANALYZE.
           val mergeOf: DataFrame => DataFrame =
             if (n.mergeSql.isEmpty) identity
             else { store =>
@@ -505,8 +496,7 @@ object GraphLoader {
               slice.createOrReplaceTempView("block")
               try ps.sql(n.sql)
               finally ps.catalog.dropTempView("block")
-            }, compactAfter = n.compactAfter, mergeOf = mergeOf,
-              analyze = n.analyze).result)
+            }, compactAfter = n.compactAfter, mergeOf = mergeOf).result)
         case other => fail(s"unreachable kind '$other'")
       }
     }

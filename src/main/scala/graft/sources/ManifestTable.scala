@@ -122,11 +122,11 @@ object ManifestTable {
   }
 
   /** Marker prefix for a RETIRED idempotence marker (`=<name>`): pure
-    * metadata recording that a data entry named `name` (a streaming
-    * micro-batch's `batch-*.rows` file) was once committed and has since
-    * been rewritten away by a truncating maintenance pass. The line
+    * metadata recording that a data entry named `name` (a named commit's
+    * `batch-*.rows` marker) was once committed and has since been
+    * rewritten away by a truncating maintenance pass. The line
     * references NO file; scans, CDF, history, clone-links and vacuum all
-    * ignore it — its only consumer is [[commitBatch]]'s replay dedupe,
+    * ignore it — its only consumer is [[commitNamed]]'s replay dedupe,
     * which must keep refusing a batch AFTER compaction absorbed its
     * marker file (otherwise maintenance silently breaks the sink's
     * exactly-once guarantee — the reason Delta's `txn` appId/version
@@ -140,7 +140,10 @@ object ManifestTable {
 
   def retiredName(line: String): String = line.substring(1)
 
-  private val BatchMarkerRe = "batch-\\d+\\.rows".r
+  /** A named commit's marker file, `batch-<name>.rows`: the one name
+    * pattern of [[commitNamed]], [[owned]] and [[retirements]].
+    */
+  private val BatchMarkerRe = "batch-([A-Za-z0-9_.-]+)\\.rows".r
 
   /** Retained retirement lines are CAPPED at the newest 10k: a replay
     * can only reach as far back as the sink's checkpoint (in practice
@@ -156,21 +159,37 @@ object ManifestTable {
   /** The `=name` lines a truncating rewrite must re-commit: every prior
     * retired line, plus a retirement for each absorbed batch marker
     * (non-marker data files need no retirement — nothing dedupes on
-    * their names), the NEWEST [[MaxRetirements]] kept.
+    * their names), the NEWEST [[MaxRetirements]] by retirement order
+    * kept (each rewrite lists prior retirements first, new ones last).
     */
   private[graft] def retirements(
-      prevLines: Seq[String], absorbedNames: Seq[String]): Seq[String] = {
-    val all = prevLines.filter(isRetiredEntry) ++
+      prevLines: Seq[String], absorbedNames: Seq[String]): Seq[String] =
+    (prevLines.filter(isRetiredEntry) ++
       absorbedNames.filter(n => BatchMarkerRe.matches(n))
-        .map(n => s"$RetiredMark$n")
-    if (all.size <= MaxRetirements) all
-    else all.sortBy { l =>
-      // batch-%06d names order lexically = numerically within a width;
-      // extract the digits so wider ids (beyond 999999) still order
-      val ds = retiredName(l).filter(_.isDigit)
-      if (ds.isEmpty) 0L else ds.toLong
-    }.takeRight(MaxRetirements)
-  }
+        .map(n => s"$RetiredMark$n")).takeRight(MaxRetirements)
+
+  /** The commit names whose markers `lines` list, live or retired. */
+  private def namesIn(lines: Seq[String]): Set[String] = lines.iterator.flatMap { l =>
+    if (isRetiredEntry(l)) Some(retiredName(l))
+    else if (isDeleteEntry(l) || isGroupEntry(l)) None
+    else Some(l.takeWhile(_ != '\t'))
+  }.collect { case BatchMarkerRe(n) => n }.toSet
+
+  /** THE NAMED-COMMIT RULE, on a version's lines: true when every one of
+    * `names` is already listed (that commit landed), false when none is.
+    * Some but not all is another commit's claim on part of the set, and
+    * throws [[ConcurrentCommitException]] naming the overlap.
+    */
+  private def alreadyCommitted(path: String, lines: Seq[String], names: Set[String]): Boolean =
+    names.nonEmpty && {
+      val present = names.intersect(namesIn(lines))
+      if (present.nonEmpty && present != names)
+        throw new ConcurrentCommitException(
+          s"graft manifest table at $path: named commit of " +
+            s"${names.toSeq.sorted.mkString(", ")} overlaps an earlier commit of " +
+            present.toSeq.sorted.mkString(", "))
+      present.nonEmpty
+    }
 
   def dataEntries(lines: Seq[String]): Seq[String] =
     lines.filterNot(l => isDeleteEntry(l) || isRetiredEntry(l) || isGroupEntry(l))
@@ -900,10 +919,10 @@ object ManifestTable {
     * dot-prefixed: [[staged]]'s store, a commit's temp manifest, and
     * `.merge_keys_` key-render dirs that older builds kept beside the stage.
     */
-  private[sources] def owned(name: String): Option[Owned.Value] =
+  private[graft] def owned(name: String): Option[Owned.Value] =
     if (name.matches("manifest-\\d+\\.json")) Some(Owned.Manifest)
-    else if (Seq("data-" -> ".parquet", "data-" -> ".rows", "batch-" -> ".rows",
-        "group-" -> ".list", "delete-" -> ".keys")
+    else if (BatchMarkerRe.matches(name) || Seq("data-" -> ".parquet",
+        "data-" -> ".rows", "group-" -> ".list", "delete-" -> ".keys")
         .exists { case (p, x) => name.startsWith(p) && name.endsWith(x) })
       Some(Owned.StoreFile)
     else if (sidecarBase(name).exists(owned(_).contains(Owned.StoreFile)))
@@ -912,7 +931,7 @@ object ManifestTable {
       Some(Owned.Scratch)
     else None
 
-  private[sources] object Owned extends Enumeration {
+  private[graft] object Owned extends Enumeration {
     val Manifest, StoreFile, Sidecar, Scratch = Value
   }
 
@@ -1066,17 +1085,17 @@ object ManifestTable {
     * committers must both survive; the loser re-reads the winner's
     * manifest (now including the winner's lines) and retries at the next
     * version. `schemaDdl` None inherits the current manifest's DDL (and
-    * requires one to exist). `dedupeEntry` (for [[commitBatch]]) makes
-    * the commit IDEMPOTENT on a marker file name: when the freshly-read
-    * previous snapshot already lists it, the commit returns that version
-    * without publishing — checked INSIDE the retry loop, so even two
+    * requires one to exist). `names` (for [[commitNamed]]) makes the
+    * commit IDEMPOTENT on commit names ([[alreadyCommitted]] against the
+    * freshly-read previous snapshot: all listed returns that version
+    * without publishing) — checked INSIDE the retry loop, so even two
     * concurrent replays of one micro-batch commit exactly once. Returns
     * the committed (or already-committed) version.
     */
   private[sources] def commitVersion(
       path: String, addLines: Seq[String],
       replacePrev: Boolean, schemaDdl: Option[String],
-      dedupeEntry: Option[String] = None,
+      names: Set[String] = Set.empty,
       expectedBase: Option[Int] = None,
       layoutSpec: Option[String] = None,
       spillThreshold: Option[Int] = None): Int = {
@@ -1107,13 +1126,7 @@ object ManifestTable {
             s"$eb but current is $prevV — a concurrent commit landed; " +
             "re-derive the rewrite from the new current snapshot")
       }
-      dedupeEntry.foreach { marker =>
-        val present = prevLines.exists { l =>
-          if (isRetiredEntry(l)) retiredName(l) == marker
-          else !isDeleteEntry(l) && parseEntry(l)._1 == marker
-        }
-        if (present) return prevV
-      }
+      if (alreadyCommitted(path, prevLines, names)) return prevV
       // SCHEMA EVOLUTION (additive, Iceberg's add-column shape): when an
       // append carries a schema and the table already has one, the
       // committed DDL becomes the WIDER of the two — provided one is a
@@ -1234,7 +1247,7 @@ object ManifestTable {
   }
 
   /** THE STAGING PATH of every op that adds rows other than a plain append
-    * ([[mergeKeys]], [[commitBatch]] and the four truncating rewrites):
+    * ([[mergeKeys]], [[commitNamed]] and the four truncating rewrites):
     * `df` is written by a distributed DSv2 write into ONE dot-prefixed
     * scratch store under the table's `layout` (plus `options`), its data
     * files are hard-linked into the table (same filesystem), and `body`
@@ -1279,14 +1292,14 @@ object ManifestTable {
     * share their group's index, which keeps their order against every
     * delete entry, since delete entries never live inside a child.
     */
-  private[sources] final class Entry(val line: String, val index: Int) {
+  private[graft] final class Entry(val line: String, val index: Int) {
     val (name, stats) = parseEntry(line)
     lazy val blooms: Map[String, Array[Byte]] = parseBlooms(line)
     lazy val ndvs: Map[String, Array[Byte]] = parseNdvs(line)
   }
 
   /** A delete line: key file, key column, scope, `#seq` and shallow index. */
-  private[sources] final case class DeleteEntry(
+  private[graft] final case class DeleteEntry(
       file: String, column: String, priorOnly: Boolean, seq: Option[Long], index: Int)
 
   /** THE READ MODEL: what version `version` of the store at `path`
@@ -1302,7 +1315,7 @@ object ManifestTable {
     * `#seq` ([[SeqStatKey]]) when both lines carry one and by line order
     * otherwise.
     */
-  private[sources] final class Snapshot(
+  private[graft] final class Snapshot(
       val path: String, val version: Int, val shallow: Seq[String]) {
     /** The expanded line set (children inlined), as rewrites re-list it. */
     lazy val lines: Seq[String] = expandLines(path, shallow)
@@ -1330,6 +1343,9 @@ object ManifestTable {
       }.filter(e => !e.stats.get(RowStatKey).exists(_._1 == 0L) && mayMatch(e, filters))
 
     lazy val dataFiles: Seq[Entry] = files(Seq.empty)
+
+    /** The commit names ([[commitNamed]]) this snapshot holds, live or retired. */
+    lazy val names: Set[String] = namesIn(shallow)
 
     /** The delete entries that apply to data file `f` of this snapshot. */
     def deletesFor(f: Entry): Seq[DeleteEntry] = deletes.filter(d =>
@@ -1365,7 +1381,7 @@ object ManifestTable {
     }
   }
 
-  private[sources] object Snapshot {
+  private[graft] object Snapshot {
     def at(path: String, version: Option[Int]): Snapshot =
       (if (version.contains(0)) None else manifestAtRaw(path, version))
         .fold(new Snapshot(path, 0, Seq.empty))(m => new Snapshot(path, m._1, m._2))
@@ -1507,49 +1523,55 @@ object ManifestTable {
 
   /** STREAMING INGEST: commit one micro-batch as one manifest version,
     * IDEMPOTENT on `batchId` — the composition of Spark's foreachBatch
-    * replay contract with the store's commit protocol. A zero-byte
-    * MARKER data file named deterministically from the batch id
-    * (`batch-%06d.rows`, a zero-byte file listed with `#rows=0`, which
-    * every planner drops, so it is never opened) rides in
-    * the same atomic commit as the batch's data lines, so "was this
-    * batch committed?" is a manifest lookup, not a side-channel:
-    *
-    *   - replay of a committed batch returns the existing version and
-    *     publishes NOTHING (checked inside the commit retry loop — even
-    *     two concurrent replays commit once);
-    *   - a crash BEFORE the commit leaves only unreferenced scratch
-    *     (swept by [[vacuum]]'s age-gated orphan pass), and the replay
-    *     re-stages from the checkpoint — exactly-once end to end;
-    *   - every batch is a full snapshot version: a reader mid-stream
-    *     sees some prefix of batches, never a torn batch, and time
-    *     travel re-materializes any prefix.
-    *
-    * The batch rows are staged by a distributed DSv2 write into a
-    * dot-prefixed scratch dir and hard-linked in ([[staged]]). Returns
-    * the committed (or already-committed) version.
-    *
-    * `partitionCol`: route the batch's rows through the partitioned
-    * writer, so every micro-batch version's files carry first-class
-    * `@col` fields — streaming ingest INTO the date-partitioned layout,
-    * where a day's query over months of accreted batch versions still
-    * lists a day (the write's declared clustered distribution keeps it
-    * one file per value per batch).
+    * replay contract with the store's commit protocol: the named commit
+    * ([[commitNamed]]) of name `%06d` of the batch id, so its marker is
+    * `batch-%06d.rows`. Returns the committed (or already-committed)
+    * version.
     */
   def commitBatch(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batchId: Long, batch: org.apache.spark.sql.DataFrame,
       partitionCol: Option[String] = None): Int = {
     require(batchId >= 0, s"commitBatch: negative batchId $batchId")
-    val d = dir(path)
-    val marker = f"batch-$batchId%06d.rows"
-    // fast path: already committed (replay) — nothing re-staged; a
-    // RETIRED marker (compaction absorbed the batch file) counts, or
-    // maintenance would break the sink's exactly-once guarantee
-    currentManifest(path) match {
-      case Some((v, lines, _))
-          if dataEntries(lines).exists(l => parseEntry(l)._1 == marker) ||
-            lines.exists(l => isRetiredEntry(l) && retiredName(l) == marker) =>
-        return v
+    commitNamed(spark, path, Seq(f"$batchId%06d"), batch, partitionCol)
+  }
+
+  /** NAMED COMMIT: commit `batch` as one manifest version together with
+    * one zero-byte MARKER data file per name (`batch-<name>.rows`, listed
+    * with `#rows=0`, which every planner drops), so "was this name
+    * committed?" is a manifest lookup. The one idempotence rule of the
+    * stream sink ([[commitBatch]]) and the block runtime's consumed
+    * blocks ([[graft.pipeline.BlockRuntime]]), stated by [[alreadyCommitted]]:
+    *
+    *   - a replay of a committed name set returns the existing version
+    *     and publishes NOTHING (checked again inside the commit retry
+    *     loop, so concurrent replays commit once), also after a
+    *     truncating rewrite retired the markers;
+    *   - a set that overlaps an earlier commit only in part throws;
+    *   - a crash BEFORE the commit leaves only unreferenced scratch
+    *     (swept by [[vacuum]]'s age-gated orphan pass), and the replay
+    *     re-stages — exactly-once end to end.
+    *
+    * The rows are staged into a dot-prefixed scratch store and
+    * hard-linked in ([[staged]]). Names must match `[A-Za-z0-9_.-]+`.
+    * Returns the committed (or already-committed) version.
+    * `partitionCol` routes the rows through the partitioned writer
+    * (streaming ingest INTO the date-partitioned layout: one file per
+    * value per commit, each carrying its `@col` field).
+    */
+  def commitNamed(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      names: Seq[String], batch: org.apache.spark.sql.DataFrame,
+      partitionCol: Option[String] = None): Int = {
+    require(names.nonEmpty, s"commitNamed at $path: no commit name")
+    val markers = names.map { n =>
+      require(BatchMarkerRe.matches(s"batch-$n.rows"),
+        s"commit name '$n' is outside the marker name pattern [A-Za-z0-9_.-]+")
+      s"batch-$n.rows"
+    }
+    // fast path: a replay re-stages nothing
+    currentManifestShallow(path) match {
+      case Some((v, lines, _)) if alreadyCommitted(path, lines, names.toSet) => return v
       case _ => ()
     }
     // persisted layout first, explicit partitionCol override second — a
@@ -1562,10 +1584,9 @@ object ManifestTable {
       persisted -- Seq("partitionCol", "bucketCol", "bucketCount") +
         ("partitionCol" -> c))
     staged(path, batch, layout) { s =>
-      Files.write(d.resolve(marker), Array.emptyByteArray)
-      commitVersion(path, s"$marker\t$RowStatKey=0:0" +: s.lines,
-        replacePrev = false, schemaDdl = Some(s.ddl),
-        dedupeEntry = Some(marker))
+      markers.foreach(m => Files.write(dir(path).resolve(m), Array.emptyByteArray))
+      commitVersion(path, markers.map(m => s"$m\t$RowStatKey=0:0") ++ s.lines,
+        replacePrev = false, schemaDdl = Some(s.ddl), names = names.toSet)
     }
   }
 
@@ -1856,15 +1877,29 @@ object ManifestTable {
     * this rewrite's snapshot read and its commit fails the commit, and
     * the fold re-derives from the new current (bounded retries) — the
     * appended rows are IN the post-compaction current, never dropped to
-    * a time-travel-only version. Returns the committed version.
+    * a time-travel-only version. Returns the committed version. The
+    * [[fold]] that keeps every row.
     */
   def compactDeletes(spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    rewrite[Int](path, "compactDeletes") { base =>
+    fold(spark, path, identity)
+
+  /** THE FOLD: a truncating rewrite of the version-pinned snapshot
+    * (deletes applied by the scan) through `transform`, staged and
+    * committed through [[rewrite]] — every listed file, markers
+    * included, is replaced by what `transform` returns, and the absorbed
+    * markers retire ([[retirements]]). [[compactDeletes]] is the fold
+    * with `identity`; the block runtime's compaction folds with its
+    * merge. Returns the committed version.
+    */
+  def fold(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Int =
+    rewrite[Int](path, "fold") { base =>
       // an all-deleted snapshot stages zero data lines and commits a
       // version listing none ([[staged]]'s empty rule)
       val rewritten = staged(path,
-        spark.read.format("graft.sources.ManifestTable")
-          .option("path", path).option("version", base.version.toString).load(),
+        transform(spark.read.format("graft.sources.ManifestTable")
+          .option("path", path).option("version", base.version.toString).load()),
         layoutAt(path, base.version))(_.lines)
       Right((retirements(base.lines,
         dataEntries(base.lines).map(parseEntry(_)._1)) ++ rewritten, identity))

@@ -462,7 +462,7 @@ object StreamDrive {
     * drive: every commit is attempted TWICE, and on a warm store (Bench
     * re-runs the query over a fresh checkpoint) the entire replay is
     * no-ops. The read side folds the versions per key — the
-    * merge-on-read shape, compacted elsewhere ([[graft.pipeline.BlockRuntime]]).
+    * merge-on-read shape (the manifest store's named commits state it once).
     *
     * Scale: per-batch work is O(batch) — an aggregate of the arriving
     * slice plus one rename — never O(history); the store grows one

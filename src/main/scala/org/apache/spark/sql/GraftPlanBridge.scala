@@ -4,10 +4,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 
-/** Minimal bridge into Spark's private[sql] surface, needed to expose a
-  * custom LogicalPlan as a user-facing DataFrame and to inject a planner
-  * strategy at runtime (graft.GraftExtensions.install). Kept to exactly these
-  * two calls — everything else in the engine goes through public API.
+/** Minimal bridge into Spark's private surface, needed to expose a
+  * custom LogicalPlan as a user-facing DataFrame, to inject a planner
+  * strategy at runtime (graft.GraftExtensions.install) and to wait for
+  * listener delivery (graft.tools.QTime's job counts). Kept to exactly these
+  * three calls — everything else in the engine goes through public API.
   */
 object GraftPlanBridge {
 
@@ -26,4 +27,8 @@ object GraftPlanBridge {
       exp.extraStrategies = exp.extraStrategies :+ strategy
     }
   }
+
+  /** Block until every posted listener event has been delivered. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

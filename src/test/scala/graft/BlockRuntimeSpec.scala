@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.BlockRuntime
+import graft.sources.ManifestTable
 
 /** Exactly-once-per-block properties the oracle can't see directly: the
   * processed-id sets across runs, the pure-read path, and crash-orphan
@@ -14,6 +15,10 @@ import graft.pipeline.BlockRuntime
 class BlockRuntimeSpec extends AnyFunSuite with SparkSessionFixture {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** The state dir's store: current version and consumed block names. */
+  private def store(state: java.nio.file.Path): ManifestTable.Snapshot =
+    ManifestTable.Snapshot.at(state.toString, None)
 
   private def partials(df: org.apache.spark.sql.DataFrame) =
     df.groupBy(to_date(col("ts")).as("day"))
@@ -50,12 +55,12 @@ class BlockRuntimeSpec extends AnyFunSuite with SparkSessionFixture {
     // no new arrivals: a pure read, nothing reprocessed, state unchanged
     val r1b = BlockRuntime.run(spark, arrive.toString, state.toString, partials)
     assert(r1b.processed.isEmpty)
-    assert(BlockRuntime.readState(state).version == 1L)
+    assert(store(state).version == 1)
 
     Files.createLink(arrive.resolve("b2.parquet"), feed.resolve("b2.parquet"))
     val r2 = BlockRuntime.run(spark, arrive.toString, state.toString, partials)
     assert(r2.processed == Seq("b2.parquet"), "run 2 must process ONLY the new block")
-    assert(BlockRuntime.readState(state).consumed ==
+    assert(store(state).names ==
       Set("b0.parquet", "b1.parquet", "b2.parquet"))
 
     val got = r2.result.groupBy("day")
@@ -86,12 +91,12 @@ class BlockRuntimeSpec extends AnyFunSuite with SparkSessionFixture {
     BlockRuntime.run(spark, arrive.toString, state.toString, partials)
 
     val sc = BlockRuntime.compact(spark, state.toString, mergeP)
-    assert(sc.version == 3L && sc.base == 3L)
-    assert(sc.consumed == Set("b0.parquet", "b1.parquet"),
-      "compaction must not touch the consumption log")
-    val live = state.resolve("parts").toFile.listFiles().map(_.getName).toSet
-    assert(live == Set("v3"), s"stale versions must be gone, saw $live")
-    // idempotent: a single live version has nothing to fold
+    assert(sc == 3 && store(state).dataFiles.size == 1)
+    assert(store(state).names == Set("b0.parquet", "b1.parquet"),
+      "compaction must not forget the consumed blocks")
+    val live = ManifestTable.history(state.toString).map(_.version)
+    assert(live == Seq(3), s"stale versions must be gone, saw $live")
+    // idempotent: a single live file has nothing to fold
     assert(BlockRuntime.compact(spark, state.toString, mergeP) == sc)
 
     // post-compact run: new block appends v4, read = compacted v3 + v4
@@ -119,22 +124,39 @@ class BlockRuntimeSpec extends AnyFunSuite with SparkSessionFixture {
     Files.createLink(arrive.resolve("b0.parquet"), feed.resolve("b0.parquet"))
     BlockRuntime.run(spark, arrive.toString, state.toString, partials)
 
-    // simulate a crash between the store-version move and the meta
-    // commit: v2 exists on disk but meta still says version 1
+    // simulate a crash before the commit: a staged data file linked into
+    // the store but never listed, and the run's scratch store left behind
     Files.createLink(arrive.resolve("b1.parquet"), feed.resolve("b1.parquet"))
-    val orphan = state.resolve("parts").resolve("v2")
-    Files.createDirectories(orphan)
-    Files.write(orphan.resolve("garbage.bin"), Array[Byte](1, 2, 3))
+    Files.write(state.resolve("data-9-9-deadbeef.parquet"), Array[Byte](1, 2, 3))
+    val scratch = Files.createDirectories(state.resolve(".merge_stage_crashed"))
+    Files.write(scratch.resolve("data-9-9-deadbeef.parquet"), Array[Byte](1, 2, 3))
 
     val r = BlockRuntime.run(spark, arrive.toString, state.toString, partials)
     assert(r.processed == Seq("b1.parquet"))
-    assert(BlockRuntime.readState(state).version == 2L)
-    // the rebuilt v2 must be readable parquet (garbage replaced) and the
-    // totals exact
+    assert(store(state).version == 2)
+    assert(store(state).names == Set("b0.parquet", "b1.parquet"))
+    assert(!store(state).dataFiles.exists(_.name == "data-9-9-deadbeef.parquet"),
+      "the orphan must stay unlisted")
+    // a re-run consumes b1 no second time
+    assert(BlockRuntime.run(spark, arrive.toString, state.toString, partials)
+      .processed.isEmpty)
+    // the orphan is invisible (its garbage bytes are never opened) and
+    // the totals exact
     val n = r.result.agg(sum("n_ev")).head().getLong(0)
     val want = Tables(spark, sf).events
       .filter(col("ts").isNotNull && col("value").isNotNull)
       .filter(col("event_id") % 3 <= 1).count()
     assert(n == want)
+  }
+
+  test("a state dir holding a pre-store consumed-block log is refused, naming it") {
+    val feed = mkFeed()
+    val state = Files.createTempDirectory("brspec_prestore")
+    Files.write(state.resolve("meta.log"), "1|b0.parquet|1".getBytes("UTF-8"))
+    Files.createDirectories(state.resolve("parts").resolve("v1"))
+    val e = intercept[IllegalStateException](
+      BlockRuntime.run(spark, feed.toString, state.toString, partials))
+    assert(e.getMessage.contains("meta.log"), e.getMessage)
+    assert(store(state).version == 0, "no block may be consumed a second time")
   }
 }

@@ -216,4 +216,58 @@ class ManifestSinkSpec extends AnyFunSuite with SparkSessionFixture {
     // the committed batch is untouched
     assert(spark.read.format(Fmt).option("path", dir).load().count() == 1L)
   }
+
+  private def ks(dir: String): Seq[Long] =
+    spark.read.format(Fmt).option("path", dir).load()
+      .select("k").as[Long].collect().sorted.toSeq
+
+  test("named commit: a replay after compactDeletes retired its marker is a no-op") {
+    val dir = freshDir()
+    ManifestTable.commitNamed(spark, dir, Seq("b0.parquet"), Seq((1L, 10L)).toDF("k", "v"))
+    ManifestTable.commitNamed(spark, dir, Seq("b1.parquet"), Seq((2L, 20L)).toDF("k", "v"))
+    val v = ManifestTable.compactDeletes(spark, dir)
+    val lines = ManifestTable.currentManifest(dir).get._2
+    assert(lines.contains("=batch-b0.parquet.rows"), "the fold retires the marker")
+    assert(ManifestTable.commitNamed(spark, dir, Seq("b0.parquet"),
+      Seq((9L, 9L)).toDF("k", "v")) == v)
+    assert(version(dir) == v && ks(dir) == Seq(1L, 2L))
+  }
+
+  test("named commit: a replay after compactSmallFiles is a no-op") {
+    val dir = freshDir()
+    ManifestTable.commitNamed(spark, dir, Seq("a"), Seq((1L, 10L)).toDF("k", "v"))
+    ManifestTable.commitNamed(spark, dir, Seq("b"), Seq((2L, 20L)).toDF("k", "v"))
+    val v = ManifestTable.compactSmallFiles(spark, dir, minRows = 100L)
+    assert(v == 3)
+    assert(ManifestTable.commitNamed(spark, dir, Seq("b"),
+      Seq((9L, 9L)).toDF("k", "v")) == v)
+    assert(version(dir) == v && ks(dir) == Seq(1L, 2L))
+  }
+
+  test("named commit: a name set that overlaps an earlier commit in part throws, naming it") {
+    val dir = freshDir()
+    ManifestTable.commitNamed(spark, dir, Seq("x1"), Seq((1L, 10L)).toDF("k", "v"))
+    val e = intercept[ManifestTable.ConcurrentCommitException](
+      ManifestTable.commitNamed(spark, dir, Seq("x1", "x2"), Seq((2L, 20L)).toDF("k", "v")))
+    assert(e.getMessage.contains("x1"), e.getMessage)
+    assert(version(dir) == 1 && ks(dir) == Seq(1L))
+  }
+
+  test("named commit: a name outside the marker pattern is refused") {
+    val dir = freshDir()
+    val e = intercept[IllegalArgumentException](
+      ManifestTable.commitNamed(spark, dir, Seq("../x"), Seq((1L, 10L)).toDF("k", "v")))
+    assert(e.getMessage.contains("'../x'"), e.getMessage)
+    assert(ManifestTable.currentManifest(dir).isEmpty)
+  }
+
+  test("a Long commitBatch is the named commit %06d: marker batch-000007.rows") {
+    val dir = freshDir()
+    ManifestTable.commitBatch(spark, dir, 7L, Seq((1L, 10L)).toDF("k", "v"))
+    assert(Files.exists(java.nio.file.Paths.get(dir, "batch-000007.rows")))
+    assert(ManifestTable.currentManifest(dir).get._2
+      .exists(_.startsWith("batch-000007.rows\t")))
+    assert(ManifestTable.commitNamed(spark, dir, Seq("000007"),
+      Seq((9L, 9L)).toDF("k", "v")) == 1, "the same name as the Long id")
+  }
 }
